@@ -38,7 +38,9 @@ class Recorder:
     """Records one span per call. ``attribute_ungrouped`` adds the jobs
     that ran with no job group during a call (the package's own driver
     thread pools do not inherit the caller's group) to that call's count;
-    only valid when one client thread issues calls."""
+    only valid when one client thread issues calls, and it waits for the
+    listener bus around every call. Otherwise jobs are counted per group
+    by ``count_jobs`` after the calls."""
 
     def __init__(self, spark, workload: str, attribute_ungrouped: bool = False):
         self.sc = spark.sparkContext
@@ -75,14 +77,24 @@ class Recorder:
             return fn()
         finally:
             wall = time.perf_counter() - t0
-            self._settle()
-            jobs = len(self.tracker.getJobIdsForGroup(group))
+            jobs = -1  # counted by count_jobs, outside the timed loop
             if self.attribute_ungrouped:
+                self._settle()
+                jobs = len(self.tracker.getJobIdsForGroup(group))
                 jobs += len(self._ungrouped() - before)
             self.sc.setJobGroup(f"{self.workload}:bench:idle", "perfbench")
             span = Span(layer, op, group, request, start, wall, jobs)
             with self._lock:
                 self.spans.append(span)
+
+    def count_jobs(self) -> None:
+        """Fill in the job count of every span not counted yet. Waiting for
+        the listener bus once, after the calls, keeps that wait out of a
+        multi-client loop's wall time."""
+        self._settle()
+        for s in self.spans:
+            if s.jobs < 0:
+                s.jobs = len(self.tracker.getJobIdsForGroup(s.group))
 
     def of(self, layer: str, op: str | None = None, since: int = 0) -> list[Span]:
         return [

@@ -11,7 +11,7 @@ directory, and returns its metrics and output-check tally.
   iteration lands one energy CSV and drains it through
   ``start_energy_file_ingest`` (the blob-trigger analog), folds one
   document batch into the dedup state (then ``compact_state``), appends
-  one vector batch to the IVFPQ index and runs one probe.
+  one vector batch to the IVFPQ index, then probes the index three times.
 """
 
 from __future__ import annotations
@@ -110,6 +110,7 @@ class Workload:
 
     def stop_session(self) -> None:
         if self.spark is not None:
+            self.rec.count_jobs()
             self.spark.stop()
             self.spark = None
 
@@ -144,6 +145,7 @@ class Workload:
             self.restarted()
         mark = len(self.rec.spans)
         self.measure()
+        self.rec.count_jobs()
         phase = self.summary(mark)
         self.final_checks()
         layer = self.layer_metrics(mark, phase)
@@ -161,10 +163,8 @@ class Workload:
 class ApiDashboard(Workload):
     name = "api_dashboard"
     OVERHEAD_METRIC = "api_p50_ms"
-    SF = 0.02
-    CYCLE = 32
     CLIENTS = 2
-    TABLES = ("orders", "lineitem", "events")
+    TABLES = gen.API_TABLES
 
     def prepare(self) -> None:
         import duckdb
@@ -172,7 +172,7 @@ class ApiDashboard(Workload):
         from azure_serverless_etl_pipeline_spark.plans import all_oracles_full
 
         self.tables = f"{self.work}/tables"
-        gen.write_tables(self.tables, self.seed, self.SF, self.TABLES)
+        gen.write_tables(self.tables, self.seed, gen.API_SF, self.TABLES)
         # expected outputs from the DuckDB oracles, before Spark starts
         con = duckdb.connect()
         con.execute("SET threads TO 2")
@@ -186,10 +186,12 @@ class ApiDashboard(Workload):
             src = self.expected.get(q, self.expected.get("g08_rolling_features"))
             keys = sorted(src[col].dropna().unique().tolist())
             self.filters[q] = {col: gen.pick_filter_value(self.seed, q, keys)}
-        self.cycle = gen.request_mix(self.seed, self.CYCLE)
+        self.cycle = gen.request_mix(self.seed, gen.API_CYCLE)
 
+        # the first set-up launches the JVM; the median of five is a warm
+        # one, taken from four
         totals = []
-        for _ in range(3):
+        for _ in range(5):
             self.stop_session()
             totals.append(self.timed_setup(self.build_state))
         self.setup_s = float(np.median(totals))
@@ -376,40 +378,33 @@ class CorpusIndex(Workload):
     name = "corpus_index"
     OVERHEAD_METRIC = "probe_p50_ms"
     attribute_ungrouped = True
-    SF = 0.1
-    ENERGY_ROWS = 2000
-    ENERGY_HOMES = 40
-    DEFECT_SHARE = 0.02
-    DOC_BATCH = 60
-    DUPS = 6
-    VEC_BATCH = 32
-    QUERIES_PER_PROBE = 4
     TOP_K = 10
+    WRITE_OPS = (("ingest", "drain"), ("dedup", "fold"), ("dedup", "compact"), ("ann", "append"))
 
     def prepare(self) -> None:
-        d = self.work
-        self.tables = f"{d}/tables"
-        counts = gen.write_tables(self.tables, self.seed, self.SF, ("documents", "embeddings"))
+        self.tables = f"{self.work}/tables"
+        counts = gen.write_tables(self.tables, self.seed, gen.CORPUS_SF, gen.CORPUS_TABLES)
         self.n_base_docs = counts["documents"]
         _ids, self.base_texts = gen.base_documents(self.seed, self.n_base_docs)
         vec_ids, self.base_vecs, _labels = gen.base_vectors(self.seed, counts["embeddings"])
         self.index_ids = list(vec_ids)
         self.index_vecs = [self.base_vecs]
         self.dirs = {
-            k: f"{d}/{k}"
+            k: f"{self.work}/{k}"
             for k in ("landing", "valid", "quarantine", "checkpoint", "dedup", "ann")
         }
-        os.makedirs(self.dirs["landing"], exist_ok=True)
+        os.makedirs(self.dirs["landing"])
         self.landed: list[str] = []
         self.rows_landed = 0
         self.defects_landed = 0
         self.batch_docs: list[tuple[int, str]] = []
         self.injected: list[tuple[int, int]] = []
-        self.next_doc_id = 1_000_000
-        self.next_vec_id = 1_000_000
         self.batch = 0
         self.n_probes = 0
         self.recalls: list[float] = []
+        # one set-up: it takes about 40 s, most of it the JVM's first
+        # Python workers and code generation; a second one would add about
+        # 17 s to every run
         self.setup_s = self.timed_setup(self.build_state)
 
     def build_state(self) -> None:
@@ -428,12 +423,13 @@ class CorpusIndex(Workload):
         self.rec.timed("setup", "dedup_base", lambda: fold_batch(spark, docs, 0, self.dirs["dedup"]))
         # the stream's first drain creates its checkpoint; a small file
         # keeps that one-off cost out of the timed drains
-        self.land_file(200)
+        self.land_file()
         self.rec.timed("setup", "ingest_first_drain", self.drain)
 
-    def land_file(self, rows: int) -> float:
+    def land_file(self) -> tuple[float, int]:
+        """Land the next energy file; returns (landing time, its rows)."""
         n = len(self.landed)
-        data, bad = gen.energy_csv(self.seed, n, rows, self.ENERGY_HOMES, self.DEFECT_SHARE)
+        data, rows, bad = gen.energy_file(self.seed, n)
         path = os.path.join(self.dirs["landing"], f"energy-{n:05d}.csv")
         tmp = os.path.join(self.work, f".landing-{n}.tmp")
         with open(tmp, "wb") as fh:
@@ -442,7 +438,7 @@ class CorpusIndex(Workload):
         self.landed.append(os.path.basename(path))
         self.rows_landed += rows
         self.defects_landed += bad
-        return time.perf_counter()
+        return time.perf_counter(), rows
 
     def drain(self):
         from azure_serverless_etl_pipeline_spark.streaming.file_ingest import (
@@ -460,6 +456,7 @@ class CorpusIndex(Workload):
         t0 = time.perf_counter()
         self.phase_iters: list[float] = []
         self.lags, self.progress, self.recalls = [], [], []
+        self.records = 0
         while not self.phase_iters or time.perf_counter() - t0 < self.seconds:
             start = time.perf_counter()
             self.iteration()
@@ -474,6 +471,9 @@ class CorpusIndex(Workload):
             return None
 
     def iteration(self) -> None:
+        """One energy file drained, one document batch folded and the
+        state compacted, one vector batch appended: the write path. Then
+        PROBES_PER_ITERATION probes of the updated index: the read path."""
         from azure_serverless_etl_pipeline_spark.operators.ann_index import append_to_ivfpq_index
         from azure_serverless_etl_pipeline_spark.streaming.dedup_stream import (
             DOC_SCHEMA,
@@ -485,16 +485,13 @@ class CorpusIndex(Workload):
         self.batch += 1
         b = self.batch
 
-        landed_at = self.land_file(self.ENERGY_ROWS)
+        landed_at, rows = self.land_file()
         q = self.op("ingest", "drain", self.drain)
         if q is not None:
             self.lags.append(time.perf_counter() - landed_at)
             self.progress.append([p for p in q.recentProgress if p.get("numInputRows")])
 
-        ids, texts, pairs = gen.doc_batch(
-            self.seed, b, self.next_doc_id, self.DOC_BATCH, self.DUPS, self.base_texts
-        )
-        self.next_doc_id += len(ids)
+        ids, texts, pairs, vid, vecs = gen.corpus_batch(self.seed, b, self.base_texts, self.base_vecs)
         docs = spark.createDataFrame(list(zip(ids, texts)), DOC_SCHEMA)
         self.op("dedup", "fold", lambda: fold_batch(spark, docs, b, self.dirs["dedup"]))
         self.batch_docs += list(zip(ids, texts))
@@ -503,16 +500,14 @@ class CorpusIndex(Workload):
         # sparser cadence would make runs differ in whether it ran at all
         self.op("dedup", "compact", lambda: compact_state(spark, self.dirs["dedup"]))
 
-        vid, vecs = gen.vector_batch(
-            self.seed, 50, b, self.next_vec_id, self.VEC_BATCH, self.base_vecs
-        )
-        self.next_vec_id += len(vid)
         new = _vector_frame(spark, vid, vecs)
         self.op("ann", "append", lambda: append_to_ivfpq_index(new, self.dirs["ann"], batch_id=b))
         self.index_ids += list(vid)
         self.index_vecs.append(vecs)
+        self.records += rows + len(ids) + len(vid)
 
-        self.probe()
+        for _ in range(gen.PROBES_PER_ITERATION):
+            self.probe()
 
     def probe(self) -> float | None:
         """One ``search_ivfpq`` call for a fresh batch of query vectors,
@@ -521,10 +516,7 @@ class CorpusIndex(Workload):
 
         spark = self.spark
         self.n_probes += 1
-        n = self.n_probes
-        qid, qvec = gen.vector_batch(
-            self.seed, 60, n, 2_000_000_000 + 100 * n, self.QUERIES_PER_PROBE, self.base_vecs
-        )
+        qid, qvec = gen.probe_queries(self.seed, self.n_probes, self.base_vecs)
         qdf = _vector_frame(spark, qid, qvec)
         rows = self.op(
             "ann",
@@ -563,12 +555,15 @@ class CorpusIndex(Workload):
             self.recalls.append(len(approx & exact) / self.TOP_K)
 
     def summary(self, since: int) -> dict[str, float]:
-        iters = self.phase_iters
-        calls = [s for s in self.rec.spans[since:] if s.layer != "setup"]
+        """p50_ms is the read path: the median probe. throughput_per_s is
+        the write path: energy rows, documents and vectors committed per
+        second of drain, fold, compact and append time."""
+        spans = self.rec.spans[since:]
+        write_s = sum(s.wall_s for s in spans if (s.layer, s.op) in self.WRITE_OPS)
         return {
             "setup_s": self.setup_s,
-            "p50_ms": 1000.0 * quantile(iters, 0.5),
-            "throughput_per_s": len(calls) / sum(iters),
+            "p50_ms": 1000.0 * quantile([s.wall_s for s in spans if s.op == "probe"], 0.5),
+            "throughput_per_s": self.records / max(write_s, 1e-9),
         }
 
     def layer_metrics(self, since: int, phase: dict) -> dict[str, float]:
@@ -680,11 +675,17 @@ def _vector_frame(spark, ids: np.ndarray, vecs: np.ndarray):
 
 def _committed_files(source_log: str) -> list[str]:
     """Base names of every file the stream's file-source log committed,
-    once per commit (a file committed twice appears twice)."""
+    once per commit (a file committed twice appears twice). Every
+    ``compactInterval`` batches the log writes ``<n>.compact``, which
+    holds every entry up to batch n; it is read with the batch files
+    after it, and the batch files it covers are skipped."""
+    names = os.listdir(source_log)
+    compacted = [int(n.split(".")[0]) for n in names if n.endswith(".compact")]
+    last = max(compacted, default=-1)
+    logs = [f"{last}.compact"] if compacted else []
+    logs += sorted((n for n in names if n.isdigit() and int(n) > last), key=int)
     out = []
-    for name in os.listdir(source_log):
-        if not name.isdigit():
-            continue
+    for name in logs:
         with open(os.path.join(source_log, name)) as fh:
             for line in fh.read().splitlines()[1:]:
                 out.append(os.path.basename(json.loads(line)["path"]))
