@@ -18,13 +18,16 @@ vectors each, vs the full corpus for brute force.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions import dot
-from .similarity import _cos_pair, _prepped
+from .similarity import _cos_pair, _prepped, exact_cos_matrix
 
 _SEED = 42
 
@@ -153,9 +156,7 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
     indexed = spark.read.parquet(f"{path}/cells").withColumn(
         "cell", F.col("cell").cast("int")
     )
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    centroids = np.vstack([np.asarray(r.centroid) for r in rows])
-    return indexed, centroids
+    return indexed, _load_centroid_matrix(spark, path)
 
 
 def assign_cells(
@@ -321,8 +322,12 @@ def _assign_cells_gemm(
 
 def _load_centroid_matrix(spark, path: str) -> np.ndarray:
     """The coarse codebook as a matrix, row position == cell id (the
-    load_ivf_index contract — shared by every append/probe path)."""
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    load_ivf_index contract — shared by every append/probe path). The
+    table holds one row per cell, so sorting the collected rows on the
+    driver gives the same matrix as an ``orderBy`` without its sort job."""
+    rows = sorted(
+        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r.cell
+    )
     return np.vstack([np.asarray(r.centroid) for r in rows])
 
 
@@ -1399,6 +1404,63 @@ def _pq_residual(spark, path: str) -> bool:
     )
 
 
+# (centroids, books, residual) per index path, each stamped with the
+# metadata listing it was read under; least recently used first
+_META_DIRS = ("centroids", "pq_codebooks", "pq_meta")
+_META_MEMO_PATHS = 8
+_META_MEMO: "OrderedDict[str, tuple[tuple, tuple]]" = OrderedDict()
+_META_LOCK = threading.Lock()
+
+
+def _meta_listing(spark, path: str) -> tuple:
+    """(name, length, mtime) of every file under the three metadata
+    subdirs — a driver-side Hadoop-FS listing, no Spark job. Every
+    writer of those subdirs writes new uniquely named part files, so
+    any rewrite changes the listing."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    out = []
+    for sub in _META_DIRS:
+        jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
+        fs = jp.getFileSystem(conf)
+        files = None
+        if fs.exists(jp):
+            files = tuple(
+                sorted(
+                    (st.getPath().getName(), st.getLen(), st.getModificationTime())
+                    for st in fs.listStatus(jp)
+                )
+            )
+        out.append((sub, files))
+    return tuple(out)
+
+
+def _ivfpq_meta(spark, path: str) -> tuple[np.ndarray, np.ndarray, bool]:
+    """(coarse centroids, PQ codebooks, residual flag) of the IVFADC
+    index at ``path``, memoized per path. The listing is taken BEFORE
+    the reads, so a rewrite racing the read can only store newer data
+    under an older stamp — which the next call's listing misses. The
+    memo holds at most ``_META_MEMO_PATHS`` indexes, and its arrays are
+    read-only because every caller shares them."""
+    stamp = _meta_listing(spark, path)
+    with _META_LOCK:
+        hit = _META_MEMO.get(path)
+        if hit is not None and hit[0] == stamp:
+            _META_MEMO.move_to_end(path)
+            return hit[1]
+    centroids = _load_centroid_matrix(spark, path)
+    books = load_pq_codebooks(spark, path)
+    for a in (centroids, books):
+        a.flags.writeable = False
+    meta = (centroids, books, _pq_residual(spark, path))
+    with _META_LOCK:
+        _META_MEMO[path] = (stamp, meta)
+        _META_MEMO.move_to_end(path)
+        while len(_META_MEMO) > _META_MEMO_PATHS:
+            _META_MEMO.popitem(last=False)
+    return meta
+
+
 def _residual_frame(
     indexed: DataFrame,
     cnorm: np.ndarray,
@@ -1743,11 +1805,10 @@ def append_to_ivfpq_index(
     codes to ``codes/`` (the ADC tier) — touching only the cell
     directories the batch lands in. NULL embeddings quarantine exactly
     as ``append_to_ivf_index`` does, with the same optional
-    ``batch_id`` idempotency key for the quarantine dir. Pass
-    ``centroids``/``books``/``residual`` to skip the per-call codebook
-    and pq_meta reads (the stream sink caches all three; the codebooks
-    are frozen between maintenance events, the residual flag for the
-    index's lifetime).
+    ``batch_id`` idempotency key for the quarantine dir. Omitted
+    ``centroids``/``books``/``residual`` come from ``_ivfpq_meta``, so
+    an unchanged index pays no codebook or pq_meta read; the stream
+    sink passes its own cached copies.
 
     EXACTLY-ONCE under crash/retry (advice r10 + verdict r10 item 2),
     via a write-ahead txn: before either tier write, the staged batch's
@@ -1783,17 +1844,13 @@ def append_to_ivfpq_index(
         _resolve_ivfpq_txn(spark, path, id_col=id_col)
         return
     _resolve_ivfpq_txn(spark, path, id_col=id_col)
-    if centroids is None:
-        centroids = _load_centroid_matrix(spark, path)
-    if books is None:
-        books = load_pq_codebooks(spark, path)
-    # residual indexes encode r = x_norm - c_norm[cell]; the flag is
-    # immutable for the index's lifetime, so the stream sink caches and
-    # passes it (review r12 — the pq_meta read is tiny but the hot path
-    # should pay zero per-batch reads); cnorm itself derives from the
-    # centroids already in hand
-    if residual is None:
-        residual = _pq_residual(spark, path)
+    # residual indexes encode r = x_norm - c_norm[cell]; cnorm derives
+    # from the centroids already in hand
+    if centroids is None or books is None or residual is None:
+        meta = _ivfpq_meta(spark, path)
+        centroids = meta[0] if centroids is None else centroids
+        books = meta[1] if books is None else books
+        residual = meta[2] if residual is None else residual
     cnorm = _normalized_centroids(centroids) if residual else None
     assigned = assign_cells(new_vectors, centroids, vec_col=vec_col)
     q_path, q_mode = _quarantine_target(path, batch_id)
@@ -1887,12 +1944,10 @@ def append_to_ivfpq_index(
 
 
 def load_pq_codebooks(spark, path: str) -> np.ndarray:
-    """(m, pq_k, dim/m) codebook tensor from a save_ivfpq_index dir."""
-    rows = (
-        spark.read.parquet(f"{path}/pq_codebooks")
-        .orderBy("subspace", "code")
-        .collect()
-    )
+    """(m, pq_k, dim/m) codebook tensor from a save_ivfpq_index dir.
+    Each (subspace, code) key is unique and places its own row, so the
+    rows need no ordering."""
+    rows = spark.read.parquet(f"{path}/pq_codebooks").collect()
     m = max(r.subspace for r in rows) + 1
     kk = max(r.code for r in rows) + 1
     sub = len(rows[0].centroid)
@@ -2735,119 +2790,106 @@ def search_ivfpq(
     """IVFADC probe of a ``save_ivfpq_index`` directory: coarse prune ->
     compressed-domain shortlist -> exact re-rank.
 
-    1. COARSE: each query is assigned its ``nprobe`` nearest coarse
-       centroids exactly as ``probe_ivf`` does (broadcast codebook
-       crossJoin + per-query window — distributed, no query collect).
+    1. COARSE (driver): the coarse centroids, PQ codebooks and residual
+       flag come from ``_ivfpq_meta``, which reads them only when their
+       files changed. The query frame is collected once, and each query
+       is routed to its ``nprobe`` nearest centroids by
+       ``similarity.exact_cos_matrix`` ordered by (cosine desc, cell
+       asc) — the same bits and order as ``probe_ivf``'s JVM cosine and
+       row_number, with no job.
     2. ADC: the codes tier is read PARTITION-PRUNED to the probed cells
-       (the probed-cell list is the one driver-bounded collect — at most
-       coarse-k ints, the affected-cell discipline) and cogrouped per
-       cell with the queries probing that cell. Each cogroup task builds
-       the per-query m x pq_k lookup tables from the broadcast PQ
-       codebooks and scores its cell's codes with m table lookups
-       (numpy take per subspace) — never touching a raw vector. Per-cell
-       per-query top-``shortlist`` survives (np.argpartition).
-    3. RE-RANK: the merged shortlist (<= |queries| x shortlist rows
-       after the window) joins its FULL vectors from the cells tier —
-       scan statically pruned to the probed cells — for exact cosine
-       top-k, the faiss refine step that pushes recall to ~1 at small
-       shortlists (RECALL.md curve).
+       and grouped per cell. One broadcast carries the queries, their
+       routing, the PQ codebooks and the residual anchors; each cell's
+       task builds the m x pq_k lookup tables of the queries routed to
+       it and scores the cell's codes with m table lookups (numpy take
+       per subspace) — never touching a raw vector. Per-cell per-query
+       top-``shortlist`` survives (np.argpartition), and a window
+       merges the cells' shortlists.
+    3. RE-RANK: the merged shortlist (<= |queries| x shortlist rows)
+       joins its FULL vectors from the cells tier — scan statically
+       pruned to the probed cells — for exact cosine top-k, the faiss
+       refine step that pushes recall to ~1 at small shortlists
+       (RECALL.md curve).
 
-    Scale shape: the only corpus-proportional exchange is the cogroup
+    Scale shape: the only corpus-proportional exchange is the group
     shuffle of the PRUNED, COMPRESSED codes (nprobe/coarse_k of the
     corpus at ~1/32 byte width); the cells tier is touched only for
-    |shortlist| rows per query. Per-worker residency is the broadcast
-    (coarse centroids + m x pq_k subcodes) — independent of corpus size
-    AND of coarse k growth paths that sink the flat-GEMM assignment
-    (SCALE.md round-10 residency table).
+    |shortlist| rows per query. The query side is bounded by |q| x dim,
+    on the driver and in each ADC task's broadcast — the bound the
+    re-rank's broadcast join of the queries already had. The rest of
+    the broadcast (coarse centroids + m x pq_k subcodes) is independent
+    of corpus size AND of coarse k growth paths that sink the flat-GEMM
+    assignment (SCALE.md round-10 residency table).
 
     RESIDUAL indexes (``pq_meta`` flag) change only the ADC arithmetic:
     the stored code quantizes r = x_norm - c_norm[cell], so the
     approximate cosine is <q, c_norm[cell]> + sum_j LUT_j[code_j] — the
     per-cell constant term comes from the broadcast (normalized) coarse
-    centroids the probe already holds, one extra (|q| x dim) GEMM per
-    cogroup task. Without it, cross-cell shortlist merging would
-    compare within-cell offsets from DIFFERENT anchors.
+    centroids, one extra (|q| x dim) GEMV per ADC task. Without it,
+    cross-cell shortlist merging would compare within-cell offsets from
+    DIFFERENT anchors.
+
+    Degenerate queries: an empty query frame yields no rows (same
+    schema); a NULL or zero-norm query embedding raises ValueError
+    naming its query id.
 
     Exactness pin (the x125/x75b discipline): nprobe == coarse_k probes
     every cell and shortlist >= |corpus| makes the re-rank see every
     candidate, so output == brute-force cosine top-k bit for bit —
     that composition is the x146 driver oracle."""
     import pandas as pd
-    from concurrent.futures import ThreadPoolExecutor
 
-    # The three index-metadata reads (coarse centroids, PQ codebooks,
-    # residual flag) are independent bounded artifacts under different
-    # subdirs, but each is a driver-blocking parquet-read job and every
-    # timed probe pays all three serially. Fetch them on a small thread
-    # pool (guide §2.6) — same rows, same broadcasts, ~one job latency
-    # instead of three per probe (r14).
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cent = pool.submit(
-            lambda: spark.read.parquet(f"{path}/centroids")
-            .orderBy("cell")
-            .collect()
-        )
-        f_books = pool.submit(load_pq_codebooks, spark, path)
-        f_res = pool.submit(_pq_residual, spark, path)
-        rows, books, residual = f_cent.result(), f_books.result(), f_res.result()
-    centroids = np.vstack([np.asarray(r.centroid) for r in rows])
+    centroids, books, residual = _ivfpq_meta(spark, path)
     m, _kk, sub = books.shape
-    bc = spark.sparkContext.broadcast(books)
-    bc_cn = (
-        spark.sparkContext.broadcast(_normalized_centroids(centroids))
-        if residual
-        else None
-    )
+    dim = centroids.shape[1]
 
-    # --- 1. coarse assignment (probe_ivf's distributed shape) ---
-    cent = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cent_vec array<double>",
-    ).withColumn("cent_vec_nrm", F.sqrt(dot(F.col("cent_vec"), F.col("cent_vec"))))
-    q = _prepped(queries, id_col, vec_col, "query_id", "q_vec")
-    wq = W.partitionBy("query_id").orderBy(F.desc("cent_sim"), F.asc("cell"))
-    probe_df = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_sim", _cos_pair("q_vec", "cent_vec"))
-        .withColumn("cent_rank", F.row_number().over(wq))
-        .filter(F.col("cent_rank") <= nprobe)
-        .select("query_id", "cell")
-    )
-    probe_q = probe_df.join(q.select("query_id", "q_vec"), "query_id")
-
-    # --- 2. partition-pruned ADC scan, cogrouped per cell ---
-    if nprobe >= len(centroids):
-        # full probe: every cell is assigned to every query (the rank
-        # filter keeps all `len(centroids)` rows), so the probed-cell
-        # list is statically the gap-free codebook range — skip the
-        # distinct-collect job that would re-execute the coarse
-        # assignment subtree just to learn it (round-13; the narrower
-        # nprobe regime still derives it from the data)
-        probed = list(range(len(centroids)))
-    else:
-        probed = sorted(
-            r.cell for r in probe_df.select("cell").distinct().collect()
+    # --- 1. route every query to its nprobe cells, on the driver ---
+    qsel = queries.select(id_col, vec_col)
+    rows = qsel.collect()
+    for qid, v in rows:
+        if v is None or None in v or not any(x * x for x in v):
+            raise ValueError(
+                f"query {qid!r} has a NULL or zero-norm {vec_col!r}: "
+                "its cosine to any vector is undefined"
+            )
+        if len(v) != dim:
+            raise ValueError(
+                f"query {qid!r} has {len(v)} dims, the index has {dim}"
+            )
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    qvecs = np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, dim)
+    cos = exact_cos_matrix(qvecs, centroids)
+    order = np.lexsort(
+        (np.broadcast_to(np.arange(len(centroids)), cos.shape), -cos), axis=-1
+    )[:, : max(nprobe, 0)]
+    routes: dict[int, list[int]] = {}
+    for qi, cells in enumerate(order):
+        for c in cells:
+            routes.setdefault(int(c), []).append(qi)
+    probed = sorted(routes)
+    bc = spark.sparkContext.broadcast(
+        (
+            qids,
+            qvecs,
+            {c: np.array(qs) for c, qs in routes.items()},
+            np.asarray(books),
+            _normalized_centroids(centroids) if residual else None,
         )
+    )
+
+    # --- 2. partition-pruned ADC scan, one group per probed cell ---
     codes_scan = (
         spark.read.parquet(f"{path}/codes")
         .withColumn("cell", F.col("cell").cast("int"))
-        .filter(F.col("cell").isin([int(c) for c in probed]))
+        .filter(F.col("cell").isin(probed))
     )
 
-    def adc(codes_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "cell": pd.Series([], dtype="int32"),
-                "score_pq": pd.Series([], dtype="float64"),
-            }
-        )
-        if not len(codes_pdf) or not len(q_pdf):
-            return empty
-        bks = bc.value
-        qids = q_pdf["query_id"].to_numpy()
-        qmat = np.vstack(q_pdf["q_vec"].to_numpy()).astype(np.float64)
+    def adc(codes_pdf: pd.DataFrame) -> pd.DataFrame:
+        all_qids, all_qvecs, cell_queries, bks, cn = bc.value
+        cell = int(codes_pdf["cell"].iloc[0])
+        sel = cell_queries[cell]
+        qids = all_qids[sel]
+        qmat = all_qvecs[sel]
         qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
         luts = np.stack(
             [qmat[:, j * sub : (j + 1) * sub] @ bks[j].T for j in range(m)],
@@ -2855,19 +2897,25 @@ def search_ivfpq(
         )
         codes = np.vstack(codes_pdf["codes"].to_numpy())
         nids = codes_pdf[id_col].to_numpy()
-        cell = int(codes_pdf["cell"].iloc[0])
         scores = np.zeros((len(qids), len(codes)))
         for j in range(m):
             scores += luts[:, j, :][:, codes[:, j]]
-        if bc_cn is not None:
+        if cn is not None:
             # residual codes: add back the cell-anchor term
             # <q, c_norm[cell]> so shortlists MERGE correctly across
             # cells (within one cell it is a constant shift)
-            scores += (qmat @ bc_cn.value[cell])[:, None]
+            scores += (qmat @ cn[cell])[:, None]
         scores[qids[:, None] == nids[None, :]] = -np.inf  # drop self-matches
         t = min(shortlist, scores.shape[1])
         if not t:
-            return empty
+            return pd.DataFrame(
+                {
+                    "query_id": pd.Series([], dtype="int64"),
+                    "neighbor_id": pd.Series([], dtype="int64"),
+                    "cell": pd.Series([], dtype="int32"),
+                    "score_pq": pd.Series([], dtype="float64"),
+                }
+            )
         idx = np.argpartition(-scores, t - 1, axis=1)[:, :t]
         out = pd.DataFrame(
             {
@@ -2879,13 +2927,8 @@ def search_ivfpq(
         )
         return out[np.isfinite(out["score_pq"])]
 
-    scored = (
-        codes_scan.groupBy("cell")
-        .cogroup(probe_q.groupBy("cell"))
-        .applyInPandas(
-            adc,
-            schema="query_id long, neighbor_id long, cell int, score_pq double",
-        )
+    scored = codes_scan.groupBy("cell").applyInPandas(
+        adc, schema="query_id long, neighbor_id long, cell int, score_pq double"
     )
     # --- merge per-cell shortlists (input bounded by |q| x shortlist x
     # nprobe rows) ---
@@ -2898,11 +2941,15 @@ def search_ivfpq(
         .select("query_id", "neighbor_id", "cell")
     )
 
-    # --- 3. exact re-rank from the statically-pruned cells tier ---
+    # --- 3. exact re-rank from the statically-pruned cells tier, against
+    # the collected queries (the user's frame is not evaluated again) ---
+    q = _prepped(
+        spark.createDataFrame(rows, qsel.schema), id_col, vec_col, "query_id", "q_vec"
+    )
     corpus = (
         spark.read.parquet(f"{path}/cells")
         .withColumn("cell", F.col("cell").cast("int"))
-        .filter(F.col("cell").isin([int(c) for c in probed]))
+        .filter(F.col("cell").isin(probed))
     )
     c = _prepped(corpus, id_col, vec_col, "neighbor_id", "c_vec")
     exact = (

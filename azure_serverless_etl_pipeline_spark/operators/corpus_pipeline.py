@@ -111,6 +111,8 @@ def prepare_training_corpus(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from . import decontam, dsir
     from .dedup import exact_dedup
     from .packing import chunk_documents
@@ -134,8 +136,9 @@ def prepare_training_corpus(
             target, "c_t", n_buckets, text_col
         ).localCheckpoint()
 
+    # the target carries the caller's job group into its thread
     with ThreadPoolExecutor(max_workers=1) as pool:
-        f_tc = pool.submit(_target_counts)
+        f_tc = pool.submit(inheritable_thread_target(spark)(_target_counts))
         # exact dedup keeps the min-id representative per distinct text;
         # consumed twice by decontamination (report + anti-join)
         reps = (

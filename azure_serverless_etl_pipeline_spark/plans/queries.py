@@ -2746,6 +2746,8 @@ def x117(spark: SparkSession, sf_dir: str) -> DataFrame:
     path reproduces the batch truth exactly."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
@@ -2776,9 +2778,10 @@ def x117(spark: SparkSession, sf_dir: str) -> DataFrame:
         ck._owned_caches = getattr(p, "_owned_caches", ())
         return ck
 
+    # each target carries the caller's job group into its thread
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_map = pool.submit(_old_map)
-        f_inc = pool.submit(_inc_pairs)
+        f_map = pool.submit(inheritable_thread_target(spark)(_old_map))
+        f_inc = pool.submit(inheritable_thread_target(spark)(_inc_pairs))
         old_map, inc = f_map.result(), f_inc.result()
     spark.sparkContext.setJobDescription(None)
     return dedup.incremental_dup_clusters(old_map, inc)

@@ -120,15 +120,14 @@ def append_batch(
     INPUT rows, one source-scan filter, no second assignment pass
     (ann_index._write_quarantining_nulls — shared with the batch
     path)."""
-    import numpy as np
-
-    from ..operators.ann_index import _write_quarantining_nulls, assign_cells
+    from ..operators.ann_index import (
+        _load_centroid_matrix,
+        _write_quarantining_nulls,
+        assign_cells,
+    )
 
     if centroids is None:
-        rows = (
-            spark.read.parquet(f"{index_dir}/centroids").orderBy("cell").collect()
-        )
-        centroids = np.vstack([np.asarray(r.centroid) for r in rows])
+        centroids = _load_centroid_matrix(spark, index_dir)
     assigned = assign_cells(batch_df, centroids, vec_col=vec_col)
     _write_quarantining_nulls(
         assigned,
@@ -254,8 +253,6 @@ def start_vector_ingest_stream(
     single-writer discipline every index mutator shares): an epoch that
     lands while the refit's staging is up refuses loudly rather than
     racing it."""
-    import numpy as np
-
     if split_occupancy is not None and not fold_every:
         raise ValueError(
             "split_occupancy requires fold_every: cell splits can only "
@@ -288,15 +285,7 @@ def start_vector_ingest_stream(
         .parquet(landing_dir)
     )
 
-    # the codebook is frozen between maintenance events: read it once
-    # here (not per micro-batch) and refresh only after a split
-    def _codebook() -> "np.ndarray":
-        rows = (
-            spark.read.parquet(f"{index_dir}/centroids")
-            .orderBy("cell")
-            .collect()
-        )
-        return np.vstack([np.asarray(r.centroid) for r in rows])
+    from ..operators.ann_index import _load_centroid_matrix
 
     cache = {}
     if ivfpq:
@@ -340,10 +329,12 @@ def start_vector_ingest_stream(
         # index's max committed key and starts above it; resumes of the
         # same checkpoint reuse the pin, keeping replay no-ops exact.
         cache["base"] = _epoch_base(spark, index_dir, checkpoint_dir)
-    # the coarse codebook loads AFTER any refit resolution (a refit
-    # never touches centroids/, but keeping every cached artifact
-    # behind the resolve reads as one invariant)
-    cache["centroids"] = _codebook()
+    # the coarse codebook is frozen between maintenance events: read it
+    # once here (not per micro-batch) and refresh only after a split.
+    # It loads AFTER any refit resolution (a refit never touches
+    # centroids/, but keeping every cached artifact behind the resolve
+    # reads as one invariant)
+    cache["centroids"] = _load_centroid_matrix(spark, index_dir)
 
     def _run_splits() -> None:
         import logging
@@ -372,7 +363,7 @@ def start_vector_ingest_stream(
                 int(split_occupancy),
             )
         if grew:
-            cache["centroids"] = _codebook()
+            cache["centroids"] = _load_centroid_matrix(spark, index_dir)
 
     _ALERT = "alert.json"
 

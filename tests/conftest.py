@@ -28,6 +28,29 @@ def spark():
     yield s
 
 
+def run_in_job_group(spark, group: str, fn):
+    """Run ``fn`` under the Spark job group ``group`` (a name unique to
+    the caller). Returns (fn's result, ids of the jobs launched in the
+    group, ids of the jobs launched meanwhile with no group)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    settle = sc._jsc.sc().listenerBus().waitUntilEmpty
+    settle(30_000)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    settle(30_000)
+    return (
+        out,
+        set(tracker.getJobIdsForGroup(group)),
+        set(tracker.getJobIdsForGroup(None)) - ungrouped,
+    )
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb
@@ -42,3 +65,24 @@ def duck():
             f"SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
         )
     return con
+
+
+# The default gate (pyproject ``addopts = "-m 'not slow'"``) drops the
+# slow set without a word; count what it dropped and say so at the end
+# of every run, so a green default run never reads as the whole suite.
+_deselected_slow: list[str] = []
+
+
+def pytest_deselected(items):
+    _deselected_slow.extend(i.nodeid for i in items if i.get_closest_marker("slow"))
+
+
+def pytest_terminal_summary(terminalreporter):
+    if _deselected_slow and terminalreporter.config.option.markexpr == "not slow":
+        terminalreporter.write_line(
+            f"{len(_deselected_slow)} slow test(s) deselected by the default "
+            "addopts filter -m 'not slow'; run them with "
+            "`pytest tests/ -m slow` (or everything with "
+            "`pytest tests/ -o addopts=\"\"`)",
+            yellow=True,
+        )

@@ -746,6 +746,165 @@ def test_ivfpq_exact_pin_equals_brute_force(spark, corpus, tmp_path_factory):
     assert got.equals(want[got.columns])
 
 
+def _probe_rows(spark, idx, queries, **kw):
+    from azure_serverless_etl_pipeline_spark.operators.ann_index import (
+        search_ivfpq,
+    )
+
+    return (
+        search_ivfpq(spark, idx, queries, k=5, **kw)
+        .toPandas()
+        .sort_values(["query_id", "rank"], ignore_index=True)
+    )
+
+
+def test_ivfpq_degenerate_queries(spark, corpus, tmp_path_factory):
+    """An empty query frame answers with no rows and the probe's
+    4-column schema; a NULL, zero-norm or wrong-width query embedding is
+    refused at the call with a ValueError naming its query id."""
+    from azure_serverless_etl_pipeline_spark.operators.ann_index import (
+        save_ivfpq_index,
+        search_ivfpq,
+    )
+
+    idx = str(tmp_path_factory.mktemp("ivfpq_degenerate") / "index")
+    save_ivfpq_index(corpus, idx, k=4, m=8, pq_k=16)
+    emb = corpus.select("vec_id", "embedding")
+    some = search_ivfpq(spark, idx, emb.limit(3), k=5, nprobe=2)
+    empty = search_ivfpq(spark, idx, emb.limit(0), k=5, nprobe=2)
+    assert empty.schema == some.schema
+    assert empty.columns == ["query_id", "neighbor_id", "rank", "cos_sim"]
+    assert empty.count() == 0
+    for qid, vec in (
+        (9_000_001, None),
+        (9_000_002, [0.0] * 64),
+        (9_000_003, [1.0] * 8),
+    ):
+        bad = emb.limit(3).unionByName(
+            spark.createDataFrame(
+                [(qid, vec)], "vec_id long, embedding array<float>"
+            )
+        )
+        with pytest.raises(ValueError, match=str(qid)):
+            search_ivfpq(spark, idx, bad, k=5, nprobe=2)
+
+
+def test_ivfpq_meta_memo_follows_index_maintenance(
+    spark, corpus, tmp_path_factory
+):
+    """The probe's metadata memo never serves a stale codebook: a
+    split_cells, a committed refit_pq_codebooks and an in-place
+    save_ivfpq_index rebuild each change the metadata, and the probe
+    after each equals the same probe after clearing the memo."""
+    import numpy as np
+
+    from azure_serverless_etl_pipeline_spark.operators import ann_index as A
+
+    idx = str(tmp_path_factory.mktemp("ivfpq_memo") / "index")
+    emb = corpus.select("vec_id", "embedding")
+    A.save_ivfpq_index(emb, idx, k=4, m=8, pq_k=16)
+    queries = corpus.filter(F.col("vec_id") < 12)
+
+    def probe_equals_cold_probe():
+        warm = _probe_rows(spark, idx, queries, nprobe=2, shortlist=20)
+        A._META_MEMO.clear()
+        cold = _probe_rows(spark, idx, queries, nprobe=2, shortlist=20)
+        assert len(warm) == 5 * 12 and warm.equals(cold)
+        return A._ivfpq_meta(spark, idx)
+
+    def refit():
+        A.append_to_ivfpq_index(
+            _basis_batch(spark, 120, 7_000_000), idx, batch_id=0
+        )
+        A.refit_pq_codebooks(spark, idx)
+
+    before = probe_equals_cold_probe()
+    for step in (
+        lambda: A.split_cells(
+            spark, idx, target_occupancy=int(corpus.count() / 8)
+        ).count(),
+        refit,
+        lambda: A.save_ivfpq_index(emb, idx, k=6, m=4, pq_k=8, residual=True),
+    ):
+        step()
+        after = probe_equals_cold_probe()
+        assert any(
+            a.shape != b.shape or not np.array_equal(a, b)
+            for a, b in zip(before[:2], after[:2])
+        )
+        before = after
+
+
+def test_ivfpq_warm_probe_reads_no_metadata(spark, corpus, tmp_path_factory):
+    """A probe of an unchanged index takes its metadata from the memo:
+    it launches exactly the metadata read's jobs fewer than a probe on
+    a cleared memo, and no job of either lands outside the caller's job
+    group."""
+    from azure_serverless_etl_pipeline_spark.operators import ann_index as A
+    from tests.conftest import run_in_job_group
+
+    idx = str(tmp_path_factory.mktemp("ivfpq_warm") / "index")
+    A.save_ivfpq_index(corpus, idx, k=4, m=8, pq_k=16)
+    queries = corpus.filter(F.col("vec_id") < 4)
+
+    def probe():
+        return A.search_ivfpq(spark, idx, queries, k=5, nprobe=2).collect()
+
+    def jobs(name, fn):
+        _, grouped, ungrouped = run_in_job_group(
+            spark, f"test:ivfpq_warm:{name}", fn
+        )
+        assert not ungrouped
+        return len(grouped)
+
+    probe()
+    warm = jobs("warm-probe", probe)
+    A._META_MEMO.clear()
+    meta = jobs("cold-meta", lambda: A._ivfpq_meta(spark, idx))
+    assert meta > 0
+    assert jobs("warm-meta", lambda: A._ivfpq_meta(spark, idx)) == 0
+    A._META_MEMO.clear()
+    assert jobs("cold-probe", probe) == warm + meta
+
+
+def test_ivfpq_meta_memo_is_bounded(spark, corpus, tmp_path_factory):
+    """The memo keeps the most recently used ``_META_MEMO_PATHS``
+    indexes, so a session that builds many indexes does not grow it,
+    also under concurrent callers."""
+    import shutil
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from azure_serverless_etl_pipeline_spark.operators import ann_index as A
+
+    root = tmp_path_factory.mktemp("ivfpq_bound")
+    A.save_ivfpq_index(corpus, str(root / "index0"), k=4, m=8, pq_k=16)
+    paths = [str(root / "index0")]
+    for i in range(1, A._META_MEMO_PATHS + 3):
+        for sub in A._META_DIRS:
+            shutil.copytree(root / "index0" / sub, root / f"index{i}" / sub)
+        paths.append(str(root / f"index{i}"))
+
+    def walk(shift):
+        for p in paths[shift:] + paths[:shift]:
+            A._ivfpq_meta(spark, p)
+
+    # more threads than cores, switching often: an unlocked memo update
+    # would lose or duplicate entries past the bound
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            for f in [pool.submit(walk, s) for s in range(8)]:
+                f.result(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(A._META_MEMO) == A._META_MEMO_PATHS
+    for p in paths:
+        A._ivfpq_meta(spark, p)
+    assert list(A._META_MEMO) == paths[-A._META_MEMO_PATHS :]
+
+
 @pytest.mark.slow
 def test_ivfpq_recall_knobs_and_pruned_plan(spark, corpus, tmp_path_factory):
     """Approximate regime: (a) recall at nprobe < k is sane and widening

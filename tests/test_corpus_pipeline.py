@@ -129,3 +129,26 @@ def test_prepare_training_corpus_stage_equivalence(spark):
     key = lambda r: tuple(r)
     assert sorted(map(key, got)) == sorted(map(key, want))
     assert len(got) > 0
+
+
+def test_prepare_training_corpus_pool_keeps_callers_job_group(spark):
+    """The DSIR target-count thread launches its jobs under the caller's
+    job group: no job of the call lands with an empty group id."""
+    from pyspark.sql import functions as F
+
+    from azure_serverless_etl_pipeline_spark.operators.corpus_pipeline import (
+        prepare_training_corpus,
+    )
+    from azure_serverless_etl_pipeline_spark.sources.catalog import load_table
+    from tests.conftest import SF_SMOKE, run_in_job_group
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    ev = docs.filter(F.col("doc_id") % 10 == 0)
+    tgt = docs.filter(F.col("lang") == "en")
+    rows, grouped, ungrouped = run_in_job_group(
+        spark,
+        "test:prepare_training_corpus:pool",
+        lambda: prepare_training_corpus(docs, ev, tgt, keep_fraction=0.5).collect(),
+    )
+    assert rows and grouped
+    assert not ungrouped
