@@ -19,6 +19,7 @@ vectors each, vs the full corpus for brute force.
 from __future__ import annotations
 
 import threading
+import time
 from collections import OrderedDict
 
 import numpy as np
@@ -27,6 +28,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions import dot
+from .compaction import read_record, write_record
 from .similarity import _cos_pair, _prepped, exact_cos_matrix
 
 _SEED = 42
@@ -1720,21 +1722,15 @@ def _parquet_data_exists(spark, path: str) -> bool:
 
 def _ivfpq_txn_meta(spark, path: str) -> int | None:
     """The open append txn's batch key (-1 for an unkeyed batch), or
-    None when no txn is pending (data-file check, the meta-gate
-    discipline)."""
-    if not _parquet_data_exists(spark, f"{path}/append_txn/meta"):
-        return None
-    return int(
-        spark.read.schema("batch long")
-        .parquet(f"{path}/append_txn/meta")
-        .collect()[0]
-        .batch
-    )
+    None when no txn is pending (a torn marker reads as absent)."""
+    rec = read_record(spark, f"{path}/append_txn/meta")
+    return None if rec is None else int(rec["batch"])
 
 
 def _ivfpq_commit_exists(spark, path: str, batch_id: int) -> bool:
-    return _parquet_data_exists(
-        spark, f"{path}/append_commits/batch={int(batch_id)}"
+    return (
+        read_record(spark, f"{path}/append_commits/batch={int(batch_id)}")
+        is not None
     )
 
 
@@ -1768,7 +1764,7 @@ def _resolve_ivfpq_txn(spark, path: str, id_col: str = "vec_id") -> None:
     committed = (
         _ivfpq_commit_exists(spark, path, pending)
         if pending >= 0
-        else _parquet_data_exists(spark, f"{path}/append_txn/committed")
+        else read_record(spark, f"{path}/append_txn/committed") is not None
     )
     if committed:
         fs.delete(txn_jp, True)
@@ -1812,13 +1808,20 @@ def append_to_ivfpq_index(
 
     EXACTLY-ONCE under crash/retry (advice r10 + verdict r10 item 2),
     via a write-ahead txn: before either tier write, the staged batch's
-    ids land in ``append_txn/ids`` and a marker in ``append_txn/meta``
-    (the undo record); after both tiers commit, a per-batch record in
-    ``append_commits/batch=K`` (when ``batch_id`` is given) and THEN
-    the marker is dropped. Every entry first resolves a pending txn —
-    rolled FORWARD (marker drop) when its commit record exists, rolled
-    BACK otherwise (the recorded ids' rows deleted from both tiers, a
-    bounded sliver rewrite) — so a replayed batch never duplicates rows
+    ids land in ``append_txn/ids`` (parquet) and a marker record in
+    ``append_txn/meta`` (the undo record); after both tiers commit, a
+    per-batch commit record in ``append_commits/batch=K`` (when
+    ``batch_id`` is given; else the txn-scoped ``append_txn/committed``)
+    and THEN the marker is dropped. The marker, the commit record and
+    the per-batch drift record (``drift/batches/batch=K``) are JSON
+    records (``compaction.write_record``: a Hadoop-FS temp write +
+    rename, no Spark job); the commit record says what the append did —
+    ``{"rows", "cells", "wall_s"}``: rows landed, the cells they landed
+    in, and the append's wall seconds. Every entry first resolves a
+    pending txn — rolled FORWARD (marker drop) when its commit record
+    exists, rolled BACK otherwise (the recorded ids' rows deleted from
+    both tiers, a bounded sliver rewrite) — so a replayed batch never
+    duplicates rows
     and the two-tier torn state (a vector present for re-rank but
     invisible to the ADC shortlist) survives at most until the next
     append touches the index. A replay of an already-committed
@@ -1837,6 +1840,7 @@ def append_to_ivfpq_index(
     union; the crash-injection tests pin that kill-between-tiers +
     retry lands bit-identical to a clean run."""
     spark = new_vectors.sparkSession
+    started = time.perf_counter()
     _resolve_refit(spark, path)
     if batch_id is not None and _ivfpq_commit_exists(spark, path, batch_id):
         # already committed: drop a marker the crash left behind (the
@@ -1854,6 +1858,7 @@ def append_to_ivfpq_index(
     cnorm = _normalized_centroids(centroids) if residual else None
     assigned = assign_cells(new_vectors, centroids, vec_col=vec_col)
     q_path, q_mode = _quarantine_target(path, batch_id)
+    commit: dict = {}
 
     def write_valid(valid: DataFrame) -> None:
         from pyspark.sql import Observation
@@ -1868,11 +1873,9 @@ def append_to_ivfpq_index(
             .write.mode("overwrite")
             .parquet(f"{path}/append_txn/ids")
         )
-        spark.createDataFrame(
-            [(int(batch_id) if batch_id is not None else -1,)],
-            "batch long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/append_txn/meta"
+        write_record(
+            spark, f"{path}/append_txn/meta",
+            {"batch": int(batch_id) if batch_id is not None else -1},
         )
         (
             staged.write.mode("append")
@@ -1902,7 +1905,8 @@ def append_to_ivfpq_index(
             .partitionBy("cell")
             .parquet(f"{path}/codes")
         )
-        landed = [int(c) for c in obs.get["cells"]]
+        landed = sorted(int(c) for c in obs.get["cells"])
+        commit.update(rows=int(obs.get["n"]), cells=landed)
         _mark_dirty(
             spark,
             path,
@@ -1912,30 +1916,27 @@ def append_to_ivfpq_index(
         if batch_id is not None and int(obs.get["n"]) > 0:
             # keyed overwrite: idempotent under the same replay
             # discipline as the tiers themselves
-            spark.createDataFrame(
-                [(float(obs.get["mean_qerr"]), int(obs.get["n"]))],
-                "mean_qerr double, n long",
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/drift/batches/batch={int(batch_id)}"
+            write_record(
+                spark,
+                f"{path}/drift/batches/batch={int(batch_id)}",
+                {"mean_qerr": float(obs.get["mean_qerr"]), "n": int(obs.get["n"])},
             )
 
     _write_quarantining_nulls(
         assigned, new_vectors, vec_col, write_valid, q_path, q_mode,
         mark_root=path,
     )
-    if batch_id is not None:
-        spark.createDataFrame([(1,)], "committed int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(
-            f"{path}/append_commits/batch={int(batch_id)}"
-        )
-    else:
-        # txn-scoped commit flag for the UNKEYED batch (review r11): a
-        # crash between here and the marker delete must roll FORWARD —
-        # without the flag the resolver would erase a completed batch
-        spark.createDataFrame([(1,)], "committed int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{path}/append_txn/committed")
+    commit["wall_s"] = time.perf_counter() - started
+    # the UNKEYED batch's commit record is txn-scoped (review r11): a
+    # crash between here and the marker delete must roll FORWARD —
+    # without it the resolver would erase a completed batch
+    write_record(
+        spark,
+        f"{path}/append_txn/committed"
+        if batch_id is None
+        else f"{path}/append_commits/batch={int(batch_id)}",
+        commit,
+    )
     jvm = spark.sparkContext._jvm
     txn_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/append_txn")
     fs = txn_jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
@@ -2019,19 +2020,8 @@ def _pq_generation(spark, path: str) -> int:
     retired the cached generation (ADVICE r12): the read is one tiny
     driver-side file per batch, the alternative is silently encoding
     every subsequent batch against retired codebooks."""
-    import json as _json
-
-    from .compaction import _read_fully
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{_PQ_GEN}")
-    fs = jp.getFileSystem(conf)
-    if not fs.exists(jp):
-        return 0
-    return int(
-        _json.loads(_read_fully(spark, fs, jp).decode("utf-8"))["gen"]
-    )
+    rec = read_record(spark, path, name=_PQ_GEN)
+    return 0 if rec is None else int(rec["gen"])
 
 
 def compact_ivf_index(
@@ -2241,8 +2231,9 @@ def needs_refit(
     on a compacted index it silently becomes newest-256, a
     recency-weighted signal (which is the production-preferred shape
     anyway; pass an explicit ``recent_batches`` to pin the window).
-    Driver cost: the tiny baseline row + the per-batch stat rows (one
-    per fold — bounded by maintenance cadence and by that retention).
+    Driver cost: the tiny baseline row + one small JSON record read per
+    selected batch (pooled on the driver, no Spark job; bounded by
+    maintenance cadence and by that retention).
 
     Returns {"baseline_qerr", "recent_qerr", "ratio", "needs_refit",
     "n_batches"} — ratio/recent are None (and needs_refit False) before
@@ -2283,17 +2274,14 @@ def needs_refit(
     # epoch and a full read-collect-sort would grow with its lifetime
     # (review r11); compact_ivf_index bounds the dir count itself
     dirs = _batch_dirs(spark, f"{path}/drift/batches")
-    if not dirs:
-        return out
     if recent_batches is not None:
         dirs = dirs[-int(recent_batches):]
-    recs = (
-        spark.read.schema("mean_qerr double, n long")
-        .parquet(*[p for _, p in dirs])
-        .collect()
-    )
-    tot_n = sum(int(r.n) for r in recs)
-    pooled = sum(float(r.mean_qerr) * int(r.n) for r in recs) / tot_n
+    # a torn record (crash mid-write) reads as absent and pools nothing
+    recs = [r for r in (read_record(spark, p) for _, p in dirs) if r]
+    if not recs:
+        return out
+    tot_n = sum(int(r["n"]) for r in recs)
+    pooled = sum(float(r["mean_qerr"]) * int(r["n"]) for r in recs) / tot_n
     ratio = pooled / max(float(base.mean_qerr), 1e-300)
     out.update(
         {
@@ -2412,10 +2400,6 @@ def _resolve_refit(
                 "*_refit dirs to abandon it"
             )
     if committed:
-        import json as _json
-
-        from .compaction import _read_fully, _write_atomic
-
         # RTBF orphan purge (ADVICE r12, see docstring): drop any code
         # id the cells tier no longer holds — a delete that raced the
         # refit's staging window erased it from cells, and the staged
@@ -2438,17 +2422,10 @@ def _resolve_refit(
         # them re-runs this block (idempotent — the gen rides the
         # manifest, so the rewrite lands the same value)
         try:
-            gen = int(
-                _json.loads(
-                    _read_fully(spark, fs, manifest).decode("utf-8")
-                )["gen"]
-            )
+            gen = int(read_record(spark, path, name=_REFIT_COMMIT)["gen"])
         except (KeyError, ValueError):  # pre-generation-stamp manifest
             gen = _pq_generation(spark, path) + 1
-        _write_atomic(
-            jvm, fs, root, _PQ_GEN,
-            _json.dumps({"gen": gen}).encode("utf-8"),
-        )
+        write_record(spark, path, {"gen": gen}, name=_PQ_GEN)
         # the swapped-in codes tier is a fresh partitionBy write — its
         # cell dirs join the compaction dirty set via a census record
         _mark_dirty(spark, path, census=("codes",))
@@ -2642,11 +2619,9 @@ def refit_pq_codebooks(
     (fold-refusal's inverse: those rows never reached the codes tier).
     Returns {"m", "pq_k", "n", "baseline_qerr_old", "baseline_qerr_new"}.
     """
-    import json
-
     from pyspark.sql import Observation
 
-    from .compaction import _write_atomic, recover_pending_under
+    from .compaction import recover_pending_under
 
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -2751,21 +2726,19 @@ def refit_pq_codebooks(
     )
 
     # commit point: from here the refit rolls FORWARD
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    _write_atomic(
-        jvm, fs, root, _REFIT_COMMIT,
-        json.dumps(
-            {
-                "m": int(m),
-                "pq_k": int(pq_k),
-                "n": n,
-                # the roll-forward stamps this as pq_gen.json — the
-                # cache-invalidation signal for long-lived writers that
-                # cached the subcodebooks (ADVICE r12)
-                "gen": _pq_generation(spark, path) + 1,
-            }
-        ).encode("utf-8"),
+    write_record(
+        spark,
+        path,
+        {
+            "m": int(m),
+            "pq_k": int(pq_k),
+            "n": n,
+            # the roll-forward stamps this as pq_gen.json — the
+            # cache-invalidation signal for long-lived writers that
+            # cached the subcodebooks (ADVICE r12)
+            "gen": _pq_generation(spark, path) + 1,
+        },
+        name=_REFIT_COMMIT,
     )
     _resolve_refit(spark, path)
     return {
@@ -2878,9 +2851,10 @@ def search_ivfpq(
     )
 
     # --- 2. partition-pruned ADC scan, one group per probed cell ---
+    # (explicit schemas: inferring one costs a Spark job per tier)
     codes_scan = (
-        spark.read.parquet(f"{path}/codes")
-        .withColumn("cell", F.col("cell").cast("int"))
+        spark.read.schema(f"{id_col} long, codes array<int>, cell int")
+        .parquet(f"{path}/codes")
         .filter(F.col("cell").isin(probed))
     )
 
@@ -2946,9 +2920,11 @@ def search_ivfpq(
     q = _prepped(
         spark.createDataFrame(rows, qsel.schema), id_col, vec_col, "query_id", "q_vec"
     )
+    # the tier's vectors may be stored as float or double: the scan widens
+    # them to the double the re-rank casts to anyway
     corpus = (
-        spark.read.parquet(f"{path}/cells")
-        .withColumn("cell", F.col("cell").cast("int"))
+        spark.read.schema(f"{id_col} long, {vec_col} array<double>, cell int")
+        .parquet(f"{path}/cells")
         .filter(F.col("cell").isin(probed))
     )
     c = _prepped(corpus, id_col, vec_col, "neighbor_id", "c_vec")

@@ -71,7 +71,13 @@ def _write_atomic(jvm, fs, jdir, name: str, payload: bytes) -> None:
     final = jvm.org.apache.hadoop.fs.Path(jdir, name)
     if fs.exists(final):
         fs.delete(final, False)
-    fs.rename(tmp, final)
+    # HDFS-style stores report a failed rename (missing or non-directory
+    # parent, existing destination) by returning False, not by raising
+    if not fs.rename(tmp, final):
+        raise IOError(
+            f"could not rename {tmp.toString()} -> {final.toString()}: "
+            "the file was not written"
+        )
 
 
 def _apply_manifest(jvm, fs, jdir, manifest: dict) -> None:
@@ -106,6 +112,48 @@ def _read_fully(spark: SparkSession, fs, jpath) -> bytes:
     finally:
         stream.close()
     return bytes(bos.toByteArray())
+
+
+_RECORD = "_record.json"
+
+
+def write_record(spark: SparkSession, path: str, obj, name: str = _RECORD) -> None:
+    """Commit a small JSON-serializable record as ``{path}/{name}``: one
+    Hadoop-FS create of a temp file, then a rename into place — no Spark
+    job. The record's directory is its identity (listings such as
+    ``batch=K`` keep their meaning); ``name`` defaults to the one record
+    file a record directory holds, and names a sibling file for records
+    that sit beside other state (``pq_gen.json``). Crash model: a crash
+    before the rename leaves only the temp file, and one between the
+    delete of an older record and the rename leaves neither — both read
+    as "not written" (``read_record`` returns None)."""
+    jvm, jdir, fs = _fs_for(spark, path)
+    _write_atomic(jvm, fs, jdir, name, json.dumps(obj).encode("utf-8"))
+
+
+def read_record(spark: SparkSession, path: str, name: str = _RECORD):
+    """The record ``write_record`` committed at ``{path}/{name}``, or None
+    when none was committed. Records used to be one-row parquet datasets
+    in the same directories; a directory holding such a ``part-*.parquet``
+    file and no record raises ``ValueError`` naming it, so state written
+    in the old format fails loudly instead of reading as "no record" (a
+    pending txn silently dropped)."""
+    jvm, jdir, fs = _fs_for(spark, path)
+    jp = jvm.org.apache.hadoop.fs.Path(jdir, name)
+    if fs.exists(jp):
+        return json.loads(_read_fully(spark, fs, jp).decode("utf-8"))
+    if fs.exists(jdir) and any(
+        st.getPath().getName().startswith("part-")
+        and st.getPath().getName().endswith(".parquet")
+        for st in fs.listStatus(jdir)
+    ):
+        raise ValueError(
+            f"{path} holds a one-row parquet record and no {name}: it was "
+            "written in the parquet record format this version no longer "
+            "reads — rebuild the state (re-fold the stream, or re-save the "
+            "index) with this version"
+        )
+    return None
 
 
 def recover_pending_under(spark: SparkSession, root: str) -> int:
@@ -230,4 +278,4 @@ def compact_parquet_dir(
     }
 
 
-__all__ = ["compact_parquet_dir"]
+__all__ = ["compact_parquet_dir", "read_record", "write_record"]

@@ -36,6 +36,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions import dot, tokens, word_shingles
+from .compaction import read_record, write_record
 
 # Fixed seed for all signature hashing: deterministic across runs/engines.
 _SEED = 42
@@ -964,6 +965,13 @@ def incremental_dup_clusters(
     return untouched.unionByName(resolved)
 
 
+def _pinned_buckets(spark, state_dir: str) -> int | None:
+    """The posting-bucket modulus pinned in ``{state_dir}/meta``, or None
+    before the state's first write."""
+    rec = read_record(spark, f"{state_dir}/meta")
+    return None if rec is None else int(rec["posting_buckets"])
+
+
 def materialize_incremental_state(
     old_docs: DataFrame,
     state_dir: str,
@@ -1017,11 +1025,11 @@ def materialize_incremental_state(
     write_bucketed_layer(sh, posting_buckets, f"{state_dir}/postings")
     write_bucketed_df(sh, posting_buckets, f"{state_dir}/shingle_df")
     # the reader must hash batch shingles with the WRITER's modulus: pin
-    # it in the state itself (a 1-row parquet — engine-portable, same
-    # medium as every other artifact)
-    old_docs.sparkSession.createDataFrame(
-        [(int(posting_buckets),)], "posting_buckets int"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/meta")
+    # it in the state itself
+    write_record(
+        old_docs.sparkSession, f"{state_dir}/meta",
+        {"posting_buckets": int(posting_buckets)},
+    )
     pairs = ngram_jaccard_pairs(
         old_docs,
         threshold=threshold,
@@ -1324,11 +1332,12 @@ def ngram_jaccard_pairs_incremental_bucketed(
         # the modulus is a property of the persisted state — always read
         # the pinned value; a caller-supplied mismatch would mis-prune
         # every bucketed read into silently incomplete output
-        pinned = int(
-            spark.read.parquet(f"{state_dir}/meta")
-            .collect()[0]
-            .posting_buckets
-        )
+        pinned = _pinned_buckets(spark, state_dir)
+        if pinned is None:
+            raise ValueError(
+                f"{state_dir}/meta pins no posting_buckets: build the "
+                "state with materialize_incremental_state"
+            )
         if n_buckets is not None and int(n_buckets) != pinned:
             raise ValueError(
                 f"n_buckets={n_buckets} contradicts the state's pinned "

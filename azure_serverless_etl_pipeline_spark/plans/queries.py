@@ -4292,14 +4292,16 @@ def x123(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incremental_state_dir(sf_dir: str) -> str:
     """Per-sf_dir cache location for x117b's materialized old-corpus
     artifacts, keyed by the documents file's (mtime, size) so regenerated
-    testdata invalidates the cache automatically."""
+    testdata invalidates the cache automatically, and by the state's
+    layout (20 posting buckets, bucketed layers, JSON ``meta/`` record)
+    so a state in an older layout is rebuilt, never read."""
     import os
 
     src = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(src)
     tag = (
         f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}-b20-r9"
+        f"-{int(st.st_mtime)}-{st.st_size}-b20-r9-json"
     )
     return os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),

@@ -10,10 +10,14 @@ cluster map — the old corpus is never re-paired, so per-batch cost
 tracks batch size while the map stays equal to what a one-shot batch
 run over everything-so-far would produce (asserted in tests).
 
-State layout under ``state_dir`` (all parquet, all per-batch
-subdirectories so every write is an IDEMPOTENT overwrite keyed by the
+State layout under ``state_dir``. The layers are parquet, in per-batch
+subdirectories, so every write is an IDEMPOTENT overwrite keyed by the
 checkpointed batch id — a crash-rerun of batch k rewrites exactly
-batch k's artifacts):
+batch k's artifacts. The small records (``meta/``, ``bloom/``,
+``rebuild_txn/``, ``alloc_hw/``, ``epoch_map/epoch=E/``) are one JSON
+file per directory, committed by ``compaction.write_record`` (a
+Hadoop-FS temp write + rename, no Spark job); a torn record reads as
+absent:
 
 - ``base/batch=k/``  — (doc_id, shingles) for batch k's docs, id-sorted
 - ``postings/batch=k/bucket=j/`` — batch k's LAYER of the bucketed
@@ -26,11 +30,13 @@ batch k's artifacts):
   guard's registry), id-sorted
 - ``map/batch=k/``   — the FULL cluster map after folding batch k
 - ``meta/``          — the bucket modulus, pinned by the first fold
+  (``{"posting_buckets": B}``)
 - ``redelivered/batch=k/`` — rows diverted by the first-delivery-wins
   guard (an id arriving again in a later batch; see fold_batch) —
   written only when non-empty
 - ``bloom/`` — the membership Bloom artifact over all first-delivered
-  ids (rebuilt by compact_state); the fold's re-delivery probe
+  ids (rebuilt by compact_state; the base64 bitmap and its hash
+  parameters in one record); the fold's re-delivery probe
   consults it map-side and pays the exact ``ids/`` probe only for
   maybe-hits
 - ``tombstones/batch=K/`` — (doc_id, replaced_below) rows written by
@@ -38,12 +44,13 @@ batch k's artifacts):
   rebuild superseded (``apply_tombstones`` folds the mask in
   physically and drops this root)
 - ``rebuild_txn/`` — the write-ahead undo record of an in-flight
-  rebuild txn (folds refuse while it exists; the next rebuild rolls
-  the partial txn back)
-- ``epoch_map/epoch=E/`` — the stream epoch's allocated layer id:
-  epochs and rebuild txns draw from ONE allocator (highest id ever
-  claimed + 1) so a txn layer can never collide with a resumed
-  stream's next epoch; replays reuse their pin
+  rebuild txn (``{"txn": K}``; folds refuse while it exists; the next
+  rebuild rolls the partial txn back)
+- ``epoch_map/epoch=E/`` — the stream epoch's allocated layer id
+  (``{"batch": K}``): epochs and rebuild txns draw from ONE allocator
+  (highest id ever claimed + 1) so a txn layer can never collide with
+  a resumed stream's next epoch; replays reuse their pin
+- ``alloc_hw/`` — the allocator's high-water mark (``{"hw": K}``)
 
 The probe for batch k reads layers with batch < k only (a partition
 filter on the discovered ``batch`` column), so reprocessing is
@@ -65,11 +72,15 @@ all six layered roots — redelivered/ included — bucket leaves too).
 
 from __future__ import annotations
 
+import base64
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.compaction import read_record, write_record
 from ..operators.dedup import (
+    _pinned_buckets,
     _shingle_base,
     dup_clusters,
     incremental_dup_clusters,
@@ -136,17 +147,9 @@ def _max_allocated(spark: SparkSession, state_dir: str) -> int:
     cost the bucket-audit globStatus fix removed (review r10, second
     pass). Layer ids can exceed hw only on states that predate the
     allocator; the one-time full scan below seeds them."""
-    fs, jp = _fs_path(spark, f"{state_dir}/alloc_hw")
-    if fs.exists(jp) and any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(jp)
-    ):
-        return int(
-            spark.read.schema("hw int")
-            .parquet(f"{state_dir}/alloc_hw")
-            .collect()[0]
-            .hw
-        )
+    hw = read_record(spark, f"{state_dir}/alloc_hw")
+    if hw is not None:
+        return int(hw["hw"])
     top = max(
         (
             b
@@ -155,17 +158,13 @@ def _max_allocated(spark: SparkSession, state_dir: str) -> int:
         ),
         default=-1,
     )
-    emap = f"{state_dir}/epoch_map"
-    efs, ejp = _fs_path(spark, emap)
-    if efs.exists(ejp) and any(
-        st.getPath().getName().startswith("epoch=")
-        for st in efs.listStatus(ejp)
-    ):
-        assigned = (
-            spark.read.schema("batch int").parquet(emap).collect()
-        )
-        if assigned:
-            top = max(top, max(int(r.batch) for r in assigned))
+    efs, ejp = _fs_path(spark, f"{state_dir}/epoch_map")
+    if efs.exists(ejp):
+        for st in efs.listStatus(ejp):
+            if st.getPath().getName().startswith("epoch="):
+                pin = read_record(spark, st.getPath().toString())
+                if pin is not None:
+                    top = max(top, int(pin["batch"]))
     return top
 
 
@@ -185,9 +184,7 @@ def _bump_alloc_hw(spark: SparkSession, state_dir: str, value: int) -> None:
     alloc_hw does not exist yet, _max_allocated runs its one-time full
     layer scan here, so the very first write is seeded correctly."""
     clamped = max(int(value), _max_allocated(spark, state_dir))
-    spark.createDataFrame([(int(clamped),)], "hw int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{state_dir}/alloc_hw")
+    write_record(spark, f"{state_dir}/alloc_hw", {"hw": int(clamped)})
 
 
 def _fold_id_for(
@@ -204,19 +201,9 @@ def _fold_id_for(
     pinned id (the crash-rerun idempotence contract); states written
     before the allocator existed (no epoch_map entries, layer dirs AT
     the epoch id) replay against their legacy id."""
-    path = f"{state_dir}/epoch_map/epoch={int(epoch_id)}"
-    fs, jp = _fs_path(spark, path)
-    if fs.exists(jp) and any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(jp)
-    ):
-        return (
-            int(
-                spark.read.schema("batch int").parquet(path).collect()[0]
-                .batch
-            ),
-            True,
-        )
+    pin = read_record(spark, f"{state_dir}/epoch_map/epoch={int(epoch_id)}")
+    if pin is not None:
+        return int(pin["batch"]), True
     root_fs, root_jp = _fs_path(spark, f"{state_dir}/epoch_map")
     no_entries = not root_fs.exists(root_jp) or not any(
         st.getPath().getName().startswith("epoch=")
@@ -245,10 +232,9 @@ def _pin_fold_id(
     the pin and reuse the id (otherwise _max_allocated would hand the
     replay a fresh id and duplicate the batch)."""
     _bump_alloc_hw(spark, state_dir, batch_id)
-    spark.createDataFrame([(int(batch_id),)], "batch int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(
-        f"{state_dir}/epoch_map/epoch={int(epoch_id)}"
+    write_record(
+        spark, f"{state_dir}/epoch_map/epoch={int(epoch_id)}",
+        {"batch": int(batch_id)},
     )
 
 
@@ -288,24 +274,22 @@ def _mask_tombstoned(frame: DataFrame, tombs: DataFrame | None) -> DataFrame:
     )
 
 
-_BLOOM_SCHEMA = "bm binary, n_bits long, n_hashes int, covered_max int, n_items long"
-
-
 def build_membership_bloom(
     spark: SparkSession, state_dir: str, fpp: float = 1e-5
 ) -> dict | None:
     """Build (or rebuild) the membership Bloom artifact over every
     first-delivered id registered so far, and persist it to
-    ``{state_dir}/bloom`` (single-row parquet: bitmap blob + the hash
-    parameters + the highest batch id it covers). The artifact is a
-    PRUNE, never truth (the x80 discipline): the per-fold re-delivery
-    probe consults it map-side and pays the exact id-layer probe only
-    for maybe-hits — a CLEAN batch (no re-deliveries, the append-mostly
-    stream's common case) whose maybe set is empty skips the covered
-    layers' probe ENTIRELY, zero files touched, which is what keeps
-    membership-probe bytes flat as batches accumulate past compaction
-    (SCALE.md round 10 measured the plain probe's bytes growing ~3x
-    from 16 to 256 layers while the bloomed clean fold reads nothing).
+    ``{state_dir}/bloom`` (one JSON record: the base64 bitmap, the hash
+    parameters and the highest batch id it covers, committed in one
+    atomic rename). The artifact is a PRUNE, never truth (the x80
+    discipline): the per-fold re-delivery probe consults it map-side
+    and pays the exact id-layer probe only for maybe-hits — a CLEAN
+    batch (no re-deliveries, the append-mostly stream's common case)
+    whose maybe set is empty skips the covered layers' probe ENTIRELY,
+    zero files touched, which is what keeps membership-probe bytes flat
+    as batches accumulate past compaction (SCALE.md round 10 measured
+    the plain probe's bytes growing ~3x from 16 to 256 layers while the
+    bloomed clean fold reads nothing).
 
     SIZE ``fpp`` AGAINST THE BATCH, not per-key intuition: a clean
     batch of B ids skips the probe with probability (1-fpp)^B, so pick
@@ -329,10 +313,17 @@ def build_membership_bloom(
     n_items = int(ids.count())
     n_bits, n_bytes, n_hashes = _bloom_params(max(n_items, 1), fpp)
     bitmap = _bloom_build_bitmap(ids, "doc_id", n_bits, n_bytes, n_hashes)
-    spark.createDataFrame(
-        [(bytearray(bitmap.tobytes()), n_bits, n_hashes, covered_max, n_items)],
-        _BLOOM_SCHEMA,
-    ).coalesce(1).write.mode("overwrite").parquet(f"{state_dir}/bloom")
+    write_record(
+        spark,
+        f"{state_dir}/bloom",
+        {
+            "bitmap": base64.b64encode(bitmap.tobytes()).decode("ascii"),
+            "n_bits": int(n_bits),
+            "n_hashes": int(n_hashes),
+            "covered_max": int(covered_max),
+            "n_items": n_items,
+        },
+    )
     return {
         "bitmap": bitmap,
         "n_bits": n_bits,
@@ -343,26 +334,13 @@ def build_membership_bloom(
 
 
 def _read_membership_bloom(spark: SparkSession, state_dir: str) -> dict | None:
-    """The persisted bloom artifact, or None before the first build
-    (data-file check, not bare dir existence — same crash discipline as
-    the meta gate)."""
-    path = f"{state_dir}/bloom"
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jp) or not any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(jp)
-    ):
+    """The persisted bloom artifact, or None before the first build."""
+    rec = read_record(spark, f"{state_dir}/bloom")
+    if rec is None:
         return None
-    row = spark.read.schema(_BLOOM_SCHEMA).parquet(path).collect()[0]
-    return {
-        "bitmap": np.frombuffer(bytes(row.bm), dtype=np.uint8),
-        "n_bits": int(row.n_bits),
-        "n_hashes": int(row.n_hashes),
-        "covered_max": int(row.covered_max),
-        "n_items": int(row.n_items),
-    }
+    return dict(
+        rec, bitmap=np.frombuffer(base64.b64decode(rec["bitmap"]), dtype=np.uint8)
+    )
 
 
 def fold_batch(
@@ -443,23 +421,18 @@ def fold_batch(
     # meta would make that agreement a guess.
     meta_path = f"{state_dir}/meta"
     jvm = spark._jvm
-    jmeta = jvm.org.apache.hadoop.fs.Path(meta_path)
-    fs = jmeta.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs = jvm.org.apache.hadoop.fs.Path(state_dir).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
     # the bucket modulus is a property of the STATE, not the call: the
     # first fold pins it in meta; later folds (and any caller passing a
     # different posting_buckets) follow the pinned value — mixed moduli
-    # across layers would mis-prune every bucketed read. The gate checks
-    # for a committed DATA file, not bare directory existence: a crash
-    # mid-first-write leaves _temporary debris that a rerun's overwrite
-    # self-heals (every artifact here is crash-rerun idempotent).
-    has_meta = fs.exists(jmeta) and any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(jmeta)
-    )
+    # across layers would mis-prune every bucketed read. A record torn
+    # by a crash reads as absent, and the rerun pins it again.
+    pinned = _pinned_buckets(spark, state_dir)
+    has_meta = pinned is not None
     if has_meta:
-        posting_buckets = int(
-            spark.read.parquet(meta_path).collect()[0].posting_buckets
-        )
+        posting_buckets = pinned
     # pre-round-9 states carry flat df layers and no postings root —
     # folding a bucketed layer next to them would leave conflicting
     # partition depths and a standing corpus the reader cannot see;
@@ -531,9 +504,7 @@ def fold_batch(
             "back or complete it before folding further batches"
         )
     if not has_meta:
-        spark.createDataFrame(
-            [(int(posting_buckets),)], "posting_buckets int"
-        ).coalesce(1).write.mode("overwrite").parquet(meta_path)
+        write_record(spark, meta_path, {"posting_buckets": int(posting_buckets)})
     if not id_pinned:
         # every gate passed: pin the epoch's layer id BEFORE any layer
         # write so a crash-replay reuses it (see _pin_fold_id)
@@ -804,18 +775,8 @@ def _fs_path(spark: SparkSession, path: str):
 
 def _rebuild_marker(spark: SparkSession, state_dir: str) -> int | None:
     """The interrupted-rebuild undo record: txn batch id, or None."""
-    fs, jp = _fs_path(spark, f"{state_dir}/rebuild_txn")
-    if not fs.exists(jp) or not any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(jp)
-    ):
-        return None
-    return int(
-        spark.read.schema("txn int")
-        .parquet(f"{state_dir}/rebuild_txn")
-        .collect()[0]
-        .txn
-    )
+    rec = read_record(spark, f"{state_dir}/rebuild_txn")
+    return None if rec is None else int(rec["txn"])
 
 
 def rebuild_updated(
@@ -909,9 +870,9 @@ def rebuild_updated(
             "txn_batch": None,
         }
 
-    posting_buckets = int(
-        spark.read.parquet(f"{state_dir}/meta").collect()[0].posting_buckets
-    )
+    posting_buckets = _pinned_buckets(spark, state_dir)
+    if posting_buckets is None:
+        raise ValueError(f"{state_dir}/meta pins no posting_buckets")
     # shared allocator with the stream's epoch pins (_max_allocated):
     # the txn id is strictly above every id any fold has ever claimed,
     # INCLUDING pinned-but-unwritten epochs, and future epochs allocate
@@ -920,9 +881,7 @@ def rebuild_updated(
     # above the recorded high water
     txn = 1 + _max_allocated(spark, state_dir)
     _bump_alloc_hw(spark, state_dir, txn)
-    spark.createDataFrame([(int(txn),)], "txn int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/rebuild_txn")
+    write_record(spark, f"{state_dir}/rebuild_txn", {"txn": int(txn)})
 
     # ---- 1. latest delivered text per updated id ----
     red = None

@@ -48,7 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators.compaction import _read_fully, _write_atomic
+from ..operators.compaction import (
+    _read_fully,
+    _write_atomic,
+    read_record,
+    write_record,
+)
 from .dedup_stream import _list_batches
 
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -77,18 +82,12 @@ def _epoch_base(spark: SparkSession, index_dir: str, checkpoint_dir: str) -> int
     offsets/commits/sources/state), so the extra file is inert."""
     from .dedup_stream import _list_batches
 
-    jvm, jdir, fs = _fs(spark, checkpoint_dir)
-    pin = jvm.org.apache.hadoop.fs.Path(jdir, _EPOCH_BASE)
-    if fs.exists(pin):
-        return int(json.loads(_read_fully(spark, fs, pin).decode("utf-8"))["base"])
+    pin = read_record(spark, checkpoint_dir, name=_EPOCH_BASE)
+    if pin is not None:
+        return int(pin["base"])
     committed = _list_batches(spark, f"{index_dir}/append_commits")
     base = 1 + max((b for b, _ in committed), default=-1)
-    if not fs.exists(jdir):
-        fs.mkdirs(jdir)
-    _write_atomic(
-        jvm, fs, jdir, _EPOCH_BASE,
-        json.dumps({"base": int(base)}).encode("utf-8"),
-    )
+    write_record(spark, checkpoint_dir, {"base": int(base)}, name=_EPOCH_BASE)
     return int(base)
 
 
@@ -371,19 +370,15 @@ def start_vector_ingest_stream(
         import logging
 
         from ..operators.ann_index import needs_refit, refit_pq_codebooks
-        from ..operators.compaction import _write_atomic
 
         verdict = needs_refit(
             spark, index_dir, threshold=float(drift_threshold),
             recent_batches=int(refit_check_every),
         )
         jvm, drift_jp, fs = _fs(spark, f"{index_dir}/drift")
-        if not fs.exists(drift_jp):
-            fs.mkdirs(drift_jp)
         payload = dict(verdict, epoch=int(epoch_id))
-        _write_atomic(
-            jvm, fs, drift_jp, "last_check.json",
-            json.dumps(payload).encode("utf-8"),
+        write_record(
+            spark, f"{index_dir}/drift", payload, name="last_check.json"
         )
         alert_jp = jvm.org.apache.hadoop.fs.Path(drift_jp, _ALERT)
         if not verdict["needs_refit"]:
@@ -411,10 +406,7 @@ def start_vector_ingest_stream(
                 out["baseline_qerr_old"], out["baseline_qerr_new"],
             )
         else:
-            _write_atomic(
-                jvm, fs, drift_jp, _ALERT,
-                json.dumps(payload).encode("utf-8"),
-            )
+            write_record(spark, f"{index_dir}/drift", payload, name=_ALERT)
             logging.getLogger(__name__).warning(
                 "codebook drift: pooled qerr ratio %.3f over the last "
                 "%d batches exceeds %.3f (epoch %d) — refit advised "

@@ -51,6 +51,37 @@ def run_in_job_group(spark, group: str, fn):
     )
 
 
+def record_jobs(spark, monkeypatch, *modules):
+    """Wrap ``read_record``/``write_record`` as each of ``modules`` binds
+    them, so every call is logged as (function, record dir, ids of the
+    jobs launched in the caller's job group during the call). Returns the
+    log, filled as the wrapped calls run."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    settle = sc._jsc.sc().listenerBus().waitUntilEmpty
+    calls = []
+
+    def wrap(fn):
+        def logged(spark_, path, *args, **kwargs):
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            settle(30_000)
+            before = set(tracker.getJobIdsForGroup(group))
+            out = fn(spark_, path, *args, **kwargs)
+            settle(30_000)
+            calls.append(
+                (fn.__name__, path, set(tracker.getJobIdsForGroup(group)) - before)
+            )
+            return out
+
+        return logged
+
+    for mod in modules:
+        for name in ("read_record", "write_record"):
+            if hasattr(mod, name):
+                monkeypatch.setattr(mod, name, wrap(getattr(mod, name)))
+    return calls
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from azure_serverless_etl_pipeline_spark.operators.compaction import write_record
 from tests.conftest import SF_ORACLE
 
 
@@ -865,6 +866,54 @@ def test_ivfpq_warm_probe_reads_no_metadata(spark, corpus, tmp_path_factory):
     assert jobs("warm-meta", lambda: A._ivfpq_meta(spark, idx)) == 0
     A._META_MEMO.clear()
     assert jobs("cold-probe", probe) == warm + meta
+    # the explicit codes/ and cells/ schemas leave no inference job: the
+    # two collects, the codes scan and ADC scoring, the re-rank
+    assert warm == 7, warm
+
+
+def test_warm_ivfpq_append_records_launch_no_jobs(
+    spark, corpus, tmp_path_factory, monkeypatch
+):
+    """A warm keyed append writes its txn marker, drift record and
+    commit record through Hadoop-FS, with no Spark job; its only jobs
+    are the staging checkpoint and the ids, cells and codes writes. The
+    commit record says what the append did: its rows, the cells they
+    landed in and its wall seconds."""
+    from azure_serverless_etl_pipeline_spark.operators import ann_index as A
+    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+        read_record,
+    )
+    from tests.conftest import record_jobs, run_in_job_group
+
+    idx = str(tmp_path_factory.mktemp("ivfpq_records") / "index")
+    emb = corpus.select("vec_id", "embedding")
+    A.save_ivfpq_index(emb.filter(F.col("vec_id") % 4 != 0), idx, k=4, m=8, pq_k=16)
+    A.append_to_ivfpq_index(emb.filter(F.col("vec_id") % 8 == 0), idx, batch_id=0)
+    batch = emb.filter(F.col("vec_id") % 8 == 4)
+
+    calls = record_jobs(spark, monkeypatch, A)
+    _, grouped, ungrouped = run_in_job_group(
+        spark,
+        "test:ivfpq_append_records",
+        lambda: A.append_to_ivfpq_index(batch, idx, batch_id=1),
+    )
+    assert not ungrouped
+    written = {path[len(idx) + 1 :] for fn, path, _ in calls if fn == "write_record"}
+    assert written == {"append_txn/meta", "drift/batches/batch=1", "append_commits/batch=1"}
+    assert [c for c in calls if c[2]] == []
+    assert len(grouped) == 4, len(grouped)
+
+    rec = read_record(spark, f"{idx}/append_commits/batch=1")
+    landed = sorted(
+        int(r.cell)
+        for r in spark.read.parquet(f"{idx}/cells")
+        .join(batch.select("vec_id"), "vec_id")
+        .select("cell")
+        .distinct()
+        .collect()
+    )
+    assert rec["rows"] == batch.count() and rec["cells"] == landed
+    assert rec["wall_s"] > 0
 
 
 def test_ivfpq_meta_memo_is_bounded(spark, corpus, tmp_path_factory):
@@ -1129,9 +1178,7 @@ def test_split_cells_refuses_pending_appends_and_open_txn(
     # 2-means would bake a half-appended batch into child assignments
     pq = str(tmp_path_factory.mktemp("refusepq") / "index")
     save_ivfpq_index(corpus, pq, k=4, m=8, pq_k=16)
-    spark.createDataFrame([(7,)], "batch long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{pq}/append_txn/meta")
+    write_record(spark, f"{pq}/append_txn/meta", {"batch": 7})
     with pytest.raises(ValueError, match="pending IVFADC append txn"):
         split_cells(spark, pq, target_occupancy=10)
 
@@ -1467,9 +1514,7 @@ def test_compact_ivf_index_preserves_probes(spark, corpus, tmp_path_factory):
     )
     assert after.equals(want[after.columns])
 
-    spark.createDataFrame([(9,)], "batch long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/append_txn/meta")
+    write_record(spark, f"{idx}/append_txn/meta", {"batch": 9})
     with pytest.raises(ValueError, match="pending IVFADC append txn"):
         ann_index.compact_ivf_index(spark, idx)
 
@@ -1735,9 +1780,7 @@ def test_ivfpq_refit_resets_append_bookkeeping(
     base.select("vec_id").limit(5).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{idx}/append_txn/ids")
-    spark.createDataFrame([(0,)], "batch long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/append_txn/meta")
+    write_record(spark, f"{idx}/append_txn/meta", {"batch": 0})
 
     save_ivfpq_index(emb, idx, k=4, m=8, pq_k=16)  # the refit
     import os
@@ -1783,15 +1826,9 @@ def test_ivfpq_unkeyed_append_crash_after_completion_rolls_forward(
         some.coalesce(1).write.mode("overwrite").parquet(
             f"{idx}/append_txn/ids"
         )
-        spark.createDataFrame([(-1,)], "batch long").coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{idx}/append_txn/meta")
+        write_record(spark, f"{idx}/append_txn/meta", {"batch": -1})
         if committed:
-            spark.createDataFrame([(1,)], "committed int").coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                f"{idx}/append_txn/committed"
-            )
+            write_record(spark, f"{idx}/append_txn/committed", {})
 
     # completed (flag present): forward — rows survive
     plant_txn(committed=True)
@@ -1828,13 +1865,9 @@ def test_ivfpq_rollback_removes_drift_record(spark, corpus, tmp_path_factory):
     emb.select("vec_id").limit(3).coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{idx}/append_txn/ids")
-    spark.createDataFrame([(7,)], "batch long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{idx}/append_txn/meta")
-    spark.createDataFrame(
-        [(99.9, 1000)], "mean_qerr double, n long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{idx}/drift/batches/batch=7"
+    write_record(spark, f"{idx}/append_txn/meta", {"batch": 7})
+    write_record(
+        spark, f"{idx}/drift/batches/batch=7", {"mean_qerr": 99.9, "n": 1000}
     )
     _resolve_ivfpq_txn(spark, idx)
     r = needs_refit(spark, idx, threshold=1.5)

@@ -132,3 +132,98 @@ def test_compact_sweeps_uncommitted_staging(spark, fragmented):
     assert not os.path.exists(staging)
     assert len(_parquet_files(fragmented)) == n_before
     assert spark.read.parquet(fragmented).count() == rows_want
+
+
+def test_record_round_trip(spark, tmp_path):
+    """A record reads back as written; a rewrite replaces it; a named
+    record sits beside the default one; the directory holds no temp."""
+    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+        read_record,
+        write_record,
+    )
+
+    rec_dir = str(tmp_path / "state" / "alloc_hw")
+    assert read_record(spark, rec_dir) is None
+    write_record(spark, rec_dir, {"hw": 3, "cells": [1, 2], "wall_s": 0.5})
+    assert read_record(spark, rec_dir) == {"hw": 3, "cells": [1, 2], "wall_s": 0.5}
+    write_record(spark, rec_dir, {"hw": 4})
+    write_record(spark, rec_dir, {"gen": 2}, name="gen.json")
+    assert read_record(spark, rec_dir) == {"hw": 4}
+    assert read_record(spark, rec_dir, name="gen.json") == {"gen": 2}
+    assert not [f for f in os.listdir(rec_dir) if f.endswith(".tmp")]
+
+
+def test_record_crash_windows_read_as_absent(spark, tmp_path):
+    """Both crash windows of the temp-write + rename commit read as "not
+    written": a temp file with no record yet, and a rewrite that deleted
+    the old record but did not rename the new one into place. The next
+    write commits over the debris."""
+    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+        _RECORD,
+        read_record,
+        write_record,
+    )
+
+    def torn_temp(rec_dir):
+        os.makedirs(rec_dir, exist_ok=True)
+        with open(os.path.join(rec_dir, f".{_RECORD}.tmp"), "w") as fh:
+            json.dump({"txn": 9}, fh)
+
+    first = str(tmp_path / "first" / "rebuild_txn")
+    torn_temp(first)
+    assert read_record(spark, first) is None
+
+    rewrite = str(tmp_path / "rewrite" / "rebuild_txn")
+    write_record(spark, rewrite, {"txn": 8})
+    torn_temp(rewrite)
+    os.remove(os.path.join(rewrite, _RECORD))
+    assert read_record(spark, rewrite) is None
+
+    write_record(spark, rewrite, {"txn": 10})
+    assert read_record(spark, rewrite) == {"txn": 10}
+
+
+def test_record_in_old_parquet_format_raises(spark, tmp_path):
+    """A one-row parquet record (the format records had before) is not
+    read as "no record": that would silently drop a pending txn."""
+    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+        read_record,
+    )
+
+    rec_dir = str(tmp_path / "append_txn" / "meta")
+    spark.createDataFrame([(7,)], "batch long").coalesce(1).write.parquet(rec_dir)
+    with pytest.raises(ValueError, match="append_txn/meta holds a one-row parquet"):
+        read_record(spark, rec_dir)
+
+
+def test_write_atomic_failed_rename_raises(spark, tmp_path):
+    """A rename that fails must not drop the file silently: on the local
+    file system a destination whose parent is a file raises, and a file
+    system that reports the failure by returning False (the HDFS
+    contract) raises IOError naming both paths."""
+    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+        _fs_for,
+        _write_atomic,
+    )
+
+    root = tmp_path / "root"
+    root.mkdir()
+    (root / "afile").write_text("x")
+    jvm, jdir, fs = _fs_for(spark, str(root))
+    with pytest.raises(Exception):
+        _write_atomic(jvm, fs, jdir, "afile/rec.json", b"{}")
+    assert (root / "afile").read_text() == "x"
+
+    class RenameReturnsFalse:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def rename(self, src, dst):
+            return False
+
+    with pytest.raises(IOError, match=r"\.rec\.json\.tmp -> .*/rec\.json"):
+        _write_atomic(jvm, RenameReturnsFalse(fs), jdir, "rec.json", b"{}")
+    assert not (root / "rec.json").exists()

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from azure_serverless_etl_pipeline_spark.operators.compaction import write_record
+
 
 def _truth(docs):
     from azure_serverless_etl_pipeline_spark.operators.dedup import (
@@ -645,6 +647,44 @@ def test_membership_bloom_has_no_false_negatives(spark, tmp_path):
     assert n_maybe == docs.count()
 
 
+def test_clean_fold_after_compaction_records_launch_no_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """A clean fold after compact_state reads and writes its allocator,
+    epoch pin, meta and bloom records through Hadoop-FS, with no Spark
+    job."""
+    from azure_serverless_etl_pipeline_spark.operators import dedup
+    from azure_serverless_etl_pipeline_spark.sources import load_table
+    from azure_serverless_etl_pipeline_spark.streaming import dedup_stream
+    from tests.conftest import SF_ORACLE, record_jobs, run_in_job_group
+
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    state = str(tmp_path / "state")
+    for b in (0, 1):
+        dedup_stream.fold_batch(spark, docs.filter(F.col("doc_id") % 3 == b), b, state)
+    dedup_stream.compact_state(spark, state)
+
+    calls = record_jobs(spark, monkeypatch, dedup, dedup_stream)
+    _, grouped, ungrouped = run_in_job_group(
+        spark,
+        "test:clean_fold_records",
+        lambda: dedup_stream.fold_batch(
+            spark, docs.filter(F.col("doc_id") % 3 == 2), 2, state
+        ),
+    )
+    assert grouped and not ungrouped
+    touched = {(fn, path[len(state) + 1 :]) for fn, path, _ in calls}
+    assert {
+        ("read_record", "meta"),
+        ("read_record", "bloom"),
+        ("read_record", "alloc_hw"),
+        ("read_record", "epoch_map/epoch=2"),
+        ("write_record", "alloc_hw"),
+        ("write_record", "epoch_map/epoch=2"),
+    } <= touched
+    assert [c for c in calls if c[2]] == []
+
+
 @pytest.mark.slow
 def test_membership_bloom_skipped_on_covered_replay(spark, tmp_path):
     """A crash-rerun of a batch the bloom already covers must NOT
@@ -928,9 +968,7 @@ def test_rebuild_updated_idempotent_and_rollback(spark, tmp_path):
         _apply_updates(b0, updates)
     )
     # simulate an interrupted txn: marker + orphaned layer dirs
-    spark.createDataFrame([(99,)], "txn int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{state}/rebuild_txn")
+    write_record(spark, f"{state}/rebuild_txn", {"txn": 99})
     spark.createDataFrame(
         [(999_999, ["junk junk junk"])], "doc_id long, shingles array<string>"
     ).write.mode("overwrite").parquet(f"{state}/base/batch=99")
@@ -1164,9 +1202,7 @@ def test_apply_tombstones_refuses_pending_txn(spark, tmp_path):
     )
     state = str(tmp_path / "state")
     fold_batch(spark, docs, 0, state)
-    spark.createDataFrame([(9,)], "txn int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{state}/rebuild_txn")
+    write_record(spark, f"{state}/rebuild_txn", {"txn": 9})
     with pytest.raises(ValueError, match="pending rebuild_updated txn"):
         apply_tombstones(spark, state)
 
