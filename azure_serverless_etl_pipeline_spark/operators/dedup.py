@@ -190,6 +190,14 @@ def ngram_jaccard_pairs(
     on uniform-frequency data the prune rate is ~0 and "inverted" wins.
     The cap composes: prefix shingles above it are dropped before the
     self-join.
+
+    CACHES: the returned frame is lazy and reads the cached shingle
+    table (and, capped, the cached frequency-tagged table). They are
+    listed in ``out._owned_caches``; the caller unpersists each once it
+    has materialized every plan built on ``out`` (``dup_clusters`` is
+    eager, so after it returns), as materialize_incremental_state and
+    the dedup stream's first fold do. A caller that skips this keeps
+    corpus-sized CacheManager entries.
     """
     base = _shingle_base(df, text_col, id_col, n)
     sh = _explode_shingles(base, id_col).cache()
@@ -755,13 +763,15 @@ def ngram_jaccard_pairs_incremental(
     In a deployment ``old_docs``' shingle index is a materialized
     artifact updated per batch; here it is derived, and the derivation
     is the one extra old-corpus scan (linear, not quadratic).
+
+    The returned frame is MATERIALIZED (see ``_checkpoint_releasing``):
+    the batch shingle cache is released before return, so the caller
+    holds no CacheManager entry.
     """
     new_base = _shingle_base(new_docs, text_col, id_col, n)
     old_base = _shingle_base(old_docs, text_col, id_col, n)
-    # keep the cached handle: max_shingle_freq rebinds new_sh below, and
-    # the HANDLE is what the _owned_caches handover must release
-    cached_new_sh = _explode_shingles(new_base, id_col).cache()
-    new_sh = cached_new_sh
+    new_sh = _explode_shingles(new_base, id_col).cache()
+    owned = [new_sh]
     old_sh = _explode_shingles(old_base, id_col)
 
     if max_shingle_freq is not None:
@@ -788,6 +798,7 @@ def ngram_jaccard_pairs_incremental(
             .withColumn("keep", F.col("df") <= max_shingle_freq)
             .cache()
         )
+        owned.append(tagged)
         stats = tagged.groupBy(id_col).agg(
             F.count(F.lit(1)).alias("sz"),
             (F.count(F.lit(1)) - F.sum(F.col("keep").cast("long"))).alias(
@@ -851,9 +862,9 @@ def ngram_jaccard_pairs_incremental(
             .dropDuplicates(["id_a", "id_b"])
         )
         base = new_base.unionByName(old_base)
-        out = _verify_jaccard(cand, base, id_col, threshold)
-        out._owned_caches = [cached_new_sh, tagged]  # type: ignore[attr-defined]
-        return out
+        return _checkpoint_releasing(
+            _verify_jaccard(cand, base, id_col, threshold), owned
+        )
 
     a, b = new_sh.alias("a"), new_sh.alias("b")
     nn = (
@@ -879,13 +890,24 @@ def ngram_jaccard_pairs_incremental(
     )
     cand = nn.unionByName(no).dropDuplicates(["id_a", "id_b"])
     base = new_base.unionByName(old_base)
-    out = _verify_jaccard(cand, base, id_col, threshold)
-    # hand the cached batch frame to the consumer (incremental_dup_
-    # clusters releases _owned_caches after its eager checkpoint), so a
-    # fold through this non-indexed path leaks no CacheManager entry —
-    # same contract as ngram_jaccard_pairs_incremental_indexed
-    out._owned_caches = [cached_new_sh]  # type: ignore[attr-defined]
-    return out
+    return _checkpoint_releasing(
+        _verify_jaccard(cand, base, id_col, threshold), owned
+    )
+
+
+def _checkpoint_releasing(out: DataFrame, caches: list[DataFrame]) -> DataFrame:
+    """Execute ``out`` once (eager localCheckpoint), then unpersist the
+    batch-bounded ``caches`` it was built from, whether or not the job
+    succeeded. The result reads only checkpoint blocks, so it references
+    no cache and a long-lived session folding many batches accumulates
+    no CacheManager entries. Its few (id, id, jaccard) rows per near-dup
+    pair then feed every consumer branch without re-running candidate
+    generation and verify."""
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        for frame in caches:
+            frame.unpersist()
 
 
 def incremental_dup_clusters(
@@ -919,35 +941,18 @@ def incremental_dup_clusters(
     of star edges and iterations over the (tiny) frontier the batch
     actually perturbs.
 
-    MATERIALIZATION: the batch-bounded pair frame is eagerly
-    localCheckpoint-ed on entry — one execution of the candidate
-    generation + verify subplan, whose tiny (id, id) result blocks feed
-    the three consuming branches (without this the subplan re-executes
-    per branch, measured 2-6x). Caches a pair generator attached to its
-    frame via ``_owned_caches`` (see
-    ``ngram_jaccard_pairs_incremental_indexed``) are released
-    immediately after, so long-lived callers folding many batches in
-    one session (the dedup stream, a driver loop) accumulate no cached
-    frames — only the checkpoint blocks that back each returned map.
+    ``incremental_pairs`` should be MATERIALIZED, as both incremental
+    generators return it (``_checkpoint_releasing``): it feeds three
+    branches below (touched-id derivation, the propagation edge list,
+    the untouched anti-join), and a lazy candidate-generation + verify
+    subplan would re-execute once per branch (measured 2-6x). A
+    ``.cache()`` is no substitute: multi-branch jobs over a COLD cache
+    race its per-partition population and re-execute the subplan per
+    branch (in-session A/B medians 12.9s vs 10.3s on x117's fold), it is
+    evictable under memory pressure, and it leaves a CacheManager entry
+    behind.
     """
-    # ONE execution of the candidate-generation + verify subplan: the
-    # pair frame is batch-bounded (two long ids per near-dup pair), so
-    # eagerly checkpoint it — a single standalone job whose tiny result
-    # blocks then feed every branch below (touched-id derivation, the
-    # propagation edge list, the untouched anti-join). A .cache() here
-    # is strictly worse: multi-branch jobs over a COLD cache race its
-    # per-partition population and re-execute the whole subplan per
-    # branch (the r6 shape — in-session A/B medians 12.9s vs 10.3s on
-    # x117's fold), it is evictable under session memory pressure, and
-    # it leaks a CacheManager entry the caller must clear. The
-    # checkpoint also lets the generator's batch-frame caches (handed
-    # over via ``_owned_caches``) release immediately, so long-lived
-    # callers folding many batches accumulate nothing.
-    pairs = incremental_pairs.select("id_a", "id_b").localCheckpoint(
-        eager=True
-    )
-    for owned in getattr(incremental_pairs, "_owned_caches", ()):
-        owned.unpersist()
+    pairs = incremental_pairs.select("id_a", "id_b")
     touched = (
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
@@ -1047,111 +1052,6 @@ def materialize_incremental_state(
         owned.unpersist()
 
 
-def ngram_jaccard_pairs_incremental_indexed(
-    new_docs: DataFrame,
-    old_base: DataFrame,
-    old_shingle_df: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
-    """``ngram_jaccard_pairs_incremental`` reading MATERIALIZED old-corpus
-    state instead of re-deriving it: ``old_base`` is the persisted
-    (id, shingles) table and ``old_shingle_df`` the persisted per-shingle
-    document frequencies (see materialize_incremental_state). Identical
-    output — the union document frequency the cap filters on is
-    reconstructed as old_df - re-delivered-stale counts + new batch
-    counts (the one-shot corpus is (old \\ new) UNION new), so candidate
-    recall matches a one-shot run exactly. The only old-corpus
-    work per batch is the linear posting-list scan of ``old_base``
-    (map-side explode of stored arrays; no shuffle of the old corpus)."""
-    # The batch frame is referenced ~7x downstream (shingle join sides,
-    # re-delivery anti/semi joins, the verify base): cache it so the
-    # regex shingling and the documents scan run ONCE per micro-batch —
-    # batch-sized, same caller-clears contract as the pair-frame cache
-    # on incremental_dup_clusters.
-    new_base = _shingle_base(new_docs, text_col, id_col, n).cache()
-    new_sh = _explode_shingles(new_base, id_col).cache()
-    # keep a handle on the CACHED frame — `new_sh` is reassigned below
-    # when the frequency cap filters it, and the cache handoff must
-    # release the original cached entry, not the derived join
-    cached_new_sh = new_sh
-    # Re-delivered ids (same id in new_docs and old_base): the one-shot
-    # corpus is (old \ new) UNION new — the old copy of a re-delivered
-    # doc does not exist in it. Its stale postings must leave the
-    # candidate side AND its old shingle counts must leave the union df,
-    # or shingles near the cap get dropped that a one-shot run keeps
-    # (recall loss the "never below one-shot" contract forbids). The
-    # anti/semi joins below touch only the (tiny) new-id set.
-    new_ids = new_base.select(id_col)
-    live_old = old_base.join(new_ids, id_col, "left_anti")
-    old_sh = _explode_shingles(live_old, id_col)
-
-    if max_shingle_freq is not None:
-        new_cnt = new_sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("ndf"))
-        # per-shingle counts of the re-delivered docs' OLD copies,
-        # subtracted from the persisted df (which still includes them)
-        stale_cnt = (
-            old_base.join(new_ids, id_col, "semi")
-            .select(F.explode("shingles").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("sdf"))
-        )
-        freq = (
-            old_shingle_df.join(new_cnt, "shingle", "full_outer")
-            .join(stale_cnt, "shingle", "left")
-            .filter(
-                F.coalesce(F.col("df"), F.lit(0))
-                - F.coalesce(F.col("sdf"), F.lit(0))
-                + F.coalesce(F.col("ndf"), F.lit(0))
-                <= max_shingle_freq
-            )
-            .select("shingle")
-        )
-        new_sh = new_sh.join(freq, "shingle")
-        old_sh = old_sh.join(freq, "shingle")
-
-    a, b = new_sh.alias("a"), new_sh.alias("b")
-    nn = a.join(
-        b,
-        (F.col("a.shingle") == F.col("b.shingle"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    )
-    o = old_sh.alias("o")
-    # id_a != id_b: a doc re-delivered in a later batch (same id in both
-    # new_docs and old_base) would otherwise yield least==greatest — a
-    # degenerate self-edge the one-shot path can never produce, flowing
-    # into clustering and duplicating rows in the unioned verify base.
-    no = (
-        a.join(o, F.col("a.shingle") == F.col("o.shingle"))
-        .filter(F.col(f"a.{id_col}") != F.col(f"o.{id_col}"))
-        .select(
-            F.least(F.col(f"a.{id_col}"), F.col(f"o.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"a.{id_col}"), F.col(f"o.{id_col}")).alias("id_b"),
-        )
-    )
-    cand = nn.unionByName(no).dropDuplicates(["id_a", "id_b"])
-    # Re-delivered ids (same id in new_docs and old_base): the NEW
-    # shingle set is authoritative for verify, and the base must stay
-    # one-row-per-id — a duplicate id would fan the verify join out into
-    # duplicate pair rows, a shape the one-shot path cannot produce.
-    base = new_base.unionByName(
-        old_base.join(new_base.select(id_col), id_col, "left_anti")
-    )
-    out = _verify_jaccard(cand, base, id_col, threshold)
-    # Hand the batch-frame caches to the consumer: incremental_dup_clusters
-    # unpersists them once its eager propagation has materialized every
-    # plan that references this pair frame (closing the ADVICE leak where
-    # cached batch frames outlived the fold in long-lived sessions).
-    out._owned_caches = [new_base, cached_new_sh]  # type: ignore[attr-defined]
-    return out
-
-
 def write_bucketed_layer(
     frame: DataFrame, n_buckets: int, path: str
 ) -> None:
@@ -1241,13 +1141,19 @@ def ngram_jaccard_pairs_incremental_bucketed(
     old_base: DataFrame | None = None,
     n_buckets: int | None = None,
 ) -> DataFrame:
-    """``ngram_jaccard_pairs_incremental_indexed`` with the per-batch
-    old-corpus scans replaced by PRUNED INDEX LOOKUPS — identical output
-    (same candidates, same union document frequencies, same exact-verify
+    """``ngram_jaccard_pairs_incremental`` reading MATERIALIZED old-corpus
+    state (see materialize_incremental_state) through PRUNED INDEX
+    LOOKUPS instead of re-deriving it — identical output (same
+    candidates, same union document frequencies, same exact-verify
     rule), per-batch posting I/O bounded by the MATCH volume instead of
-    the standing corpus (the round-8 residual: SCALE.md measured the
-    batch tail growing 2.69x at a 10x corpus, entirely the map-side
-    posting scan of ``old_base``).
+    the standing corpus (the round-8 residual: SCALE.md measured a
+    full posting scan per batch growing 2.69x at a 10x corpus).
+
+    Re-delivered ids (same id in ``new_docs`` and the state): the
+    one-shot corpus is (old \\ new) UNION new, so the old copy's
+    postings leave the candidate side, its counts leave the union
+    document frequency, no id_a == id_b self-edge is emitted, and the
+    verify scores against the NEW shingle set.
 
     Lookup order is CAP-FIRST, which is what makes the capped tail
     corpus-independent for a fixed batch:
@@ -1305,6 +1211,10 @@ def ngram_jaccard_pairs_incremental_bucketed(
     single-table layout, the exact union count for per-batch tables —
     valid because the stream's first-delivery-wins guard keeps ids
     unique across layers, so no stale copy ever double-counts).
+
+    The returned frame is MATERIALIZED and every batch cache is released
+    before return (``_checkpoint_releasing``), so the caller holds no
+    CacheManager entry.
     """
     if state_dir is None and (
         postings is None or shingle_df is None or old_base is None
@@ -1313,21 +1223,6 @@ def ngram_jaccard_pairs_incremental_bucketed(
         raise ValueError(
             "pass state_dir, or all of postings/shingle_df/old_base/n_buckets"
         )
-    new_base = _shingle_base(new_docs, text_col, id_col, n).cache()
-    # sz (full per-doc shingle count) rides each exploded row: the capped
-    # branch's prune derives every per-doc stat from the shingle rows
-    # themselves (one window) instead of a separate stats frame joined
-    # back three ways — one int per cached row buys three fewer
-    # broadcast-build jobs per batch
-    new_sh = (
-        new_base.select(
-            F.col(id_col),
-            F.size("shingles").alias("sz"),
-            F.explode("shingles").alias("shingle"),
-        )
-        .withColumn("shingle_h", F.xxhash64("shingle"))
-        .cache()
-    )
     if state_dir is not None:
         # the modulus is a property of the persisted state — always read
         # the pinned value; a caller-supplied mismatch would mis-prune
@@ -1344,6 +1239,21 @@ def ngram_jaccard_pairs_incremental_bucketed(
                 f"posting_buckets={pinned} ({state_dir}/meta)"
             )
         n_buckets = pinned
+    new_base = _shingle_base(new_docs, text_col, id_col, n).cache()
+    # sz (full per-doc shingle count) rides each exploded row: the capped
+    # branch's prune derives every per-doc stat from the shingle rows
+    # themselves (one window) instead of a separate stats frame joined
+    # back three ways — one int per cached row buys three fewer
+    # broadcast-build jobs per batch
+    new_sh = (
+        new_base.select(
+            F.col(id_col),
+            F.size("shingles").alias("sz"),
+            F.explode("shingles").alias("shingle"),
+        )
+        .withColumn("shingle_h", F.xxhash64("shingle"))
+        .cache()
+    )
     bucket_of = F.pmod("shingle_h", F.lit(int(n_buckets))).cast("int")
     all_hashes = new_sh.select("shingle_h").distinct()
     # capped regime probe: at most max_in+1 rows hit the driver; None
@@ -1374,9 +1284,7 @@ def ngram_jaccard_pairs_incremental_bucketed(
 
     id_type = dict(new_docs.dtypes)[id_col]
     if hvals == []:
-        # nothing downstream references the batch frames (the output is
-        # a literal empty frame): release them NOW rather than handing
-        # them to a consumer that may never fold an empty batch
+        # the output is a literal empty frame: nothing to checkpoint
         new_sh.unpersist()
         new_base.unpersist()
         return spark.createDataFrame(
@@ -1401,7 +1309,7 @@ def ngram_jaccard_pairs_incremental_bucketed(
         # union df per BATCH shingle only (non-batch shingles generate no
         # candidates, so their cap status is irrelevant): persisted old
         # df, minus the re-delivered docs' stale counts, plus the batch
-        # counts — the indexed path's reconstruction, from pruned reads.
+        # counts, all from pruned reads.
         # The batch-id key list is capped like every other probe: a
         # large batch drives the stale-row fetch through the semi-join
         # without ever landing its ids on the driver.
@@ -1605,8 +1513,9 @@ def ngram_jaccard_pairs_incremental_bucketed(
             F.col(id_col), "shingles"
         )
     base = new_base.unionByName(old_rows)
-    out = _verify_jaccard(cand, base, id_col, threshold)
-    out._owned_caches = owned  # type: ignore[attr-defined]
+    out = _checkpoint_releasing(
+        _verify_jaccard(cand, base, id_col, threshold), owned
+    )
     # the candidate stage executes eagerly (checkpoint) before return,
     # so its pruned scans never appear in `out`'s plan — expose them for
     # the plan gate (test_plan_quality asserts the partition filter and
@@ -2080,6 +1989,12 @@ def substring_span_dedup(
     stop-gram capping / bucketing arguments as ngram_jaccard_pairs
     apply, and min_df thresholding happens in partial aggregation
     (map-side combine) before any row leaves its executor.
+
+    CACHES: the returned frame is lazy and reads two cached stages (the
+    token arrays and the positional n-grams). They are listed in
+    ``out._owned_caches``; the caller unpersists each once it has
+    materialized every plan built on ``out``. A caller that skips this
+    keeps two corpus-sized CacheManager entries.
     """
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
     # Both multiply-consumed map-side stages are cached (r14, guide
@@ -2089,11 +2004,10 @@ def substring_span_dedup(
     # the heaviest per-row expression here: n-token concat per
     # position) feeds the hot-gram aggregate AND the covered-position
     # join — two evaluations otherwise. A/B at sf0.1: 3.0 s -> 1.5 s.
-    # Handed to the caller via the ``_owned_caches`` convention (the
-    # bench/oracle harness clears caches per query); cache() spills to
-    # disk under pressure, and the alternative at 100 TB — re-running
-    # the concat chain over the corpus per consumer — is strictly
-    # worse.
+    # Handed to the caller via ``_owned_caches`` (see the docstring);
+    # cache() spills to disk under pressure, and the alternative at
+    # 100 TB — re-running the concat chain over the corpus per
+    # consumer — is strictly worse.
     base = df.select(
         F.col(id_col), F.filter(toks, lambda x: x != "").alias("t")
     ).filter(F.size("t") > 0).cache()

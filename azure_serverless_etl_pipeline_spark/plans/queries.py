@@ -2427,18 +2427,25 @@ def x97(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("cos_pos", F.round("cos_pos", 12))
 
 
+# The on-disk format of every cached query state under spark-warehouse/
+# (layouts, and the JSON records of operators.compaction.write_record).
+# Change it whenever that format changes: every kind is then rebuilt once
+# instead of being read (or refused) by newer code.
+_STATE_FORMAT = "json-records"
+
+
 def _state_dir(sf_dir: str, src_table: str, kind: str) -> str:
-    """Per-sf_dir cache dir for a materialized mining artifact (pair
-    frame, cluster map), keyed by the source file's (mtime, size) like
-    x117b's incremental state — a stale artifact can never be served
-    after the input changes."""
+    """Per-sf_dir cache dir for a materialized query state (pair frame,
+    cluster map, index), keyed by the source file's (mtime, size) — a
+    stale artifact can never be served after the input changes — and by
+    ``_STATE_FORMAT``, so state in an older format is rebuilt."""
     import os
 
     src = os.path.join(sf_dir, f"{src_table}.parquet")
     st = os.stat(src)
     tag = (
         f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}"
+        f"-{int(st.st_mtime)}-{st.st_size}-{_STATE_FORMAT}"
     )
     return os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -2755,10 +2762,10 @@ def x117(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The old-corpus map rebuild and the incremental pair mining are
     # INDEPENDENT until the final fold (the map is only consumed by
     # incremental_dup_clusters, the pairs only read old/new docs), but
-    # both are eager (dup_clusters iterates; the fold checkpoints the
-    # pair frame), so composing them serially leaves the cluster idle
-    # through each one's job tail. Submit them from two driver threads
-    # (guide §2.6 — actions are only sequential because driver code
+    # both are eager (dup_clusters iterates; the pair generator
+    # checkpoints its output), so composing them serially leaves the
+    # cluster idle through each one's job tail. Submit them from two
+    # driver threads (actions are only sequential because driver code
     # calls them sequentially); the result is the identical composition
     # of the identical operators.
     def _old_map():
@@ -2769,14 +2776,9 @@ def x117(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _inc_pairs():
         spark.sparkContext.setJobDescription("x117: incremental pair mining")
-        p = dedup.ngram_jaccard_pairs_incremental(
+        return dedup.ngram_jaccard_pairs_incremental(
             new, old, threshold=0.5, max_shingle_freq=50
         )
-        ck = p.select("id_a", "id_b").localCheckpoint(eager=True)
-        # carry the generator's cache handover to the fold, which
-        # releases it after its (now trivial) re-checkpoint
-        ck._owned_caches = getattr(p, "_owned_caches", ())
-        return ck
 
     # each target carries the caller's job group into its thread
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -4290,25 +4292,8 @@ def x123(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_state_dir(sf_dir: str) -> str:
-    """Per-sf_dir cache location for x117b's materialized old-corpus
-    artifacts, keyed by the documents file's (mtime, size) so regenerated
-    testdata invalidates the cache automatically, and by the state's
-    layout (20 posting buckets, bucketed layers, JSON ``meta/`` record)
-    so a state in an older layout is rebuilt, never read."""
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = (
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"-{int(st.st_mtime)}-{st.st_size}-b20-r9-json"
-    )
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-        "incremental_state",
-        tag,
-    )
+    """x117b's materialized old-corpus artifacts."""
+    return _state_dir(sf_dir, "documents", "incremental_state")
 
 
 @query("x117b_incremental_clusters_indexed")

@@ -648,16 +648,19 @@ def fold_batch(
     sh.unpersist()
 
     prior_maps = _batches_below(spark, map_root, batch_id)
+    # caches the one-shot generator hands over; the incremental one
+    # releases its own before it returns
+    owned = ()
     if not prior_base or not prior_maps:
         # first effective batch: the one-shot builder IS the fold
-        new_map = dup_clusters(
-            ngram_jaccard_pairs(
-                batch_df,
-                threshold=threshold,
-                n=n,
-                max_shingle_freq=max_shingle_freq,
-            )
+        pairs = ngram_jaccard_pairs(
+            batch_df,
+            threshold=threshold,
+            n=n,
+            max_shingle_freq=max_shingle_freq,
         )
+        new_map = dup_clusters(pairs)
+        owned = pairs._owned_caches
     else:
         # standing layers = every batch < k, selected by a partition
         # filter on the discovered batch column (reading the ROOT keeps
@@ -695,12 +698,11 @@ def fold_batch(
         )
         new_map = incremental_dup_clusters(old_map, inc)
     new_map.write.mode("overwrite").parquet(f"{map_root}/batch={batch_id}")
-    # The fold's operators cache batch-bounded frames (pair set, batch
-    # shingles) for within-plan reuse; a continuous stream folding
-    # thousands of batches would accumulate those catalog entries
-    # forever. The dedup stream owns its session by deployment contract,
-    # so release everything the fold pinned once its outputs are on disk.
-    spark.catalog.clearCache()
+    # release exactly what the fold pinned, once its outputs are on disk:
+    # a stream folding thousands of batches must not accumulate cache
+    # entries, and frames the caller cached in the shared session stay
+    for frame in owned:
+        frame.unpersist()
 
 
 def compact_state(
@@ -936,7 +938,7 @@ def rebuild_updated(
         shingle_df=std_df,
         old_base=std_base,
         n_buckets=posting_buckets,
-    ).localCheckpoint(eager=True)
+    )
 
     # the updated docs' LIVE rows (the copies being superseded) — both
     # the df delta and the cap-flip analysis derive from them

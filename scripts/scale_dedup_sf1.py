@@ -130,7 +130,7 @@ def run_chain(spark, docs_path: str, emb_path: str, state_root: str) -> dict:
         materialize_incremental_state,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
-        ngram_jaccard_pairs_incremental_indexed,
+        ngram_jaccard_pairs_incremental_bucketed,
     )
 
     sc = spark.sparkContext
@@ -161,13 +161,11 @@ def run_chain(spark, docs_path: str, emb_path: str, state_root: str) -> dict:
     new = docs.filter(F.col("doc_id") % 20 == 19)
     state = f"{state_root}/inc_state"
     materialize_incremental_state(old, state, threshold=0.5, max_shingle_freq=50)
-    old_base = spark.read.parquet(f"{state}/old_base")
-    old_df = spark.read.parquet(f"{state}/shingle_df")
     old_map = spark.read.parquet(f"{state}/old_map")
 
     def fold():
-        inc = ngram_jaccard_pairs_incremental_indexed(
-            new, old_base, old_df, threshold=0.5, max_shingle_freq=50
+        inc = ngram_jaccard_pairs_incremental_bucketed(
+            spark, new, state, threshold=0.5, max_shingle_freq=50
         )
         noop(incremental_dup_clusters(old_map, inc))
 

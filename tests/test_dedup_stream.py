@@ -367,6 +367,32 @@ def test_cross_batch_redelivery_first_wins_and_quarantines(spark, tmp_path):
     assert red.filter(~F.col("text").endswith("changed suffix")).count() == 0
 
 
+def test_fold_releases_only_its_own_caches(spark, tmp_path):
+    """fold_batch releases exactly what it pinned: a frame the caller
+    cached in the shared session survives a first-batch fold and an
+    incremental fold, and afterwards it is the only CacheManager
+    entry."""
+    from azure_serverless_etl_pipeline_spark.sources import load_table
+    from azure_serverless_etl_pipeline_spark.streaming.dedup_stream import (
+        fold_batch,
+    )
+    from tests.conftest import SF_ORACLE
+
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    state = str(tmp_path / "state")
+    spark.catalog.clearCache()  # isolate from other tests' entries
+    mine = docs.filter(F.col("doc_id") % 7 == 0).cache()
+    mine.createOrReplaceTempView("caller_cached_docs")
+    mine.count()
+    for b in (0, 1):  # first-batch fold, then an incremental fold
+        fold_batch(spark, docs.filter(F.col("doc_id") % 2 == b), b, state)
+        assert spark.catalog.isCached("caller_cached_docs"), f"batch {b}"
+    mine.unpersist(blocking=True)
+    spark.catalog.dropTempView("caller_cached_docs")
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_mgr.isEmpty(), "fold left its own caches behind"
+
+
 def test_fully_redelivered_batch_is_a_noop_fold(spark, tmp_path):
     """A later file consisting ENTIRELY of already-seen ids must fold
     to a no-op: map unchanged, base unchanged, every row quarantined."""

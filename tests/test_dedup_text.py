@@ -526,16 +526,19 @@ def test_incremental_bridge_merges_old_clusters(spark):
 
 
 def test_incremental_indexed_equals_derived(spark, tmp_path):
-    """The materialized-state tail (x117b's path) must produce exactly the
-    derived-state output: same incremental pairs, same merged clusters,
-    with the old corpus read only from its persisted artifacts."""
+    """The materialized-state tail (x117b's path, the bucketed posting
+    index) must produce exactly the derived-state output: same
+    incremental pairs, same merged clusters, with the old corpus read
+    only from its persisted artifacts."""
     from pyspark.sql import functions as F
 
     from azure_serverless_etl_pipeline_spark.operators.dedup import (
+        dup_clusters,
         incremental_dup_clusters,
         materialize_incremental_state,
+        ngram_jaccard_pairs,
         ngram_jaccard_pairs_incremental,
-        ngram_jaccard_pairs_incremental_indexed,
+        ngram_jaccard_pairs_incremental_bucketed,
     )
     from azure_serverless_etl_pipeline_spark.sources import load_table
     from tests.conftest import SF_ORACLE
@@ -546,79 +549,31 @@ def test_incremental_indexed_equals_derived(spark, tmp_path):
     state = str(tmp_path / "state")
     materialize_incremental_state(old, state, threshold=0.5, max_shingle_freq=50)
 
-    old_base = spark.read.parquet(f"{state}/old_base")
-    old_df = spark.read.parquet(f"{state}/shingle_df")
-    got = ngram_jaccard_pairs_incremental_indexed(
-        new, old_base, old_df, threshold=0.5, max_shingle_freq=50
-    ).toPandas()
+    got = ngram_jaccard_pairs_incremental_bucketed(
+        spark, new, state, threshold=0.5, max_shingle_freq=50
+    )
     want = ngram_jaccard_pairs_incremental(
         new, old, threshold=0.5, max_shingle_freq=50
     ).toPandas()
     key = lambda df: sorted(map(tuple, df[["id_a", "id_b", "jaccard"]].values.tolist()))
-    assert key(got) == key(want)
+    assert key(got.toPandas()) == key(want)
 
-    old_map = spark.read.parquet(f"{state}/old_map")
     merged = incremental_dup_clusters(
-        old_map,
-        ngram_jaccard_pairs_incremental_indexed(
-            new, old_base, old_df, threshold=0.5, max_shingle_freq=50
-        ),
+        spark.read.parquet(f"{state}/old_map"), got
     ).toPandas()
-    from azure_serverless_etl_pipeline_spark.operators.dedup import (
-        dup_clusters,
-        ngram_jaccard_pairs,
-    )
-
     full = dup_clusters(ngram_jaccard_pairs(docs, threshold=0.5)).toPandas()
     got_map = dict(zip(merged["doc_id"], merged["cluster_id"]))
     want_map = dict(zip(full["doc_id"], full["cluster_id"]))
     assert got_map == want_map
 
 
-def test_incremental_fold_releases_its_caches(spark, tmp_path):
-    """The fold caches the pair frame + the batch shingle frames for the
-    duration of the propagation, then must RELEASE them before returning
-    (ADVICE r6): a long-lived session folding many batches must not
-    accumulate cached frames. Asserted against the SQL CacheManager —
-    localCheckpoint blocks are lifecycle-bound results, not leaks."""
-    from pyspark.sql import functions as F
-
-    from azure_serverless_etl_pipeline_spark.operators.dedup import (
-        incremental_dup_clusters,
-        materialize_incremental_state,
-        ngram_jaccard_pairs_incremental_indexed,
-    )
-    from azure_serverless_etl_pipeline_spark.sources import load_table
-    from tests.conftest import SF_ORACLE
-
-    spark.catalog.clearCache()  # isolate from other tests' entries
-    docs = load_table(spark, SF_ORACLE, "documents")
-    old = docs.filter(F.col("doc_id") % 2 == 0)
-    new = docs.filter(F.col("doc_id") % 2 == 1)
-    state = str(tmp_path / "state")
-    materialize_incremental_state(old, state, threshold=0.5, max_shingle_freq=50)
-    merged = incremental_dup_clusters(
-        spark.read.parquet(f"{state}/old_map"),
-        ngram_jaccard_pairs_incremental_indexed(
-            new,
-            spark.read.parquet(f"{state}/old_base"),
-            spark.read.parquet(f"{state}/shingle_df"),
-            threshold=0.5,
-            max_shingle_freq=50,
-        ),
-    )
-    assert merged.count() > 0  # materialize the returned plan
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    assert cache_mgr.isEmpty(), "fold leaked cached DataFrames"
-
-
 def test_incremental_fold_nonindexed_path_releases_its_caches(spark):
-    """Same cache-emptiness contract for the NON-indexed arrival path
+    """Cache-emptiness contract for the derived-state arrival path
     (ADVICE r7): ngram_jaccard_pairs_incremental caches its batch
-    shingle frame and must hand it over via _owned_caches so
-    incremental_dup_clusters releases it — with and without the
-    max_shingle_freq cap (the cap rebinds the frame; the handover must
-    release the cached HANDLE, not the rebound plan)."""
+    shingle frames, with and without the max_shingle_freq cap, and
+    releases them itself — the SQL CacheManager is empty as soon as the
+    generator returns, before any fold, and still empty after the fold
+    (localCheckpoint blocks are lifecycle-bound results, not leaks)."""
     from pyspark.sql import functions as F
 
     from azure_serverless_etl_pipeline_spark.operators.dedup import (
@@ -634,30 +589,28 @@ def test_incremental_fold_nonindexed_path_releases_its_caches(spark):
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     old_map = dup_clusters(ngram_jaccard_pairs(old, threshold=0.5))
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     for cap in (None, 50):
         spark.catalog.clearCache()  # isolate from other tests' entries
-        merged = incremental_dup_clusters(
-            old_map,
-            ngram_jaccard_pairs_incremental(
-                new, old, threshold=0.5, max_shingle_freq=cap
-            ),
+        pairs = ngram_jaccard_pairs_incremental(
+            new, old, threshold=0.5, max_shingle_freq=cap
         )
+        assert cache_mgr.isEmpty(), f"generator leaked caches (cap={cap})"
+        merged = incremental_dup_clusters(old_map, pairs)
         assert merged.count() > 0  # materialize the returned plan
-        cache_mgr = spark._jsparkSession.sharedState().cacheManager()
         assert cache_mgr.isEmpty(), f"fold leaked caches (cap={cap})"
 
 
-def test_incremental_indexed_redelivered_id_no_self_edges(spark):
-    """A doc_id present in BOTH the new batch and the old base (an
-    updated/re-delivered document) must not create a degenerate
+def test_incremental_indexed_redelivered_id_no_self_edges(spark, tmp_path):
+    """A doc_id present in BOTH the new batch and the materialized state
+    (an updated/re-delivered document) must not create a degenerate
     id_a == id_b self-edge, and the verify must score against the NEW
     shingle set — the one-shot path can produce neither shape."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from azure_serverless_etl_pipeline_spark.operators.dedup import (
-        ngram_jaccard_pairs_incremental_indexed,
-        word_shingles,
+        materialize_incremental_state,
+        ngram_jaccard_pairs_incremental_bucketed,
     )
 
     old_docs = spark.createDataFrame(
@@ -671,13 +624,9 @@ def test_incremental_indexed_redelivered_id_no_self_edges(spark):
             }
         )
     )
-    old_base = old_docs.select(
-        F.col("doc_id"), word_shingles(F.col("text"), 3).alias("shingles")
-    )
-    old_df = (
-        old_base.select(F.explode("shingles").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
+    state = str(tmp_path / "state")
+    materialize_incremental_state(
+        old_docs, state, threshold=0.5, posting_buckets=4
     )
     # doc 1 re-delivered with updated text that still overlaps its old
     # shingles; doc 3 is a near-dup of the NEW text only
@@ -692,8 +641,8 @@ def test_incremental_indexed_redelivered_id_no_self_edges(spark):
             }
         )
     )
-    out = ngram_jaccard_pairs_incremental_indexed(
-        new, old_base, old_df, threshold=0.5
+    out = ngram_jaccard_pairs_incremental_bucketed(
+        spark, new, state, threshold=0.5
     ).toPandas()
     assert (out["id_a"] != out["id_b"]).all()
     # exact duplicate of the NEW text for doc 1 -> jaccard 1.0; against
@@ -777,68 +726,6 @@ def test_minhash_calibrated_geometry_recall(spark):
     )
     assert got <= truth
     assert len(got) >= 0.9 * len(truth), (len(got), len(truth))
-
-
-def test_incremental_indexed_redelivered_df_matches_oneshot(spark):
-    """The cap's union document frequency must be computed over the
-    one-shot corpus (old MINUS re-delivered stale copies UNION new):
-    a shingle sitting exactly at the cap must survive when the stale
-    copy of a re-delivered doc would otherwise push it over (old_df +
-    new_count double-counts the doc and silently drops the shingle,
-    losing a pair the one-shot run finds)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from azure_serverless_etl_pipeline_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_incremental_indexed,
-        word_shingles,
-    )
-
-    shared = "alpha beta gamma delta epsilon zeta"
-    filler = "one two three four five six"
-    # cap = 3. Shingle set of `shared` appears in: old doc 1 (stale,
-    # re-delivered), old doc 2, new doc 1 (update, keeps the text), new
-    # doc 3. One-shot corpus = {1(new), 2, 3}: df = 3 == cap -> kept.
-    # Double-counting the stale copy gives df = 4 > cap -> dropped.
-    old_docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 9], "text": [shared, shared, filler]})
-    )
-    old_base = old_docs.select(
-        F.col("doc_id"), word_shingles(F.col("text"), 3).alias("shingles")
-    )
-    old_df = (
-        old_base.select(F.explode("shingles").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    new = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 3], "text": [shared, shared]})
-    )
-    got = (
-        ngram_jaccard_pairs_incremental_indexed(
-            new, old_base, old_df, threshold=0.5, max_shingle_freq=3
-        )
-        .toPandas()
-        .sort_values(["id_a", "id_b"], ignore_index=True)
-    )
-    # one-shot truth over the updated corpus with the same cap
-    oneshot_docs = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": [1, 2, 9, 3], "text": [shared, shared, filler, shared]}
-        )
-    )
-    want = (
-        ngram_jaccard_pairs(oneshot_docs, threshold=0.5, max_shingle_freq=3)
-        .toPandas()
-        .sort_values(["id_a", "id_b"], ignore_index=True)
-    )
-    # incremental emits only pairs touching the new batch; every want
-    # pair here touches doc 1 or 3
-    assert set(map(tuple, got[["id_a", "id_b"]].values)) == set(
-        map(tuple, want[["id_a", "id_b"]].values)
-    ) == {(1, 2), (1, 3), (2, 3)}
-
 
 
 @pytest.mark.slow
@@ -937,8 +824,9 @@ def test_incremental_bucketed_redelivered_matches_oneshot(spark, tmp_path):
     must leave the candidate side via the pruned anti-join, the union
     document frequency must match the one-shot corpus (stale counts
     subtracted from the PERSISTED per-shingle table), and the verify
-    must score against the NEW shingle set — the same at-the-cap
-    scenario the indexed path pins, now against on-disk state."""
+    must score against the NEW shingle set. A shingle sits exactly at
+    the cap in the one-shot corpus; double-counting the stale copy would
+    push it over and lose pairs the one-shot run finds."""
     import pandas as pd
 
     from azure_serverless_etl_pipeline_spark.operators.dedup import (
@@ -978,9 +866,9 @@ def test_incremental_bucketed_redelivered_matches_oneshot(spark, tmp_path):
 
 def test_incremental_bucketed_empty_batch_and_cache_release(spark, tmp_path):
     """An empty arriving batch returns an empty, correctly-typed pair
-    frame; a folded batch releases every cached frame it pinned (the
-    same CacheManager-emptiness contract as the other two arrival
-    paths)."""
+    frame; the generator releases every cached frame it pinned before
+    it returns (the CacheManager is empty before any fold) and the fold
+    pins none (the same contract as the derived-state arrival path)."""
     from pyspark.sql import functions as F
 
     from azure_serverless_etl_pipeline_spark.operators.dedup import (
@@ -998,25 +886,27 @@ def test_incremental_bucketed_empty_batch_and_cache_release(spark, tmp_path):
     materialize_incremental_state(
         old, state, threshold=0.5, max_shingle_freq=50, posting_buckets=16
     )
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     empty = docs.filter(F.lit(False))
     out = ngram_jaccard_pairs_incremental_bucketed(
         spark, empty, state, threshold=0.5, max_shingle_freq=50
     )
+    assert cache_mgr.isEmpty(), "empty-batch generator leaked caches"
     assert out.columns == ["id_a", "id_b", "jaccard"]
     assert out.count() == 0
 
+    pairs = ngram_jaccard_pairs_incremental_bucketed(
+        spark,
+        docs.filter(F.col("doc_id") % 2 == 1),
+        state,
+        threshold=0.5,
+        max_shingle_freq=50,
+    )
+    assert cache_mgr.isEmpty(), "bucketed generator leaked caches"
     merged = incremental_dup_clusters(
-        spark.read.parquet(f"{state}/old_map"),
-        ngram_jaccard_pairs_incremental_bucketed(
-            spark,
-            docs.filter(F.col("doc_id") % 2 == 1),
-            state,
-            threshold=0.5,
-            max_shingle_freq=50,
-        ),
+        spark.read.parquet(f"{state}/old_map"), pairs
     )
     assert merged.count() > 0
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     assert cache_mgr.isEmpty(), "bucketed fold leaked cached DataFrames"
 
 

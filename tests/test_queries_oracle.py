@@ -94,6 +94,36 @@ def test_every_oracle_has_query():
     assert not missing, f"oracles without queries: {missing}"
 
 
+def test_state_format_keys_every_cached_state_kind(monkeypatch):
+    """Every cached query state (each ``_state_dir`` kind, x117b's
+    incremental state included) is keyed by the module's state-format
+    tag: two tags give two directories, so a format change rebuilds
+    every kind instead of reading state an older format wrote."""
+    import ast
+    import inspect
+
+    from azure_serverless_etl_pipeline_spark.plans import queries as q
+
+    calls = [
+        node
+        for node in ast.walk(ast.parse(inspect.getsource(q)))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_state_dir"
+    ]
+    kinds = {(c.args[1].value, c.args[2].value) for c in calls}
+    assert ("documents", "incremental_state") in kinds
+    assert len(kinds) >= 10, kinds
+    for src_table, kind in sorted(kinds):
+        monkeypatch.setattr(q, "_STATE_FORMAT", "fmt-a")
+        a = q._state_dir(SF_ORACLE, src_table, kind)
+        monkeypatch.setattr(q, "_STATE_FORMAT", "fmt-b")
+        b = q._state_dir(SF_ORACLE, src_table, kind)
+        assert a != b, kind
+    assert q._incremental_state_dir(SF_ORACLE) == q._state_dir(
+        SF_ORACLE, "documents", "incremental_state"
+    )
+
+
 # Round-5 exception list (VERDICT r4 item 1): the six rows-only queries
 # rotated INTO the window so the driver's row-count signal covers them —
 # the only registry entries that had never earned any driver row. Every
