@@ -46,8 +46,8 @@ def histogram_drift(
     )
     counts = binned.groupBy("slice", "bin").agg(F.count(F.lit(1)).alias("c"))
     # All downstream frames derive from this reduced (|slices| x |bins|)
-    # table; cache it so the corpus is scanned exactly once.
-    counts = counts.cache()
+    # table; checkpoint it so the corpus is scanned exactly once.
+    counts = counts.localCheckpoint(eager=True)
 
     slice_tot = counts.groupBy("slice").agg(F.sum("c").alias("n_slice"))
     glob = counts.groupBy("bin").agg(F.sum("c").alias("g"))

@@ -106,12 +106,11 @@ def _log_ratios_from_counts(
         F.coalesce("c_t", F.lit(0)).alias("c_t"),
         F.coalesce("c_r", F.lit(0)).alias("c_r"),
     )
-    # Cache the (<= n_buckets)-row bucket table: the totals row below is
-    # derived FROM it, so without the cache each corpus would be scanned
-    # twice. The token totals are just the column sums of this table —
-    # no extra corpus pass, and everything stays in one distributed plan
-    # (no driver action).
-    joined = joined.cache()
+    # Checkpoint the (<= n_buckets)-row bucket table: the totals row below
+    # is derived FROM it, so unstaged each corpus would be scanned twice.
+    # The token totals are just the column sums of this table — no extra
+    # corpus pass.
+    joined = joined.localCheckpoint(eager=True)
     tot = joined.agg(
         F.sum("c_t").alias("tot_t"), F.sum("c_r").alias("tot_r")
     )

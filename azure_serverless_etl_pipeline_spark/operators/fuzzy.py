@@ -86,7 +86,7 @@ def fuzzy_pairs(
         F.col(id_col).alias("id"), normalized_key(F.col(text_col), key_len).alias("key")
     ).withColumn("len", F.length("key"))
     # Read by the gram stream, both verify sides, and the short block.
-    keyed = keyed.cache()
+    keyed = keyed.localCheckpoint(eager=True)
 
     # --- long-long path: rare-gram prefix filter + verify ---------------
     # Gram OCCURRENCES (gram, j): j numbers repeats so the occurrence set
@@ -106,8 +106,8 @@ def fuzzy_pairs(
     gfreq = occ.groupBy("gram").agg(F.count(F.lit(1)).alias("gf"))
     # Canonical global order: rarest first; ties by gram text then
     # occurrence index. Keep each doc's first d*q + 1 occurrence-elements.
-    # Cached: the self-join below reads it from BOTH sides, and it is the
-    # reduced prefix stream ((d*q + 1) rows per doc), not the corpus.
+    # Checkpointed: the self-join below reads it from BOTH sides, and it is
+    # the reduced prefix stream ((d*q + 1) rows per doc), not the corpus.
     pref = (
         occ.join(gfreq, "gram")
         .withColumn(
@@ -118,7 +118,7 @@ def fuzzy_pairs(
         )
         .where(F.col("r") <= prefix_len)
         .select("id", "len", "gram", "j")
-        .cache()
+        .localCheckpoint(eager=True)
     )
     cand = (
         pref.alias("pa")

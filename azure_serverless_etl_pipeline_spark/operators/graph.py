@@ -30,7 +30,7 @@ Scale shape: the rank frame is |nodes| rows and the per-iteration work
 is one edges-ranks equi-join + one dst-keyed aggregate. Edges join on
 src and aggregate on dst every iteration, so at scale the edge list is
 stored twice (bucketed by src and by dst) to make the loop
-exchange-free; here the edge frame is cached once (read every
+exchange-free; here the edge frame is checkpointed once (read every
 iteration) and lineage is truncated with localCheckpoint every few
 rounds (same guard as dedup.dup_clusters — an unbounded iterative plan
 otherwise re-analyzes O(iterations) operators per step).
@@ -65,7 +65,7 @@ def pagerank(
     rev = pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
     edges = fwd.unionByName(rev)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges = edges.join(outdeg, "src").cache()
+    edges = edges.join(outdeg, "src").localCheckpoint(eager=True)
 
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n_row = nodes.agg(F.count(F.lit(1)).alias("n"))

@@ -135,8 +135,8 @@ def session_concurrency(
     sess = sessions_with_timeout(events, gap_minutes, timeout_minutes)
     # The session table is re-read from both sides of the self-join and
     # again for the final left join; it is the reduced (one row per
-    # session) frame, so cache it rather than re-running the window.
-    sess = sess.cache()
+    # session) frame, so checkpoint it rather than re-running the window.
+    sess = sess.localCheckpoint(eager=True)
     pairs = interval_overlap_pairs(sess, bin_minutes)
     # Each unordered pair increments BOTH endpoints' counts. Explode the
     # two orientations out of ONE pass over the join output — the

@@ -149,10 +149,10 @@ def mixture_sample(
         f"{strata_col} string, target_w double",
     )
     counts = df.groupBy(strata_col).agg(F.count("*").alias("n_source"))
-    # cache the <=|sources|-row frame: both the scale aggregate and the
-    # rate projection read it, and without the cache each branch re-scans
-    # the full corpus to recount — two extra 100 TB scans
-    j = counts.join(F.broadcast(tdf), strata_col).cache()
+    # checkpoint the <=|sources|-row frame: both the scale aggregate and
+    # the rate projection read it, and unstaged each branch re-scans the
+    # full corpus to recount — two extra 100 TB scans
+    j = counts.join(F.broadcast(tdf), strata_col).localCheckpoint(eager=True)
     scale = j.agg(F.min(F.col("n_source") / F.col("target_w")).alias("scale"))
     rates = j.join(F.broadcast(scale)).select(
         strata_col,

@@ -2555,10 +2555,10 @@ def x121(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "session_id", "event_type")
         .distinct()
-        # feeds three branches (total, per-type, pair join); cache so the
-        # sessionize window runs once. The session total stays a 1-row
-        # FRAME (broadcast cross join) — no driver-side count().
-        .cache()
+        # feeds three branches (total, per-type, pair join); checkpoint so
+        # the sessionize window runs once. The session total stays a
+        # 1-row FRAME (broadcast cross join) — no driver-side count().
+        .localCheckpoint(eager=True)
     )
     ns = (
         st.select("user_id", "session_id")
@@ -2615,12 +2615,12 @@ def x120(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells) — the drift-dependence diagnostic x90 complements."""
     docs = load_table(spark, sf_dir, "documents")
     # the cell frame is KB-bounded but feeds four branches (margins,
-    # total, grid, observed): cache it so the corpus scans once — the
-    # standard chi2 includes EMPTY grid cells ((0-e)^2/e = e), so the
-    # full margins cross-product is rebuilt and left-joined
+    # total, grid, observed): checkpoint it so the corpus scans once —
+    # the standard chi2 includes EMPTY grid cells ((0-e)^2/e = e), so
+    # the full margins cross-product is rebuilt and left-joined
     cells = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("o")
-    ).cache()
+    ).localCheckpoint(eager=True)
     srcs = cells.groupBy("source").agg(F.sum("o").alias("rm"))
     lngs = cells.groupBy("lang").agg(F.sum("o").alias("cm"))
     tot = cells.agg(F.sum("o").alias("n"))

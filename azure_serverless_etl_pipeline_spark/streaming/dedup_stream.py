@@ -82,6 +82,7 @@ from ..operators.compaction import read_record, write_record
 from ..operators.dedup import (
     _pinned_buckets,
     _shingle_base,
+    cache_scope,
     dup_clusters,
     incremental_dup_clusters,
     ngram_jaccard_pairs,
@@ -638,19 +639,16 @@ def fold_batch(
     # source of truth for hash/modulus/sort — reader correctness depends
     # on every writer agreeing exactly); sh is cached so the two layer
     # writes pay one explode, not two
-    sh = base.select(
-        F.col("doc_id"), F.explode("shingles").alias("shingle")
-    ).cache()
-    write_bucketed_layer(
-        sh, posting_buckets, f"{post_root}/batch={batch_id}"
-    )
-    write_bucketed_df(sh, posting_buckets, f"{df_root}/batch={batch_id}")
-    sh.unpersist()
+    with cache_scope() as cache:
+        sh = cache(
+            base.select(F.col("doc_id"), F.explode("shingles").alias("shingle"))
+        )
+        write_bucketed_layer(
+            sh, posting_buckets, f"{post_root}/batch={batch_id}"
+        )
+        write_bucketed_df(sh, posting_buckets, f"{df_root}/batch={batch_id}")
 
     prior_maps = _batches_below(spark, map_root, batch_id)
-    # caches the one-shot generator hands over; the incremental one
-    # releases its own before it returns
-    owned = ()
     if not prior_base or not prior_maps:
         # first effective batch: the one-shot builder IS the fold
         pairs = ngram_jaccard_pairs(
@@ -660,7 +658,6 @@ def fold_batch(
             max_shingle_freq=max_shingle_freq,
         )
         new_map = dup_clusters(pairs)
-        owned = pairs._owned_caches
     else:
         # standing layers = every batch < k, selected by a partition
         # filter on the discovered batch column (reading the ROOT keeps
@@ -698,11 +695,6 @@ def fold_batch(
         )
         new_map = incremental_dup_clusters(old_map, inc)
     new_map.write.mode("overwrite").parquet(f"{map_root}/batch={batch_id}")
-    # release exactly what the fold pinned, once its outputs are on disk:
-    # a stream folding thousands of batches must not accumulate cache
-    # entries, and frames the caller cached in the shared session stay
-    for frame in owned:
-        frame.unpersist()
 
 
 def compact_state(
@@ -1168,7 +1160,6 @@ def rebuild_updated(
     for _b, p in red_layers:
         fs2, jp2 = _fs_path(spark, p)
         fs2.delete(jp2, True)
-    spark.catalog.clearCache()
     return {
         "updated": int(n_updated),
         "affected_clusters": int(n_aff),
@@ -1258,7 +1249,6 @@ def apply_tombstones(spark: SparkSession, state_dir: str) -> dict:
             rewritten += 1
     fs, jp = _fs_path(spark, f"{state_dir}/tombstones")
     fs.delete(jp, True)
-    spark.catalog.clearCache()
     return {"tombstoned_ids": int(n_ids), "layers_rewritten": rewritten}
 
 

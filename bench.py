@@ -329,13 +329,12 @@ def main() -> None:
         except Exception as e:  # one broken query must not sink the bench
             errors[name] = f"{type(e).__name__}: {e}"[:200]
         finally:
-            # Isolate queries: cached frames are keyed by logical plan and
-            # survive across queries, so a 65-query session accumulates
-            # them until the storage memory manager starts evicting —
-            # which made cache-using queries' medians depend on session
-            # history (r3: x22 2.4x slower on unchanged code). Each query
-            # still benefits from its own warm-up-built cache during its
-            # timed runs.
+            # Isolate measurements: operators release their own cached
+            # stages, so every timed run pays its full per-call cost (no
+            # run reuses a cache another run built); clearing anything
+            # left over keeps one query's state out of the next query's
+            # timings (r3: x22 2.4x slower on unchanged code when a
+            # session accumulated cached frames).
             spark.catalog.clearCache()
             # ...and drain ASYNC cleanup before the next query's timed
             # window: unpersist is non-blocking and ContextCleaner frees

@@ -2,7 +2,10 @@
 """Drive the driver contract locally (the /verify recipe): entry() smoke
 check, then every queries() entry vs its oracle_sql() in DuckDB at sf0.01
 (row count + sorted-column schema + exact values, float-exact like the
-driver). Exit 0 only if every oracle-backed query matches.
+driver). A query that leaves a CacheManager entry behind counts as a
+mismatch ("cache left behind"): operators release their own cached
+stages. Exit 0 only if every oracle-backed query matches and no query
+leaves a cache.
 
 Usage: python scripts/verify_contract.py [sf_dir]
 """
@@ -52,11 +55,15 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     qs, osql = mod.queries(), mod.oracle_sql()
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     bad: list[tuple[str, str]] = []
     t0 = time.time()
     for name, fn in qs.items():
+        spark.catalog.clearCache()
         try:
             sdf = fn(spark, sf).toPandas()
+            if not cache_mgr.isEmpty():
+                bad.append((name, "cache left behind"))
             if name not in osql:
                 continue
             odf = con.execute(osql[name]).df()

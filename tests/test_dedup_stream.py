@@ -393,6 +393,40 @@ def test_fold_releases_only_its_own_caches(spark, tmp_path):
     assert cache_mgr.isEmpty(), "fold left its own caches behind"
 
 
+def test_rebuild_and_tombstones_keep_the_callers_caches(spark, tmp_path):
+    """rebuild_updated and apply_tombstones release only what they
+    cached: a frame the caller cached in the shared session survives
+    each call, and afterwards it is the only CacheManager entry."""
+    from azure_serverless_etl_pipeline_spark.sources import load_table
+    from azure_serverless_etl_pipeline_spark.streaming.dedup_stream import (
+        apply_tombstones,
+        fold_batch,
+        rebuild_updated,
+    )
+    from tests.conftest import SF_ORACLE
+
+    docs = load_table(spark, SF_ORACLE, "documents").select("doc_id", "text")
+    state = str(tmp_path / "state")
+    b0 = docs.filter(F.col("doc_id") % 2 == 0)
+    fold_batch(spark, b0, 0, state)
+    updates = b0.filter(F.col("doc_id") % 4 == 0).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" an entirely new suffix"))
+    )
+    fold_batch(spark, updates, 1, state)
+    spark.catalog.clearCache()  # isolate from other tests' entries
+    mine = docs.filter(F.col("doc_id") % 7 == 0).cache()
+    mine.createOrReplaceTempView("caller_cached_docs")
+    mine.count()
+    assert rebuild_updated(spark, state)["updated"] == updates.count()
+    assert spark.catalog.isCached("caller_cached_docs"), "rebuild_updated"
+    assert apply_tombstones(spark, state)["layers_rewritten"] >= 2
+    assert spark.catalog.isCached("caller_cached_docs"), "apply_tombstones"
+    mine.unpersist(blocking=True)
+    spark.catalog.dropTempView("caller_cached_docs")
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_mgr.isEmpty(), "rebuild or tombstone pass left caches behind"
+
+
 def test_fully_redelivered_batch_is_a_noop_fold(spark, tmp_path):
     """A later file consisting ENTIRELY of already-seen ids must fold
     to a no-op: map unchanged, base unchanged, every row quarantined."""

@@ -910,6 +910,37 @@ def test_incremental_bucketed_empty_batch_and_cache_release(spark, tmp_path):
     assert cache_mgr.isEmpty(), "bucketed fold leaked cached DataFrames"
 
 
+def test_incremental_bucketed_failure_releases_its_caches(
+    spark, tmp_path, monkeypatch
+):
+    """An eager job that fails inside the bucketed generator (here the
+    first capped-key probe, which runs right after the batch caches are
+    pinned) still releases every cache the generator took."""
+    from azure_serverless_etl_pipeline_spark.operators import dedup
+    from azure_serverless_etl_pipeline_spark.sources import load_table
+    from tests.conftest import SF_ORACLE
+
+    docs = load_table(spark, SF_ORACLE, "documents")
+    state = str(tmp_path / "state")
+    dedup.materialize_incremental_state(
+        docs.filter(F.col("doc_id") % 2 == 0), state, threshold=0.5,
+        max_shingle_freq=50, posting_buckets=16,
+    )
+    spark.catalog.clearCache()  # isolate from other tests' entries
+
+    def failing_probe(key_frame, max_in):
+        raise RuntimeError("probe job failed")
+
+    monkeypatch.setattr(dedup, "_capped_keys", failing_probe)
+    with pytest.raises(RuntimeError, match="probe job failed"):
+        dedup.ngram_jaccard_pairs_incremental_bucketed(
+            spark, docs.filter(F.col("doc_id") % 2 == 1), state,
+            threshold=0.5, max_shingle_freq=50,
+        )
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_mgr.isEmpty(), "failed generator left its caches behind"
+
+
 def test_incremental_bucketed_all_shingles_over_cap(spark, tmp_path):
     """When every batch shingle exceeds the cap, the capped lookup set
     is empty: no posting may be read (the cap-first ordering's promise)

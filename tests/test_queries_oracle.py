@@ -53,6 +53,13 @@ def _assert_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str):
         assert ok, f"{name}: column {c} differs\nspark:\n{sv.head(20)}\nduck:\n{dv.head(20)}"
 
 
+def _assert_no_cache_left(spark, name: str):
+    """Operators release their own cached stages: a registry query leaves
+    no CacheManager entry once it has run."""
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_mgr.isEmpty(), f"{name}: cached stage left behind"
+
+
 def _oracle_names():
     from azure_serverless_etl_pipeline_spark.plans import all_oracles_full
 
@@ -82,7 +89,9 @@ _SLOW_ORACLES = {
 def test_query_matches_oracle(spark, duck, name):
     from azure_serverless_etl_pipeline_spark.plans import all_oracles_full, all_queries
 
+    spark.catalog.clearCache()  # isolate from other tests' entries
     sdf = all_queries()[name](spark, SF_ORACLE).toPandas()
+    _assert_no_cache_left(spark, name)
     ddf = duck.execute(all_oracles_full()[name]).df()
     _assert_match(sdf, ddf, name)
 
@@ -208,12 +217,14 @@ def test_rows_only_queries_run(spark):
 def test_all_queries_run_at_smallest_scale(spark):
     """Every registry query must execute at sf0.001 (tiny/empty-partition
     edge cases: empty new-batch in x45, <k neighbors in ANN, single-row
-    groups) and return a stable schema."""
+    groups) and return a stable schema, leaving no cached stage behind."""
     from azure_serverless_etl_pipeline_spark.plans import all_queries
 
     sf = "/root/testdata/sf0.001"
     for name, fn in sorted(all_queries().items()):
+        spark.catalog.clearCache()
         df = fn(spark, sf)
         n = df.count()
         assert n >= 0, name
         assert len(df.columns) > 0, name
+        _assert_no_cache_left(spark, name)
