@@ -7,10 +7,11 @@ builds that column the way a production vector store does:
    distributed) on the embedding corpus, assign every vector its nearest
    centroid cell, and write the corpus ``partitionBy(cell)`` so a probe
    touches only its cells' files.
-2. ``probe_ivf``: assign each query to its ``nprobe`` nearest centroids
-   (broadcast-codebook crossJoin + per-query window — fully distributed,
-   no query collect), scan only those cells, score cosine, top-k per
-   query.
+2. ``probe_ivf``: collect the bounded query set once, route each query
+   to its ``nprobe`` nearest centroids on the driver (similarity._route),
+   scan only those cells (a static ``cell IN (...)`` partition filter)
+   and score them with the block scorer (similarity._block_topk), top-k
+   per query.
 
 Recall/cost trade is the standard IVF curve: nprobe cells of ~|corpus|/k
 vectors each, vs the full corpus for brute force.
@@ -29,7 +30,13 @@ from pyspark.sql import functions as F
 
 from ..functions import dot
 from .compaction import read_record, write_record
-from .similarity import _cos_pair, _prepped, exact_cos_matrix
+from .similarity import (
+    _block_topk,
+    _collect_queries,
+    _route,
+    _routes,
+    _scan,
+)
 
 _SEED = 42
 
@@ -76,43 +83,22 @@ def probe_ivf(
 ) -> DataFrame:
     """Top-k cosine within each query's nprobe nearest cells.
 
-    Query->cell assignment is DISTRIBUTED: the tiny codebook (k rows)
-    broadcasts, each query row cross-joins it map-side, and a per-query
-    window keeps the nprobe nearest centroids — no collect() of the
-    query frame, so probing scales to query *streams*, not just ad-hoc
-    sets. The (query, cell) probe list then joins the cell-partitioned
-    corpus — partition pruning does the rest when the index is read from
-    its partitionBy(cell) layout.
+    The bounded query set is collected once and routed on the driver, as
+    ``search_ivfpq`` routes: each query's ``nprobe`` nearest centroids by
+    (cosine desc, cell asc). The probed cells land as a static
+    ``cell IN (...)`` filter, which prunes the partitionBy(cell) layout
+    to their files (also through load_live_index's union), and the block
+    scorer scores each cell's rows against the queries routed to it.
+    Degenerate queries behave as on every scorer path (similarity).
     """
-    spark = indexed.sparkSession
-    cent = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cent_vec array<double>",
-    ).withColumn("cent_vec_nrm", F.sqrt(dot(F.col("cent_vec"), F.col("cent_vec"))))
-
-    q = _prepped(queries, id_col, vec_col, "query_id", "q_vec")
-    wq = W.partitionBy("query_id").orderBy(F.desc("cent_sim"), F.asc("cell"))
-    probe_df = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_sim", _cos_pair("q_vec", "cent_vec"))
-        .withColumn("cent_rank", F.row_number().over(wq))
-        .filter(F.col("cent_rank") <= nprobe)
-        .select("query_id", "cell")
+    _, qids, qvecs = _collect_queries(
+        queries, id_col, vec_col, dim=np.shape(centroids)[1]
     )
-    c = _prepped(indexed, id_col, vec_col, "neighbor_id", "c_vec",
-                 extra={"cell": "cell"})
-    scored = (
-        c.join(F.broadcast(probe_df), "cell")
-        .join(F.broadcast(q), "query_id")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos_pair("q_vec", "c_vec"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _block_topk(
+        _scan(indexed, F.col("cell"), id_col, vec_col),
+        qids, qvecs, _routes(_route(qvecs, centroids, nprobe)), k,
+        dict(queries.dtypes)[id_col],
+    ).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 def save_ivf_index(
@@ -151,7 +137,7 @@ def save_ivf_index(
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
     """(cell-partitioned corpus frame, centroid matrix) from a
     save_ivf_index directory. The corpus frame carries the parquet
-    partitioning metadata, so probe_ivf's cell join partition-prunes."""
+    partitioning metadata, so probe_ivf's cell filter partition-prunes."""
     # normalize the partition column: directory-derived values can come
     # back as strings depending on partition-type inference, and a
     # string cell would silently type-coerce every downstream cell join
@@ -1269,106 +1255,102 @@ def search_pq(
     id_col: str = "vec_id",
     n_batches: int | None = None,
 ) -> DataFrame:
-    """ADC scan + exact re-rank, fully distributed (no driver collect).
+    """ADC scan + exact re-rank.
 
-    The encoded corpus is bucketed by id hash into ``n_batches`` groups
-    and cogrouped with an executor-side replicated query frame (one copy
-    of the query set per bucket — queries are the small side by contract,
-    as in x06 brute force). Each cogroup task builds the per-query LUTs
-    from the broadcast codebooks, scores its bucket's codes with m table
-    lookups, and keeps only the per-query top-``shortlist`` via
-    ``np.argpartition`` — so the ADC stage emits at most
-    |queries| * shortlist * n_batches rows, never |queries| * |corpus|.
-    A final per-query window merges bucket shortlists; only those rows
-    join back to their full vectors for exact cosine re-rank.
+    The bounded query set is collected once on the driver and broadcast
+    with the codebooks (queries are the small side by contract, as in
+    x06 brute force). The encoded corpus is bucketed by id hash into
+    ``n_batches`` groups; each group's task builds the per-query LUTs,
+    scores its bucket's codes with m table lookups, and keeps only the
+    per-query top-``shortlist`` via ``np.argpartition`` — so the ADC
+    stage emits at most |queries| * shortlist * n_batches rows, never
+    |queries| * |corpus|. A per-query window merges the bucket
+    shortlists; only those rows join back to their full vectors, and
+    the block scorer re-ranks them by exact cosine, each query's
+    shortlist its own block.
     """
-    import pandas as pd
-
     spark = corpus.sparkSession
     m, kk, sub = codebooks.shape
     if n_batches is None:
         n_batches = max(spark.sparkContext.defaultParallelism, 8)
-    bc = spark.sparkContext.broadcast(codebooks)
+    _, qids, qvecs = _collect_queries(queries, id_col, vec_col, dim=m * sub)
+    bc = spark.sparkContext.broadcast((codebooks, qids, qvecs))
 
-    enc_b = encoded.withColumn(
-        "__b", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_batches)).cast("int")
-    )
-    # Replicate the query set to every bucket executor-side (range x
-    # crossJoin — the query frame never touches the driver).
-    q_rep = (
-        spark.range(n_batches)
-        .select(F.col("id").cast("int").alias("__b"))
-        .crossJoin(
-            queries.select(
-                F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-            )
-        )
-    )
-
-    def adc(codes_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "score_pq": pd.Series([], dtype="float64"),
-            }
-        )
-        if not len(codes_pdf) or not len(q_pdf):
-            return empty
-        books = bc.value
-        qids = q_pdf["query_id"].to_numpy()
-        qmat = np.vstack(q_pdf["q_vec"].to_numpy()).astype(np.float64)
-        qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-        # per-query LUT: luts[q, j, c] = <q_sub_j, centroid_jc>  (exact dots)
-        luts = np.stack(
-            [qmat[:, j * sub : (j + 1) * sub] @ books[j].T for j in range(m)],
-            axis=1,
-        )
-        codes = np.vstack(codes_pdf["codes"].to_numpy())  # (n, m)
-        nids = codes_pdf[id_col].to_numpy()
-        scores = np.zeros((len(qids), len(codes)))
-        for j in range(m):
-            scores += luts[:, j, :][:, codes[:, j]]
-        scores[qids[:, None] == nids[None, :]] = -np.inf  # drop self-matches
-        t = min(shortlist, scores.shape[1])
-        idx = np.argpartition(-scores, t - 1, axis=1)[:, :t] if t else None
-        if idx is None:
-            return empty
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, t),
-                "neighbor_id": nids[idx].ravel(),
-                "score_pq": np.take_along_axis(scores, idx, axis=1).ravel(),
-            }
-        )
-        return out[np.isfinite(out["score_pq"])]
+    def adc(codes_pdf):
+        books, ids, Q = bc.value
+        return _adc_shortlist(ids, Q, books, codes_pdf, id_col, shortlist)
 
     scored = (
-        enc_b.groupBy("__b")
-        .cogroup(q_rep.groupBy("__b"))
+        encoded.withColumn(
+            "__b", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_batches)).cast("int")
+        )
+        .groupBy("__b")
         .applyInPandas(adc, schema="query_id long, neighbor_id long, score_pq double")
     )
-    # Merge per-bucket shortlists: the window input is already bounded by
-    # |queries| * shortlist * n_batches rows.
+    return _merge_and_rerank(
+        scored, shortlist, corpus, qids, qvecs, k, vec_col, id_col,
+        dict(queries.dtypes)[id_col],
+    )
+
+
+def _adc_shortlist(qids, Q, books, codes_pdf, id_col, shortlist, anchor=None):
+    """One group's ADC pass: the queries ``Q`` (unit-normalized here)
+    build their m x pq_k lookup tables, the group's codes are scored by
+    m table lookups, self-matches are dropped, and each query keeps its
+    top-``shortlist`` (np.argpartition) as (query_id, neighbor_id,
+    score_pq) rows. ``anchor`` is a residual index's normalized cell
+    centroid: its <q, anchor> term is added back so shortlists merge
+    across cells."""
+    import pandas as pd
+
+    m, _, sub = books.shape
+    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    # per-query LUT: luts[q, j, c] = <q_sub_j, centroid_jc>  (exact dots)
+    luts = np.stack(
+        [Q[:, j * sub : (j + 1) * sub] @ books[j].T for j in range(m)], axis=1
+    )
+    codes = np.vstack(codes_pdf["codes"].to_numpy())  # (n, m)
+    nids = codes_pdf[id_col].to_numpy()
+    scores = np.zeros((len(qids), len(codes)))
+    for j in range(m):
+        scores += luts[:, j, :][:, codes[:, j]]
+    if anchor is not None:
+        scores += (Q @ anchor)[:, None]
+    scores[qids[:, None] == nids[None, :]] = -np.inf
+    t = min(shortlist, scores.shape[1])
+    idx = np.argpartition(-scores, t - 1, axis=1)[:, :t]
+    out = pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, t),
+            "neighbor_id": nids[idx].ravel(),
+            "score_pq": np.take_along_axis(scores, idx, axis=1).ravel(),
+        }
+    )
+    return out[np.isfinite(out["score_pq"])]
+
+
+def _merge_and_rerank(
+    scored, shortlist, corpus, qids, qvecs, k, vec_col, id_col, query_t
+) -> DataFrame:
+    """One window merges the ADC groups' shortlists (its input is bounded
+    by |queries| x shortlist x groups rows); the merged (query_id,
+    neighbor_id) rows broadcast into the corpus scan, and the block
+    scorer ranks each query's rows by exact cosine, the query id being
+    the block."""
     w = W.partitionBy("query_id").orderBy(F.desc("score_pq"), F.asc("neighbor_id"))
     short = (
         scored.withColumn("adc_rank", F.row_number().over(w))
         .filter(F.col("adc_rank") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-    c = _prepped(corpus, id_col, vec_col, "neighbor_id", "c_vec")
-    q = _prepped(queries, id_col, vec_col, "query_id", "q_vec")
-    exact = (
-        short.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos_sim", _cos_pair("q_vec", "c_vec"))
+    scan = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec"))
+        .join(F.broadcast(short), "neighbor_id")
+        .select(F.col("query_id").alias("block"), "neighbor_id", "vec")
     )
-    wf = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _block_topk(
+        scan, qids, qvecs, _routes(qids[:, None]), k, query_t
+    ).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -2765,11 +2747,11 @@ def search_ivfpq(
 
     1. COARSE (driver): the coarse centroids, PQ codebooks and residual
        flag come from ``_ivfpq_meta``, which reads them only when their
-       files changed. The query frame is collected once, and each query
-       is routed to its ``nprobe`` nearest centroids by
-       ``similarity.exact_cos_matrix`` ordered by (cosine desc, cell
-       asc) — the same bits and order as ``probe_ivf``'s JVM cosine and
-       row_number, with no job.
+       files changed. The query frame is collected once
+       (similarity._collect_queries), and each query is routed to its
+       ``nprobe`` nearest centroids by the routing kernel
+       (similarity._route: exact cosine ordered by (cosine desc, cell
+       asc)), with no job.
     2. ADC: the codes tier is read PARTITION-PRUNED to the probed cells
        and grouped per cell. One broadcast carries the queries, their
        routing, the PQ codebooks and the residual anchors; each cell's
@@ -2780,19 +2762,18 @@ def search_ivfpq(
        merges the cells' shortlists.
     3. RE-RANK: the merged shortlist (<= |queries| x shortlist rows)
        joins its FULL vectors from the cells tier — scan statically
-       pruned to the probed cells — for exact cosine top-k, the faiss
-       refine step that pushes recall to ~1 at small shortlists
-       (RECALL.md curve).
+       pruned to the probed cells — and the block scorer ranks each
+       query's rows by exact cosine, the faiss refine step that pushes
+       recall to ~1 at small shortlists (RECALL.md curve).
 
     Scale shape: the only corpus-proportional exchange is the group
     shuffle of the PRUNED, COMPRESSED codes (nprobe/coarse_k of the
     corpus at ~1/32 byte width); the cells tier is touched only for
     |shortlist| rows per query. The query side is bounded by |q| x dim,
-    on the driver and in each ADC task's broadcast — the bound the
-    re-rank's broadcast join of the queries already had. The rest of
-    the broadcast (coarse centroids + m x pq_k subcodes) is independent
-    of corpus size AND of coarse k growth paths that sink the flat-GEMM
-    assignment (SCALE.md round-10 residency table).
+    on the driver and in each ADC and re-rank task's broadcast. The
+    rest of the broadcast (coarse centroids + m x pq_k subcodes) is
+    independent of corpus size AND of coarse k growth paths that sink
+    the flat-GEMM assignment (SCALE.md round-10 residency table).
 
     RESIDUAL indexes (``pq_meta`` flag) change only the ADC arithmetic:
     the stored code quantizes r = x_norm - c_norm[cell], so the
@@ -2802,49 +2783,26 @@ def search_ivfpq(
     cross-cell shortlist merging would compare within-cell offsets from
     DIFFERENT anchors.
 
-    Degenerate queries: an empty query frame yields no rows (same
-    schema); a NULL or zero-norm query embedding raises ValueError
-    naming its query id.
+    Degenerate queries behave as on every scorer path (similarity): an
+    empty query frame yields no rows (same schema); a NULL, zero-norm
+    or wrong-width query embedding raises ValueError naming its query
+    id.
 
     Exactness pin (the x125/x75b discipline): nprobe == coarse_k probes
     every cell and shortlist >= |corpus| makes the re-rank see every
     candidate, so output == brute-force cosine top-k bit for bit —
     that composition is the x146 driver oracle."""
-    import pandas as pd
-
     centroids, books, residual = _ivfpq_meta(spark, path)
-    m, _kk, sub = books.shape
-    dim = centroids.shape[1]
 
     # --- 1. route every query to its nprobe cells, on the driver ---
-    qsel = queries.select(id_col, vec_col)
-    rows = qsel.collect()
-    for qid, v in rows:
-        if v is None or None in v or not any(x * x for x in v):
-            raise ValueError(
-                f"query {qid!r} has a NULL or zero-norm {vec_col!r}: "
-                "its cosine to any vector is undefined"
-            )
-        if len(v) != dim:
-            raise ValueError(
-                f"query {qid!r} has {len(v)} dims, the index has {dim}"
-            )
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    qvecs = np.array([r[1] for r in rows], dtype=np.float64).reshape(-1, dim)
-    cos = exact_cos_matrix(qvecs, centroids)
-    order = np.lexsort(
-        (np.broadcast_to(np.arange(len(centroids)), cos.shape), -cos), axis=-1
-    )[:, : max(nprobe, 0)]
-    routes: dict[int, list[int]] = {}
-    for qi, cells in enumerate(order):
-        for c in cells:
-            routes.setdefault(int(c), []).append(qi)
+    _, qids, qvecs = _collect_queries(queries, id_col, vec_col, dim=centroids.shape[1])
+    routes = _routes(_route(qvecs, centroids, nprobe))
     probed = sorted(routes)
     bc = spark.sparkContext.broadcast(
         (
             qids,
             qvecs,
-            {c: np.array(qs) for c, qs in routes.items()},
+            routes,
             np.asarray(books),
             _normalized_centroids(centroids) if residual else None,
         )
@@ -2858,86 +2816,27 @@ def search_ivfpq(
         .filter(F.col("cell").isin(probed))
     )
 
-    def adc(codes_pdf: pd.DataFrame) -> pd.DataFrame:
-        all_qids, all_qvecs, cell_queries, bks, cn = bc.value
+    def adc(codes_pdf):
+        ids, Q, cell_queries, bks, cn = bc.value
         cell = int(codes_pdf["cell"].iloc[0])
         sel = cell_queries[cell]
-        qids = all_qids[sel]
-        qmat = all_qvecs[sel]
-        qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-        luts = np.stack(
-            [qmat[:, j * sub : (j + 1) * sub] @ bks[j].T for j in range(m)],
-            axis=1,
-        )
-        codes = np.vstack(codes_pdf["codes"].to_numpy())
-        nids = codes_pdf[id_col].to_numpy()
-        scores = np.zeros((len(qids), len(codes)))
-        for j in range(m):
-            scores += luts[:, j, :][:, codes[:, j]]
-        if cn is not None:
-            # residual codes: add back the cell-anchor term
-            # <q, c_norm[cell]> so shortlists MERGE correctly across
-            # cells (within one cell it is a constant shift)
-            scores += (qmat @ cn[cell])[:, None]
-        scores[qids[:, None] == nids[None, :]] = -np.inf  # drop self-matches
-        t = min(shortlist, scores.shape[1])
-        if not t:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "cell": pd.Series([], dtype="int32"),
-                    "score_pq": pd.Series([], dtype="float64"),
-                }
-            )
-        idx = np.argpartition(-scores, t - 1, axis=1)[:, :t]
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, t),
-                "neighbor_id": nids[idx].ravel(),
-                "cell": np.int32(cell),
-                "score_pq": np.take_along_axis(scores, idx, axis=1).ravel(),
-            }
-        )
-        return out[np.isfinite(out["score_pq"])]
+        anchor = None if cn is None else cn[cell]
+        return _adc_shortlist(ids[sel], Q[sel], bks, codes_pdf, id_col, shortlist, anchor)
 
     scored = codes_scan.groupBy("cell").applyInPandas(
-        adc, schema="query_id long, neighbor_id long, cell int, score_pq double"
-    )
-    # --- merge per-cell shortlists (input bounded by |q| x shortlist x
-    # nprobe rows) ---
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("score_pq"), F.asc("neighbor_id")
-    )
-    short = (
-        scored.withColumn("adc_rank", F.row_number().over(w))
-        .filter(F.col("adc_rank") <= shortlist)
-        .select("query_id", "neighbor_id", "cell")
+        adc, schema="query_id long, neighbor_id long, score_pq double"
     )
 
-    # --- 3. exact re-rank from the statically-pruned cells tier, against
-    # the collected queries (the user's frame is not evaluated again) ---
-    q = _prepped(
-        spark.createDataFrame(rows, qsel.schema), id_col, vec_col, "query_id", "q_vec"
-    )
-    # the tier's vectors may be stored as float or double: the scan widens
-    # them to the double the re-rank casts to anyway
+    # --- 3. merge the cells' shortlists; exact re-rank from the
+    # statically-pruned cells tier against the collected queries (the
+    # user's frame is not evaluated again); the tier's vectors may be
+    # stored as float or double: the scan widens them to double ---
     corpus = (
         spark.read.schema(f"{id_col} long, {vec_col} array<double>, cell int")
         .parquet(f"{path}/cells")
         .filter(F.col("cell").isin(probed))
     )
-    c = _prepped(corpus, id_col, vec_col, "neighbor_id", "c_vec")
-    exact = (
-        c.join(F.broadcast(short.select("query_id", "neighbor_id")), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cos_sim", _cos_pair("q_vec", "c_vec"))
-    )
-    wf = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    return _merge_and_rerank(
+        scored, shortlist, corpus, qids, qvecs, k, vec_col, id_col,
+        dict(queries.dtypes)[id_col],
     )

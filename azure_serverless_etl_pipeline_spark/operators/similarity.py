@@ -1,19 +1,25 @@
 """Similarity search over embedding columns (north-star extension).
 
-Brute-force cosine top-k as the exact baseline, and an LSH-bucketed
-(random-hyperplane) variant as the scale path. Both are pure DataFrame
-plans; cosine is a sequential double fold (bit-identical to the DuckDB
-oracle — see functions.dot).
+``cosine_topk`` is the exact reference: a broadcast cross join scored by
+a sequential double fold (bit-identical to the DuckDB oracle — see
+functions.dot) and one window per query. Every other cosine path scores
+through ONE block scorer, ``_block_topk`` (local top-k, global merge):
+the bounded query side is collected once on the driver and broadcast,
+each query carrying the blocks it probes (an LSH bucket, an IVF cell,
+the whole target, its re-rank shortlist); one map-side ``mapInPandas``
+scores each block with ``exact_cos_matrix`` (the fold's bits) and keeps
+each query's top-k per batch; one window merges them. No corpus shuffle.
 
-Scale notes (100 TB):
-- Brute force broadcasts the (small) query set against the full corpus:
-  one map-side pass + a top-k window per query — Spark plans the window
-  as partial top-k per partition under AQE; no corpus shuffle of vectors.
-- The LSH variant hashes each vector into 2^n_planes buckets map-side and
-  only scores within matching buckets (+ optional multi-probe), cutting
-  the scored candidates by ~bucket-count x at a recall cost — the
-  standard ANN trade. Plane directions are deterministic (hash-derived),
-  not RNG-dependent, so results are reproducible across runs/engines.
+Degenerate inputs mean the same on every scorer path: a NULL,
+zero-norm, non-finite or wrong-width query raises ValueError naming its
+id; an empty query frame gives no rows with the path's schema; a
+candidate with a NULL, zero-norm, non-finite or wrong-width vector is
+never returned.
+
+LSH hashes each vector into 2^n_planes buckets map-side and scores only
+matching buckets (+ optional multi-probe) — the standard ANN recall/cost
+trade. Plane directions are hash-derived, not RNG-dependent, so results
+are reproducible across runs/engines.
 """
 
 from __future__ import annotations
@@ -59,28 +65,161 @@ def exact_cos_matrix(S: np.ndarray, T: np.ndarray) -> np.ndarray:
         return C / np.outer(_nrm(S), _nrm(T))
 
 
-def _prepped(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    id_alias: str,
-    vec_alias: str,
-    extra: dict[str, str] | None = None,
+def _check_query(qid, v, dim: int | None, vec_col: str) -> np.ndarray:
+    """The query's vector as float64. Raises ValueError naming ``qid``
+    when the query has no cosine to any vector (NULL id or vector,
+    zero-norm, non-finite) or its width is not ``dim``."""
+    a = None if v is None else np.asarray(v, dtype=np.float64)
+    if qid is None or a is None or not np.isfinite(a).all() or not (a * a).any():
+        raise ValueError(
+            f"query {qid!r} has a NULL id or a NULL, zero-norm or non-finite "
+            f"{vec_col!r}: its cosine to any vector is undefined"
+        )
+    if dim is not None and len(a) != dim:
+        raise ValueError(f"query {qid!r} has {len(a)} dims, expected {dim}")
+    return a
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, dim: int | None = None, extra=()
 ):
-    """Project (id, double-cast vector, L2 norm [, extras]): norms and casts
-    computed once per vector instead of once per scored pair."""
-    out = df.select(
-        F.col(id_col).alias(id_alias),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_alias),
-        *[F.col(src).alias(dst) for src, dst in (extra or {}).items()],
-    )
-    return out.withColumn(
-        f"{vec_alias}_nrm", F.sqrt(dot(F.col(vec_alias), F.col(vec_alias)))
-    )
+    """Collect the bounded query side once, on the driver (a broadcast
+    side is collected there anyway): (rows of id, vector, ``extra``;
+    int64 ids; float64 vectors). Each query passes ``_check_query``;
+    ``dim`` defaults to the first query's width."""
+    rows = queries.select(id_col, vec_col, *extra).collect()
+    vecs = []
+    for r in rows:
+        vecs.append(_check_query(r[0], r[1], dim, vec_col))
+        dim = len(vecs[-1])
+    qids = np.array([r[0] for r in rows], dtype=np.int64)
+    return rows, qids, np.array(vecs).reshape(len(rows), dim or 0)
 
 
-def _cos_pair(qv: str, cv: str):
-    return dot(F.col(qv), F.col(cv)) / (F.col(f"{qv}_nrm") * F.col(f"{cv}_nrm"))
+def _route(qvecs: np.ndarray, centroids: np.ndarray, nprobe: int) -> np.ndarray:
+    """(queries x nprobe) matrix of each query's nearest cells, ordered by
+    (cosine desc, cell asc) — the bits and order of a row_number over
+    the JVM fold's cosine. A centroid without a cosine (zero norm) sorts
+    last."""
+    cos = exact_cos_matrix(qvecs, np.asarray(centroids, dtype=np.float64))
+    cells = np.broadcast_to(np.arange(cos.shape[1]), cos.shape)
+    return np.lexsort((cells, -cos), axis=-1)[:, : max(nprobe, 0)]
+
+
+def _routes(probes) -> dict[int, np.ndarray]:
+    """block -> ascending indexes of the queries that probe it, from each
+    query's list of blocks (a NULL block probes nothing)."""
+    out: dict[int, list[int]] = {}
+    for qi, blocks in enumerate(probes):
+        for b in blocks:
+            if b is not None:
+                out.setdefault(int(b), []).append(qi)
+    return {b: np.array(qs, dtype=np.int64) for b, qs in out.items()}
+
+
+def _candidate_matrix(vecs: np.ndarray, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(kept-row mask, float64 matrix of the kept rows). A candidate whose
+    vector is NULL, of another width than ``dim``, zero-norm or
+    non-finite has no cosine and is dropped."""
+    ok = np.fromiter((v is not None and len(v) == dim for v in vecs), bool, len(vecs))
+    T = np.stack(vecs[ok]).astype(np.float64) if ok.any() else np.zeros((0, dim))
+    n2 = (T * T).sum(1)
+    good = np.isfinite(n2) & (n2 > 0)
+    ok[ok] = good
+    return ok, T[good]
+
+
+def _block_candidates(S, T, k: int, band: float, sids=None, tids=None):
+    """(rows of S, rows of T, cosines) of every pair within ``band`` of
+    its S row's k-th largest cosine among T (ties at the k-th kept).
+    With ``sids``/``tids`` a pair of equal ids is never a candidate.
+    Rows of S are scored in chunks of ~4M scratch doubles."""
+    nt = len(T)
+    chunk = max(1, (4 << 20) // max(nt, 1))
+    out = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
+    for s in range(0, len(S), chunk):
+        C = exact_cos_matrix(S[s : s + chunk], T)
+        if sids is not None:
+            C[sids[s : s + chunk, None] == tids[None, :]] = -np.inf
+        mask = np.isfinite(C)
+        if nt > k:
+            kth = np.partition(C, nt - k, axis=1)[:, nt - k]
+            mask &= C >= (kth - band)[:, None]
+        li, lj = np.nonzero(mask)
+        out.append((li + s, lj, C[li, lj]))
+    return tuple(np.concatenate(a) for a in zip(*out))
+
+
+def _block_topk(
+    scan: DataFrame,
+    qids: np.ndarray,
+    qvecs: np.ndarray,
+    routes: dict[int, np.ndarray],
+    k: int,
+    query_t: str,
+    margin: bool = False,
+) -> DataFrame:
+    """The one block scorer: ``scan`` holds (block, neighbor_id, vec),
+    ``routes`` maps a block to the indexes of its probing queries. Rows
+    of unprobed blocks and NULL ids are filtered out in the JVM.
+
+    Top-k mode skips each query's own id, keeps each query's top-k per
+    batch by ``np.lexsort`` on (cosine desc, id asc), and one window
+    merges them: (query_id, neighbor_id, block, rank, cos_sim). Margin
+    mode keeps every pair within 1e-9 of its block's k-th cosine (a rank
+    change under rounding to 12 places needs cosines within 1e-12) and
+    returns them unranked, rounded to 12 places in the JVM."""
+    spark = scan.sparkSession
+    types = dict(scan.dtypes)
+    bc = spark.sparkContext.broadcast((qids, qvecs, routes))
+    kk, band = int(k), (1e-9 if margin else 0.0)
+
+    def score(batches):
+        import pandas as pd
+
+        ids, Q, rt = bc.value
+        for pdf in batches:
+            ok, T = _candidate_matrix(pdf["vec"].to_numpy(), Q.shape[1])
+            blocks = pdf["block"].to_numpy()[ok]
+            nids = pdf["neighbor_id"].to_numpy()[ok]
+            parts = []
+            for b in np.unique(blocks):
+                grp = np.flatnonzero(blocks == b)
+                qs, tn = rt[int(b)], nids[grp]
+                own = (None, None) if margin else (ids[qs], tn)
+                li, lj, c = _block_candidates(Q[qs], T[grp], kk, band, *own)
+                parts.append((qs[li], tn[lj], np.full(len(li), b), c))
+            if not parts:
+                continue
+            qi, nid, blk, cos = (np.concatenate(p) for p in zip(*parts))
+            if not margin:
+                o = np.lexsort((nid, -cos, qi))
+                o = o[np.arange(len(o)) - np.searchsorted(qi[o], qi[o]) < kk]
+                qi, nid, blk, cos = qi[o], nid[o], blk[o], cos[o]
+            yield pd.DataFrame(
+                {"query_id": ids[qi], "neighbor_id": nid, "block": blk, "cos_sim": cos}
+            )
+
+    scored = scan.filter(
+        F.col("block").isin(sorted(routes)) & F.col("neighbor_id").isNotNull()
+    ).mapInPandas(
+        score,
+        schema=f"query_id {query_t}, neighbor_id {types['neighbor_id']}, "
+        f"block {types['block']}, cos_sim double",
+    )
+    if margin:
+        return scored.withColumn("cos_sim", F.round("cos_sim", 12))
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _scan(df: DataFrame, block, id_col: str, vec_col: str) -> DataFrame:
+    """The scorer's (block, neighbor_id, vec) scan of ``df``."""
+    return df.select(
+        block.alias("block"),
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("vec"),
+    )
 
 
 def cosine_topk(
@@ -90,13 +229,26 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector (self-match excluded)."""
-    q = _prepped(queries, id_col, vec_col, "query_id", "q_vec")
-    c = _prepped(corpus, id_col, vec_col, "neighbor_id", "c_vec")
+    """Exact top-k cosine neighbors per query vector (self-match
+    excluded): the JVM-fold reference every scorer path is tested
+    against. Norms and double casts are computed once per vector."""
+
+    def prepped(df, id_alias, v):
+        out = df.select(
+            F.col(id_col).alias(id_alias),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(v),
+        )
+        return out.withColumn(f"{v}_nrm", F.sqrt(dot(F.col(v), F.col(v))))
+
     scored = (
-        c.crossJoin(F.broadcast(q))
+        prepped(corpus, "neighbor_id", "c_vec")
+        .crossJoin(F.broadcast(prepped(queries, "query_id", "q_vec")))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos_pair("q_vec", "c_vec"))
+        .withColumn(
+            "cos_sim",
+            dot(F.col("q_vec"), F.col("c_vec"))
+            / (F.col("q_vec_nrm") * F.col("c_vec_nrm")),
+        )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -112,18 +264,22 @@ def _hyperplane_bucket(vec_col, dim: int, n_planes: int):
     Plane p's direction is pseudo-random per (plane, coordinate) via
     xxhash64 -> uniform in [-1, 1]: reproducible with no RNG state and
     computable identically at write time (index build) and query time.
+    The projection onto a plane is the sequential fold of functions.dot
+    over the first ``dim`` coordinates: one compact expression per
+    plane. A vector shorter than ``dim`` (or NULL) projects to NULL and
+    lands in no plane's positive side.
     """
     two63 = float(1 << 63)
+    head = F.slice(vec_col, 1, dim)
     bucket = F.lit(0)
     for p in range(n_planes):
-        coeffs = [
-            F.xxhash64(F.lit(_SEED), F.lit(p), F.lit(j)).cast("double") / two63
-            for j in range(dim)
-        ]
-        proj = None
-        for j, cf in enumerate(coeffs):
-            term = F.element_at(vec_col, j + 1).cast("double") * cf
-            proj = term if proj is None else proj + term
+        plane = F.array(
+            *[
+                F.xxhash64(F.lit(_SEED), F.lit(p), F.lit(j)).cast("double") / two63
+                for j in range(dim)
+            ]
+        )
+        proj = dot(head, plane)
         bucket = bucket + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket
 
@@ -145,39 +301,19 @@ def lsh_ann_topk(
     from the query's (flip one hyperplane sign) — the standard
     multi-probe LSH recall knob: (1+n_planes)/2^n_planes of the corpus
     scored instead of 1/2^n_planes, recovering the neighbors that fall
-    just across one hyperplane. Only the (tiny) query side fans out.
-    Output schema matches cosine_topk; recall < 1 by design (rows-only
+    just across one hyperplane. The scorer's block is the bucket. Output
+    schema matches cosine_topk; recall < 1 by design (rows-only
     correctness check + recall assertions in tests).
     """
-    c = _prepped(corpus, id_col, vec_col, "neighbor_id", "c_vec").withColumn(
-        "bucket", _hyperplane_bucket(F.col("c_vec"), dim, n_planes)
-    )
-    q = _prepped(queries, id_col, vec_col, "query_id", "q_vec").withColumn(
-        "bucket", _hyperplane_bucket(F.col("q_vec"), dim, n_planes)
-    )
+    bucket = _hyperplane_bucket(F.col(vec_col), dim, n_planes)
+    rows, qids, qvecs = _collect_queries(queries, id_col, vec_col, dim, (bucket,))
+    probes = np.array([r[2] for r in rows], dtype=np.int64)[:, None]
     if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << p)).cast("int")
-                for p in range(n_planes)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    # no dedup needed: a corpus vector lives in exactly one bucket and the
-    # probe buckets are pairwise distinct, so each (query, neighbor) pair
-    # appears at most once — keeping the plan shuffle-free up to the rank
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos_pair("q_vec", "c_vec"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+        probes = np.hstack([probes, probes ^ (1 << np.arange(n_planes))])
+    return _block_topk(
+        _scan(corpus, bucket, id_col, vec_col),
+        qids, qvecs, _routes(probes), k, dict(queries.dtypes)[id_col],
+    ).select("query_id", "neighbor_id", "rank", "cos_sim")
 
 
 def ivf_topk(
@@ -191,26 +327,18 @@ def ivf_topk(
     """IVF-style ANN: score only within the query's coarse cell.
 
     Uses a precomputed coarse-quantizer cell column (here the dataset's
-    ``label``); at scale the cell id comes from a k-means codebook and the
-    corpus is written partitionBy(cell) so a probe touches one partition.
+    ``label``) as the block scorer's block; at scale the cell id comes
+    from a k-means codebook and the corpus is written partitionBy(cell)
+    so a probe touches one partition (ann_index.probe_ivf). A query
+    with a NULL cell probes nothing.
     """
-    c = _prepped(
-        corpus, id_col, vec_col, "neighbor_id", "c_vec", extra={cell_col: "cell"}
+    rows, qids, qvecs = _collect_queries(
+        queries, id_col, vec_col, extra=(cell_col,)
     )
-    q = _prepped(
-        queries, id_col, vec_col, "query_id", "q_vec", extra={cell_col: "cell"}
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _cos_pair("q_vec", "c_vec"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cell", "rank", "cos_sim")
-    )
+    return _block_topk(
+        _scan(corpus, F.col(cell_col), id_col, vec_col),
+        qids, qvecs, _routes([r[2]] for r in rows), k, dict(queries.dtypes)[id_col],
+    ).select("query_id", "neighbor_id", F.col("block").alias("cell"), "rank", "cos_sim")
 
 
 def margin_topk_match(
@@ -230,19 +358,28 @@ def margin_topk_match(
     margin threshold. The standard tool for mining parallel documents
     out of two monolingual corpora.
 
-    Plan shape: same broadcast-queries cross join as cosine_topk (the
-    source side is the small one; no corpus shuffle), one top-k window
-    per source, then a per-source aggregate over <= k rows. Determinism
-    contract: cosine rounded to 12 decimals BEFORE ranking (ties broken
-    by tgt_id), top-k mean summed as DECIMAL(38,12), margin rounded to
-    9 — bit-identical to the DuckDB twin.
+    Plan shape: the source side is the bounded one — collected once and
+    broadcast to the block scorer, whose one block is the whole target,
+    scanned map-side (no corpus shuffle); then one top-k window per
+    source over the scorer's candidates and a per-source aggregate over
+    <= k rows. Determinism contract: cosine rounded to 12 decimals
+    BEFORE ranking (ties broken by tgt_id), top-k mean summed as
+    DECIMAL(38,12), margin rounded to 9 — bit-identical to the DuckDB
+    twin.
     """
-    q = _prepped(src, id_col, vec_col, "src_id", "q_vec")
-    c = _prepped(tgt, id_col, vec_col, "tgt_id", "c_vec")
-    scored = c.crossJoin(F.broadcast(q)).withColumn(
-        "cos_sim", F.round(_cos_pair("q_vec", "c_vec"), 12)
+    rows, qids, qvecs = _collect_queries(src, id_col, vec_col)
+    scored = _block_topk(
+        _scan(tgt, F.lit(0), id_col, vec_col),
+        qids, qvecs, _routes([0] for _ in rows), k, dict(src.dtypes)[id_col],
+        margin=True,
     )
-    return _margin_from_scored(scored, k)
+    return _margin_from_scored(
+        scored.select(
+            F.col("query_id").alias("src_id"), F.col("neighbor_id").alias("tgt_id"),
+            "cos_sim",
+        ),
+        k,
+    )
 
 
 def _margin_from_scored(scored: DataFrame, k: int) -> DataFrame:
@@ -277,15 +414,15 @@ def margin_topk_match_blocked(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Corpus-scale bitext margin mining: IVF-cell-routed candidate
-    generation instead of ``margin_topk_match``'s broadcast-source cross
-    join.
+    generation instead of ``margin_topk_match``'s broadcast source
+    side.
 
     The broadcast form is right when the source side is a bounded query
     set; mining two *monolingual corpora* against each other makes both
     sides corpus-sized and a broadcast of either dies at 100x. Here the
     target corpus is IVF-indexed (seeded MLlib k-means codebook,
     ann_index.build_ivf_index), each source vector is routed to its
-    ``nprobe`` nearest cells through the tiny broadcast codebook
+    ``nprobe`` nearest cells map-side against the tiny codebook
     (n_cells rows — bounded regardless of corpus size), and matching is
     a cell-keyed EQUI-join: both sides shuffle-partition by cell, no
     corpus-sized broadcast, no cartesian. Per-cell work is
@@ -329,109 +466,65 @@ def margin_topk_match_indexed(
     (ann_index.save_ivf_index) and every mining run serves from it,
     instead of re-fitting the codebook per run. Exactness contract is
     unchanged: with ``nprobe`` == number of centroids every cell is
-    probed and the output equals margin_topk_match bit for bit."""
-    spark = indexed_tgt.sparkSession
-    cent = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cent_vec array<double>",
-    ).withColumn("cent_vec_nrm", F.sqrt(dot(F.col("cent_vec"), F.col("cent_vec"))))
+    probed and the output equals margin_topk_match bit for bit.
 
-    q = _prepped(src, id_col, vec_col, "src_id", "q_vec")
-    wq = W.partitionBy("src_id").orderBy(F.desc("cent_sim"), F.asc("cell"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_sim", _cos_pair("q_vec", "cent_vec"))
-        .withColumn("cent_rank", F.row_number().over(wq))
-        .filter(F.col("cent_rank") <= nprobe)
-        .select("src_id", "q_vec", "cell")
+    The corpus-sized source side is never collected: a ``mapInPandas``
+    routes each source with ``_route`` (a degenerate source raises as a
+    query does), and a per-cell pandas COGROUP scores each cell with
+    the block scorer's kernel in margin mode, so the rank window sees
+    |src| x k x nprobe rows instead of every scored pair."""
+    cent = np.asarray(centroids, dtype=np.float64)
+    dim = cent.shape[1]
+    # the output keeps each side's id type, whatever the caller used
+    id_t = dict(src.dtypes)[id_col]
+    tgt_t = dict(indexed_tgt.dtypes)[id_col]
+    kk = int(k)
+
+    def route(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            ids = pdf[id_col].tolist()
+            S = np.array(
+                [_check_query(i, v, dim, vec_col) for i, v in zip(ids, pdf[vec_col])]
+            ).reshape(len(ids), dim)
+            cells = _route(S, cent, nprobe)
+            n = cells.shape[1]
+            yield pd.DataFrame(
+                {
+                    "src_id": np.repeat(ids, n),
+                    "q_vec": list(np.repeat(S, n, axis=0)),
+                    "cell": cells.ravel(),
+                }
+            )
+
+    probes = src.select(id_col, vec_col).mapInPandas(
+        route, schema=f"src_id {id_t}, q_vec array<double>, cell int"
     )
-    # Round-13 (guide §4.2): per-cell scoring runs as a pandas COGROUP —
-    # exact_cos_matrix reproduces the JVM fold's IEEE sequence exactly
-    # (see its docstring), so each cell's cosines are bit-identical to
-    # the old cell-keyed equi-join + interpreted per-pair fold. Each
-    # cogroup emits only its cell's per-source top-k CANDIDATES (every
-    # pair whose exact cosine is within 1e-9 of the cell's per-source
-    # k-th largest): a pair in the GLOBAL top-k by (rounded cos desc,
-    # tgt_id asc) is a fortiori in its own cell's top-k by the same
-    # order, and rounded-order vs exact-order rank flips need values
-    # within the 1e-12 rounding quantum — three orders inside the 1e-9
-    # emit margin. Rounding to 12 then happens in the JVM on the emitted
-    # rows (identical operands -> identical rounding), and the rank
-    # window sees |src| x k x nprobe rows instead of every scored pair.
+
+    def score(tgt_pdf, src_pdf):
+        import pandas as pd
+
+        ok, T = _candidate_matrix(tgt_pdf["t_vec"].to_numpy(), dim)
+        S = src_pdf["q_vec"].to_numpy()
+        S = np.stack(S) if len(S) else np.zeros((0, dim))
+        li, lj, c = _block_candidates(S, T, kk, 1e-9)
+        return pd.DataFrame(
+            {
+                "src_id": src_pdf["src_id"].to_numpy()[li],
+                "tgt_id": tgt_pdf["tgt_id"].to_numpy()[ok][lj],
+                "cos_sim": c,
+            }
+        )
+
     tgt_sel = indexed_tgt.select(
         F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("t_vec"),
         F.col("cell"),
     )
-    kk = int(k)
-    # derive the id dtype instead of hardcoding long (ADVICE r13): the
-    # old equi-join plan preserved whatever id type the caller used
-    id_t = dict(indexed_tgt.dtypes)[id_col]
-
-    def score(src_pdf, tgt_pdf):
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "src_id": pd.Series([], dtype="int64"),
-                "tgt_id": pd.Series([], dtype="int64"),
-                "cos_sim": pd.Series([], dtype="float64"),
-            }
-        )
-        if not len(src_pdf) or not len(tgt_pdf):
-            return empty
-        sids = src_pdf["src_id"].to_numpy()
-        tids = tgt_pdf["tgt_id"].to_numpy()
-        S = np.stack(src_pdf["q_vec"].to_numpy()).astype(np.float64)
-        T = np.stack(tgt_pdf["t_vec"].to_numpy()).astype(np.float64)
-        nt = len(tids)
-        chunk = max(1, (4 << 20) // max(nt, 1))
-        out_s, out_t, out_c = [], [], []
-        for s in range(0, len(sids), chunk):
-            e = min(len(sids), s + chunk)
-            C = exact_cos_matrix(S[s:e], T)
-            if nt > kk:
-                kth = np.partition(C, nt - kk, axis=1)[:, nt - kk]
-                # Zero-norm semantics (ADVICE r13): the JVM plan this
-                # replaced would have FAILED LOUDLY on a zero-norm
-                # vector — under the session's ANSI mode double division
-                # by zero raises DIVIDE_BY_ZERO, so "what the old plan
-                # saw" is an error, never NaN. This kernel instead
-                # defines the degenerate case: 0/0 -> NaN under
-                # errstate-ignore, NaN sorts ABOVE every real value in
-                # BOTH orderings involved (np.partition places NaN
-                # last-ascending == largest, Spark's desc ranks NaN
-                # first), so the per-source kth threshold and the emit
-                # set stay mutually consistent: with m < k NaN targets
-                # kth is the (k-m)-th largest real and real candidates
-                # are emitted alongside every NaN pair; with m >= k the
-                # top-k is all-NaN and exactly those rows are emitted.
-                # No input in any declared dataset has a zero-norm
-                # vector (the oracle would have raised), so declared
-                # results are unaffected either way.
-                mask = (C >= (kth[:, None] - 1e-9)) | np.isnan(C)
-            else:
-                mask = np.ones_like(C, dtype=bool)
-            li, lj = np.nonzero(mask)
-            out_s.append(sids[li + s])
-            out_t.append(tids[lj])
-            out_c.append(C[li, lj])
-        import numpy as _np
-
-        return pd.DataFrame(
-            {
-                "src_id": _np.concatenate(out_s),
-                "tgt_id": _np.concatenate(out_t),
-                "cos_sim": _np.concatenate(out_c).astype(_np.float64),
-            }
-        )
-
     scored = (
         tgt_sel.groupBy("cell")
         .cogroup(probes.groupBy("cell"))
-        .applyInPandas(
-            lambda t_pdf, s_pdf: score(s_pdf, t_pdf),
-            schema=f"src_id {id_t}, tgt_id {id_t}, cos_sim double",
-        )
+        .applyInPandas(score, schema=f"src_id {id_t}, tgt_id {tgt_t}, cos_sim double")
         .withColumn("cos_sim", F.round("cos_sim", 12))
     )
     return _margin_from_scored(scored, k)

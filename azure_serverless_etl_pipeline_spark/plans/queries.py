@@ -2240,8 +2240,8 @@ def x91(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based bitext mining (similarity.margin_topk_match): for
     every English document's embedding, the best Spanish-document match
     by cosine with the Artetxe-Schwenk margin score (best / mean of
-    top-4). Broadcast-source cross join — no corpus shuffle; per-source
-    aggregate over <= k rows."""
+    top-4). Broadcast source side, target scanned map-side by the block
+    scorer — no corpus shuffle; per-source aggregate over <= k rows."""
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     joined = emb.join(docs, emb.vec_id == docs.doc_id).select("vec_id", "embedding", "lang")
@@ -3868,12 +3868,12 @@ def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_batch(spark, emb.filter(mod == 9), 2, idx)
         open(marker, "w").close()
     live = load_live_index(spark, idx)
-    rows = spark.read.parquet(f"{idx}/centroids").orderBy("cell").collect()
-    import numpy as np
-
-    centroids = np.vstack([np.asarray(r.centroid) for r in rows])
     out = ann_index.probe_ivf(
-        live, emb.filter(F.col("vec_id") < 10), centroids, k=5, nprobe=16
+        live,
+        emb.filter(F.col("vec_id") < 10),
+        ann_index._load_centroid_matrix(spark, idx),
+        k=5,
+        nprobe=16,
     )
     return out.withColumn("cos_sim", F.round("cos_sim", 12))
 
@@ -3993,13 +3993,12 @@ def x149(spark: SparkSession, sf_dir: str) -> DataFrame:
             ):
                 break
         open(marker, "w").close()
-    n_cells = spark.read.parquet(f"{idx}/centroids").count()
     out = ann_index.search_ivfpq(
         spark,
         idx,
         emb.filter(F.col("vec_id") < 10),
         k=5,
-        nprobe=n_cells,
+        nprobe=len(ann_index._ivfpq_meta(spark, idx)[0]),
         shortlist=emb.count(),
     )
     return out.withColumn("cos_sim", F.round("cos_sim", 12))

@@ -1,10 +1,13 @@
 #!/usr/bin/env python
 """Capture `.explain("formatted")` for every bench headline query into
-plans/<tag>/<query>_<suffix>.txt (round-13 optimization evidence).
+plans/<tag>/<query>_<suffix>.txt.
 
-Usage: python scripts/capture_plans.py <tag> <suffix> [name,name,...]
-e.g.   python scripts/capture_plans.py r13 before
-       python scripts/capture_plans.py r13 after x99_corpus_prep
+Usage: python scripts/capture_plans.py <tag> [suffix] [name,name,...]
+e.g.   python scripts/capture_plans.py before-change before
+       python scripts/capture_plans.py before-change after x99_corpus_prep
+
+The tag is required: it names the output directory, so two captures
+never overwrite each other by default. The suffix defaults to "before".
 
 Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
 with the same session the bench uses, so the captured plans are the
@@ -27,7 +30,10 @@ if str(REPO) not in sys.path:
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r13"
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    tag = sys.argv[1]
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -285,6 +285,11 @@ def main() -> None:
             "(re-rank uses full vectors); x151 driver-hashes the "
             "residual full probe against x06.",
             "",
+            "The synth-tight indexes are rebuilt on every run and the build "
+            "is not bit-reproducible from run to run, so those recall rows "
+            "can move by a few hundredths between runs of the same code; "
+            "compare search paths on one saved index instead.",
+            "",
         ]
     )
     (REPO / "RECALL.md").write_text(out)

@@ -790,6 +790,123 @@ def test_ivfpq_degenerate_queries(spark, corpus, tmp_path_factory):
             search_ivfpq(spark, idx, bad, k=5, nprobe=2)
 
 
+_NULL_CAND, _ZERO_CAND = 9_100_001, 9_100_002
+
+
+def _scorer_path(name, spark, clean, tmp_path_factory):
+    """(run, truth) for one block-scorer path: ``run(queries)`` answers
+    over ``clean`` plus a zero-norm candidate (and a NULL one where the
+    path's index build takes NULLs), with every candidate's block
+    probed; ``truth(queries)`` is the same answer over ``clean``."""
+    from azure_serverless_etl_pipeline_spark.operators import ann_index as A
+    from azure_serverless_etl_pipeline_spark.operators import similarity as S
+
+    label0 = clean.filter(F.col("vec_id") == 0).first().label
+
+    def dirty(df, null=True, **cols):
+        rows = [(_ZERO_CAND, [0.0] * 64)] + ([(_NULL_CAND, None)] if null else [])
+        bad = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        for c, v in {"label": label0, **cols}.items():
+            bad = bad.withColumn(c, F.lit(v).cast(dict(df.dtypes)[c]))
+        return df.unionByName(bad.select(*df.columns))
+
+    brute = lambda q: S.cosine_topk(clean, q, k=5)  # noqa: E731
+    if name == "lsh_ann_topk":
+        # one plane: the multi-probe visits both buckets, so LSH is exact
+        c = dirty(clean)
+        return lambda q: S.lsh_ann_topk(c, q, k=5, n_planes=1), brute
+    if name == "ivf_topk":
+        c = dirty(clean)
+        return lambda q: S.ivf_topk(c, q, k=5), lambda q: S.ivf_topk(clean, q, k=5)
+    if name == "probe_ivf":
+        indexed, cent = A.build_ivf_index(clean, k=4)
+        c = dirty(indexed, cell=0)
+        return lambda q: A.probe_ivf(c, q, cent, k=5, nprobe=4), brute
+    if name == "margin_topk_match":
+        c = dirty(clean)
+        return (
+            lambda q: S.margin_topk_match(q, c, k=4),
+            lambda q: S.margin_topk_match(q, clean, k=4),
+        )
+    if name == "search_pq":
+        c = dirty(clean, null=False)
+        books = A.train_pq_codebooks(clean, m=8, k=16)
+        enc = A.encode_pq(c, books)
+        return lambda q: A.search_pq(enc, c, q, books, k=5, shortlist=1000), brute
+    idx = str(tmp_path_factory.mktemp("degenerate") / "index")
+    A.save_ivfpq_index(dirty(clean, null=False), idx, k=4, m=8, pq_k=16)
+    return lambda q: A.search_ivfpq(spark, idx, q, k=5, nprobe=4, shortlist=1000), brute
+
+
+@pytest.mark.parametrize(
+    "path",
+    [
+        "lsh_ann_topk",
+        "ivf_topk",
+        "probe_ivf",
+        "search_pq",
+        "margin_topk_match",
+        "search_ivfpq",
+    ],
+)
+def test_scorer_paths_define_degenerate_inputs(spark, corpus, tmp_path_factory, path):
+    """Every block-scorer path answers degenerate inputs one way: an
+    empty query frame gives no rows with the path's schema; a NULL,
+    zero-norm or wrong-width query raises ValueError naming its id; a
+    NULL or zero-norm candidate is never returned — the answer equals
+    the same probe over the corpus without it."""
+    clean = corpus.select("vec_id", "embedding", "label")
+    run, truth = _scorer_path(path, spark, clean, tmp_path_factory)
+    queries = clean.filter(F.col("vec_id") < 6)
+
+    def rows(df):
+        pdf = df.toPandas()
+        return pdf.sort_values(list(pdf.columns), ignore_index=True)
+
+    got = run(queries)
+    empty = run(queries.limit(0))
+    assert empty.schema == got.schema
+    assert empty.count() == 0
+    answer = rows(got)
+    assert not {_NULL_CAND, _ZERO_CAND} & set(answer.iloc[:, 1])
+    assert answer.equals(rows(truth(queries))[answer.columns])
+    for qid, vec in (
+        (9_000_001, None),
+        (9_000_002, [0.0] * 64),
+        (9_000_003, [1.0] * 8),
+    ):
+        bad = queries.unionByName(
+            spark.createDataFrame(
+                [(qid, vec, 0)], "vec_id long, embedding array<float>, label int"
+            )
+        )
+        with pytest.raises(ValueError, match=str(qid)):
+            run(bad).collect()
+
+
+def test_route_orders_tied_centroids_by_cell():
+    """The shared routing kernel orders a query's cells by (cosine
+    desc, cell asc): on tied centroids the lowest cell comes first —
+    the probe order of search_ivfpq and probe_ivf, and of a row_number
+    over the JVM fold's cosine."""
+    import numpy as np
+
+    from azure_serverless_etl_pipeline_spark.operators.similarity import _route
+
+    cent = np.array(
+        [[0, 1, 0], [1, 0, 0], [0, 0, 1], [2, 0, 0], [0, 1, 0], [1, 0, 0]], float
+    )
+    qs = np.array([[3, 0, 0], [0, 5, 0], [1, 1, 0], [0, 0, 0.5]])
+    assert _route(qs, cent, 3).tolist() == [
+        [1, 3, 5],
+        [0, 4, 1],
+        [0, 1, 3],
+        [2, 0, 1],
+    ]
+    assert _route(qs, cent, 0).shape == (4, 0)
+    assert _route(qs, cent, 99).shape == (4, 6)
+
+
 def test_ivfpq_meta_memo_follows_index_maintenance(
     spark, corpus, tmp_path_factory
 ):
@@ -867,8 +984,8 @@ def test_ivfpq_warm_probe_reads_no_metadata(spark, corpus, tmp_path_factory):
     A._META_MEMO.clear()
     assert jobs("cold-probe", probe) == warm + meta
     # the explicit codes/ and cells/ schemas leave no inference job: the
-    # two collects, the codes scan and ADC scoring, the re-rank
-    assert warm == 7, warm
+    # one query collect, the codes scan and ADC scoring, the re-rank
+    assert warm == 6, warm
 
 
 def test_warm_ivfpq_append_records_launch_no_jobs(

@@ -255,9 +255,8 @@ def test_corpus_prep_one_plan_no_cartesian(spark, queries):
     """x99: no cartesian anywhere, and the multiply-consumed stage
     boundaries (reps/clean/scores) are localCheckpoint-ed (r13 opt) so
     the final plan reads the per-invocation checkpoint RDDs instead of
-    re-executing the gate+dedup+decontam prefix per consumer — the
-    before/after shape is recorded in plans/r13/ and
-    OPTIMIZATION_r13.md."""
+    re-executing the gate+dedup+decontam prefix per consumer (measured
+    in OPTIMIZATION_r13.md)."""
     plan = plan_of(queries["x99_corpus_prep"](spark, SF_ORACLE))
     assert "CartesianProduct" not in plan
     assert "Scan ExistingRDD" in plan
@@ -350,20 +349,21 @@ def test_entropy_and_transitions_single_scan(spark, queries):
 
 
 def test_blocked_bitext_is_equi_join_no_corpus_broadcast(spark, queries):
-    """x122 replaces x91's broadcast-source cross join (fatal when the
-    source side is corpus-sized) with IVF-cell routing: the corpus match
-    must be an EQUI-join on the cell key, every nested-loop join in the
-    plan is the bounded codebook fan-out (driver-local rows — never a
-    parquet corpus scan on the build side), and no cartesian appears
-    anywhere. x91 keeps the cross-join shape by design (query-set
-    sources) — asserted as the contrast so the difference stays visible."""
+    """x122 replaces x91's broadcast-source scan (fatal when the source
+    side is corpus-sized) with IVF-cell routing: the corpus match must
+    be keyed on the cell, the sources are routed map-side (no
+    nested-loop join at all), and no cartesian appears anywhere. x91
+    keeps the broadcast-source shape by design (query-set sources): its
+    target scan feeds the block scorer's MapInPandas with no shuffle
+    Exchange below it — asserted as the contrast so the difference
+    stays visible."""
     import re
 
     plan = plan_of(queries["x122_bitext_margin_blocked"](spark, SF_ORACLE))
     assert "CartesianProduct" not in plan
-    # the corpus match is keyed on cell. Round-13 moved the scoring into
-    # a per-cell pandas COGROUP (both sides hash-partitioned by cell —
-    # the same cell-keyed data movement, scored by the exact vectorized
+    assert "BroadcastNestedLoopJoin" not in plan
+    # the corpus match is keyed on cell: a per-cell pandas COGROUP (both
+    # sides hash-partitioned by cell, scored by the exact vectorized
     # kernel); an equi-join on cell (SMJ/SHJ/BHJ, possibly with the key
     # widened to cast(cell as bigint) for partition-pruning
     # comparability) remains acceptable for any future reshape.
@@ -371,50 +371,18 @@ def test_blocked_bitext_is_equi_join_no_corpus_broadcast(spark, queries):
         "FlatMapCoGroupsInPandas" in plan
         and re.search(r"hashpartitioning\((cast\()?cell", plan)
     ), plan[:2000]
-    # the main tree carries exactly one nested-loop join: the codebook
-    # (its dynamic-partition-pruning subquery may replay the same
-    # codebook join in a Subqueries section — same bounded build side,
-    # checked below like every other tree)
-    main = plan.split("\n\n")[0]
-    assert len(re.findall(r"BroadcastNestedLoopJoin", main)) <= 1, main
-    # ...and in EVERY tree section (main + DPP subqueries), no parquet
-    # corpus scan sits inside a nested-loop join's build subtree: the
-    # only cross fan-out is the driver-local codebook
-    # (Scan ExistingRDD/LocalTableScan), never a file scan
-    for section in plan.split("\n\n"):
-        if "BroadcastNestedLoopJoin" not in section or (
-            "+- " not in section and ":- " not in section
-        ):
-            continue  # detail block, not a plan tree
-        tree = section.splitlines()
-        for i, line in enumerate(tree):
-            if "BroadcastNestedLoopJoin" not in line:
-                continue
-            indent = len(line) - len(line.lstrip(" +-:"))
-            subtree = []
-            for below in tree[i + 1 :]:
-                if len(below) - len(below.lstrip(" +-:")) <= indent:
-                    break
-                subtree.append(below)
-            if not subtree:
-                continue
-            # immediate children sit at the minimal indent; the BUILD
-            # side is the last child under BuildRight (the streamed side
-            # may scan parquet freely — only the broadcast side must
-            # stay bounded)
-            kid_indent = min(len(s) - len(s.lstrip(" +-:")) for s in subtree)
-            kid_starts = [
-                j
-                for j, s in enumerate(subtree)
-                if len(s) - len(s.lstrip(" +-:")) == kid_indent
-            ]
-            build = subtree[kid_starts[-1] if "BuildRight" in line else 0 :]
-            if "BuildRight" not in line and len(kid_starts) > 1:
-                build = subtree[: kid_starts[1]]
-            assert not any("parquet" in s for s in build), "\n".join(build)
-    # contrast: x91's deliberate broadcast-source cross join
-    plan91 = plan_of(queries["x91_bitext_margin"](spark, SF_ORACLE))
-    assert "BroadcastNestedLoopJoin" in plan91
+    # contrast: x91 scans its target map-side into the scorer; the only
+    # exchange under the MapInPandas may be the bounded language
+    # lookup's broadcast, never a shuffle of the corpus
+    tree91 = (
+        queries["x91_bitext_margin"](spark, SF_ORACLE)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    below = tree91.split("MapInPandas", 1)[1]
+    assert "embeddings.parquet" in below, tree91
+    assert not re.search(r"\bExchange\b", below), tree91
 
 
 def test_salted_join_spreads_hot_key(spark, queries):
@@ -493,8 +461,8 @@ def test_aqe_splits_skewed_partition(spark):
 def test_live_index_probe_prunes_partitions(spark, tmp_path):
     """The two-tier live reader must not cost the pruning the standing
     tier was written for: probing load_live_index with nprobe < k must
-    still engage dynamic partition pruning on the standing cells scan —
-    the broadcast anti-join and the union with the append tier sit ABOVE
+    still prune the standing cells scan to the probed cells — the
+    broadcast anti-join and the union with the append tier sit ABOVE
     the scan and must not block the probe list's partition filter."""
     from pyspark.sql import functions as F
 
@@ -510,32 +478,29 @@ def test_live_index_probe_prunes_partitions(spark, tmp_path):
     ann_index.save_ivf_index(emb.filter(F.col("vec_id") % 10 < 7), idx, k=16)
     append_batch(spark, emb.filter(F.col("vec_id") % 10 >= 7), 0, idx)
     live = load_live_index(spark, idx)
-    import numpy as np
-
-    rows = spark.read.parquet(f"{idx}/centroids").orderBy("cell").collect()
-    cent = np.vstack([np.asarray(r.centroid) for r in rows])
     out = ann_index.probe_ivf(
-        live, emb.filter(F.col("vec_id") < 10), cent, k=5, nprobe=2
+        live,
+        emb.filter(F.col("vec_id") < 10),
+        ann_index._load_centroid_matrix(spark, idx),
+        k=5,
+        nprobe=2,
     )
     out.collect()
     executed = out._jdf.queryExecution().executedPlan().toString()
-    # round-13: probe_ivf prunes the cell layout STATICALLY (the
-    # driver-bounded probed-cell list lands as an INSET partition
-    # filter, same discipline as search_ivfpq) — no runtime DPP
-    # subquery needed; accept either form of cell pruning
+    # probe_ivf routes on the driver, so the probed-cell list lands as a
+    # static IN/INSET partition filter (the search_ivfpq discipline)
     import re as _re
 
-    assert "dynamicpruning" in executed or _re.search(
+    assert _re.search(
         r"PartitionFilters: \[[^]]*cell[^]]*IN", executed
     ), executed[:3000]
 
 
 def test_persisted_ivf_probe_prunes_partitions(spark):
     """x125's deployment shape: probing the persisted cell-partitioned
-    index with nprobe < k must engage dynamic partition pruning — the
-    probe list broadcasts into the scan's partition filter so only the
-    probed cells' files are read (the point of writing the index
-    partitionBy(cell))."""
+    index with nprobe < k must prune the scan — the driver-routed probe
+    list is the scan's partition filter, so only the probed cells'
+    files are read (the point of writing the index partitionBy(cell))."""
     from pyspark.sql import functions as F
 
     from azure_serverless_etl_pipeline_spark.operators import ann_index
@@ -554,12 +519,11 @@ def test_persisted_ivf_probe_prunes_partitions(spark):
     )
     out.collect()
     executed = out._jdf.queryExecution().executedPlan().toString()
-    # round-13: static INSET partition filter from the driver-bounded
-    # probed-cell list replaces the DPP subquery (see the live-probe
-    # gate above) — only the probed cells' files are read either way
+    # static IN/INSET partition filter from the driver-routed probed
+    # cells (see the live-probe gate above)
     import re as _re
 
-    assert "dynamicpruning" in executed or _re.search(
+    assert _re.search(
         r"PartitionFilters: \[[^]]*cell[^]]*IN", executed
     ), executed[:3000]
 
