@@ -28,8 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import state
 from ..functions import dot
-from .compaction import read_record, write_record
+from ..state import list_batches, read_record, write_record
 from .similarity import (
     _block_topk,
     _collect_queries,
@@ -126,11 +127,7 @@ def save_ivf_index(
     # write fans each cell across its shuffle partitions' files, so the
     # FIRST compaction must examine every cell dir — once, via this
     # record, not via the standing census on every later call
-    jvm = spark.sparkContext._jvm
-    dj = jvm.org.apache.hadoop.fs.Path(f"{path}/{_DIRTY_DIR}")
-    dfs = dj.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if dfs.exists(dj):
-        dfs.delete(dj, True)
+    state.delete(spark, f"{path}/{_DIRTY_DIR}")
     _mark_dirty(spark, path, census=("cells",))
 
 
@@ -508,10 +505,7 @@ def delete_from_ivf_index(
     # left join below, inflating n_before/n_removed (the survivor
     # anti-join is idempotent either way)
     dels = deleted_ids.select(id_col).distinct()
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    codes_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    has_codes = codes_jp.getFileSystem(conf).exists(codes_jp)
+    has_codes = state.exists(spark, f"{path}/codes")
 
     def purge_codes() -> None:
         # IVFADC: the erased vectors' derived PQ codes go with them —
@@ -647,16 +641,9 @@ def _sync_codes_to_cells(
                 int(r.cell)
                 for r in deduped.select("cell").distinct().collect()
             }
-            jvm_ = spark.sparkContext._jvm
-            conf_ = spark.sparkContext._jsc.hadoopConfiguration()
             for c in cl:
                 if c not in kept:
-                    p = jvm_.org.apache.hadoop.fs.Path(
-                        f"{path}/cells/cell={c}"
-                    )
-                    fs_ = p.getFileSystem(conf_)
-                    if fs_.exists(p):
-                        fs_.delete(p, True)
+                    state.delete(spark, f"{path}/cells/cell={c}")
         # the checkpointed dedup IS the post-repair cells view: reuse it
         # below instead of a second scan+window over the same dirs
         # (review r12)
@@ -718,14 +705,9 @@ def _sync_codes_to_cells(
     # a listed dir whose every code row relocated keeps its stale files
     # under dynamic overwrite (no rows -> no partition replaced): drop it
     present = {int(r.cell) for r in relabeled.select("cell").distinct().collect()}
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     for c in cl:
         if c not in present:
-            p = jvm.org.apache.hadoop.fs.Path(f"{path}/codes/cell={c}")
-            fs = p.getFileSystem(conf)
-            if fs.exists(p):
-                fs.delete(p, True)
+            state.delete(spark, f"{path}/codes/cell={c}")
     _mark_dirty(
         spark, path,
         leaves=[f"codes/cell={c}" for c in cl if c in present]
@@ -780,15 +762,15 @@ def split_cells(
     cells' codes against their new centroids instead — still bounded by
     the hot cells, the documented operational trade of residual
     encoding (RECALL.md round 12 measures when residual is worth it).
-    Crash safety is
-    write-ahead: ``codes/_split_pending.json`` records the affected
-    cell set BEFORE the cells rewrite and is removed after the codes
-    relocation; a pending manifest found on entry is repaired first
-    (re-sync the listed cells — idempotent), so the one torn window
-    (cells moved, codes not yet) lasts at most until the next split
-    call. Torn reads stay safe: a stale-labeled code row is still
-    scanned under its OLD cell, so an nprobe == k probe remains exact
-    and narrower probes degrade in recall only.
+    Crash safety is the package's write-ahead intent
+    (``state.intent``/``state.resume``): ``codes/_split_pending.json``
+    records the affected cell set BEFORE the cells rewrite and is
+    removed after the codes relocation; a pending record found on entry
+    is repaired first (re-sync the listed cells — idempotent), so the
+    one torn window (cells moved, codes not yet) lasts at most until
+    the next split call. Torn reads stay safe: a stale-labeled code
+    row is still scanned under its OLD cell, so an nprobe == k probe
+    remains exact and narrower probes degrade in recall only.
 
     Split children get centroids recomputed as member means, so the
     local quantizer rule (member -> nearest of the two children) holds;
@@ -799,14 +781,10 @@ def split_cells(
     cell assignments predate the split — fold_appends first) or a
     pending IVFADC append txn (roll it forward/back via
     append_to_ivfpq_index first)."""
-    import json
-
     import pandas as pd
 
-    from .compaction import _read_fully, _write_atomic, recover_pending_under
+    from .compaction import recover_pending_under
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     # a torn codes-only refit is finished first (roll forward/back):
     # the split's codes relocation below must act on ONE generation of
     # the codes tier, not a half-swapped mix
@@ -819,36 +797,28 @@ def split_cells(
     recover_pending_under(spark, f"{path}/cells")
     recover_pending_under(spark, f"{path}/codes")
 
-    def _exists_nonempty(sub: str) -> bool:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        fs = p.getFileSystem(conf)
-        return fs.exists(p) and bool(list(fs.listStatus(p)))
-
-    if _exists_nonempty("appends"):
+    if state.ls(spark, f"{path}/appends"):
         raise ValueError(
             f"{path} has pending append epochs: fold_appends before "
             "split_cells (append rows' cell assignments predate the split)"
         )
-    if _exists_nonempty("append_txn"):
+    if state.ls(spark, f"{path}/append_txn"):
         raise ValueError(
             f"{path} has a pending IVFADC append txn: retry the batch "
             "(append_to_ivfpq_index rolls the torn attempt back and "
             "re-appends) before splitting cells"
         )
-    has_codes = _exists_nonempty("codes")
-    codes_root = jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    manifest_jp = jvm.org.apache.hadoop.fs.Path(codes_root, _SPLIT_MANIFEST)
+    has_codes = bool(state.ls(spark, f"{path}/codes"))
     if has_codes:
-        mfs = manifest_jp.getFileSystem(conf)
-        if mfs.exists(manifest_jp):
-            pending = json.loads(
-                _read_fully(spark, mfs, manifest_jp).decode("utf-8")
-            )
-            _sync_codes_to_cells(
+        state.resume(
+            spark,
+            f"{path}/codes",
+            _SPLIT_MANIFEST,
+            lambda pending: _sync_codes_to_cells(
                 spark, path, pending["affected_cells"], id_col=id_col,
                 repair_cells=True, vec_col=vec_col,
-            )
-            mfs.delete(manifest_jp, False)
+            ),
+        )
 
     cells = spark.read.parquet(f"{path}/cells").withColumn(
         "cell", F.col("cell").cast("int")
@@ -995,29 +965,29 @@ def split_cells(
     new_table.coalesce(1).write.mode("overwrite").parquet(
         f"{path}/centroids"
     )
+
+    def rewrite_cells() -> None:
+        (
+            staged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("cell")
+            .parquet(f"{path}/cells")
+        )
+
     if has_codes:
         # write-ahead: record the affected cell set before the cells
         # rewrite so a crash between the two tier rewrites is repaired
         # (re-synced from the cells tier) on the next call
-        mfs = manifest_jp.getFileSystem(conf)
-        _write_atomic(
-            jvm,
-            mfs,
-            codes_root,
-            _SPLIT_MANIFEST,
-            json.dumps({"affected_cells": affected_final}).encode("utf-8"),
-        )
-    (
-        staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell")
-        .parquet(f"{path}/cells")
-    )
-    if has_codes:
-        _sync_codes_to_cells(
-            spark, path, affected_final, id_col=id_col, vec_col=vec_col
-        )
-        mfs.delete(manifest_jp, False)
+        with state.intent(
+            spark, f"{path}/codes", _SPLIT_MANIFEST,
+            {"affected_cells": affected_final},
+        ):
+            rewrite_cells()
+            _sync_codes_to_cells(
+                spark, path, affected_final, id_col=id_col, vec_col=vec_col
+            )
+    else:
+        rewrite_cells()
     # the parent+child cells dirs were just rewritten (the codes dirs
     # were marked by _sync_codes_to_cells itself)
     _mark_dirty(
@@ -1401,22 +1371,18 @@ def _meta_listing(spark, path: str) -> tuple:
     subdirs — a driver-side Hadoop-FS listing, no Spark job. Every
     writer of those subdirs writes new uniquely named part files, so
     any rewrite changes the listing."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    out = []
-    for sub in _META_DIRS:
-        jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        fs = jp.getFileSystem(conf)
-        files = None
-        if fs.exists(jp):
-            files = tuple(
+    return tuple(
+        (
+            sub,
+            tuple(
                 sorted(
-                    (st.getPath().getName(), st.getLen(), st.getModificationTime())
-                    for st in fs.listStatus(jp)
+                    (e.name, e.size, e.mtime)
+                    for e in state.ls(spark, f"{path}/{sub}")
                 )
-            )
-        out.append((sub, files))
-    return tuple(out)
+            ),
+        )
+        for sub in _META_DIRS
+    )
 
 
 def _ivfpq_meta(spark, path: str) -> tuple[np.ndarray, np.ndarray, bool]:
@@ -1537,8 +1503,6 @@ def save_ivfpq_index(
     keep needs_refit tripped forever (a refit loop). All three are
     derived from the PREVIOUS index generation and die with it."""
     spark = corpus.sparkSession
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     for stale in (
         "append_txn",
         "append_commits",
@@ -1554,10 +1518,7 @@ def save_ivfpq_index(
         # cached-books reader treats missing-stamp as generation 0)
         _PQ_GEN,
     ):
-        jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{stale}")
-        fs = jp.getFileSystem(conf)
-        if fs.exists(jp):
-            fs.delete(jp, True)
+        state.delete(spark, f"{path}/{stale}")
     save_ivf_index(corpus, path, k=k, vec_col=vec_col, id_col=id_col)
     indexed = spark.read.parquet(f"{path}/cells").withColumn(
         "cell", F.col("cell").cast("int")
@@ -1655,14 +1616,9 @@ def _delete_ids_from_tier(
         .parquet(tier_path)
     )
     present = {int(r.cell) for r in staged.select("cell").distinct().collect()}
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     for c in affected:
         if c not in present:
-            p = jvm.org.apache.hadoop.fs.Path(f"{tier_path}/cell={int(c)}")
-            fs = p.getFileSystem(conf)
-            if fs.exists(p):
-                fs.delete(p, True)
+            state.delete(spark, f"{tier_path}/cell={int(c)}")
     root, tier = tier_path.rsplit("/", 1)
     _mark_dirty(
         spark, root,
@@ -1670,36 +1626,10 @@ def _delete_ids_from_tier(
     )
 
 
-def _batch_dirs(spark, root: str) -> list[tuple[int, str]]:
-    """(batch id, path) for every ``batch=K`` subdir of root, sorted
-    numerically — one FS listing, no Spark read (the dedup_stream
-    lister's shape, local to avoid an operators->streaming import)."""
-    jvm = spark.sparkContext._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(root)
-    fs = jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(jp):
-        return []
-    out = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            try:
-                out.append((int(name.split("=", 1)[1]), st.getPath().toString()))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
 def _parquet_data_exists(spark, path: str) -> bool:
     """True iff ``path`` holds a committed parquet DATA file (never bare
     directory existence — the meta-gate crash discipline)."""
-    jvm = spark.sparkContext._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(jp) and any(
-        st.getPath().getName().endswith(".parquet")
-        for st in fs.listStatus(jp)
-    )
+    return any(e.name.endswith(".parquet") for e in state.ls(spark, path))
 
 
 def _ivfpq_txn_meta(spark, path: str) -> int | None:
@@ -1730,18 +1660,14 @@ def _resolve_ivfpq_txn(spark, path: str, id_col: str = "vec_id") -> None:
     otherwise poison needs_refit forever) and the marker. Idempotent:
     a crash inside the rollback re-runs it (the marker is deleted
     last)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    txn_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/append_txn")
-    fs = txn_jp.getFileSystem(conf)
+    txn = f"{path}/append_txn"
     pending = _ivfpq_txn_meta(spark, path)
     if pending is None:
         # an ids-only dir (crash between the ids write and the meta
         # write) is provably pre-append — nothing hit the tiers; sweep
         # it so split_cells' any-file gate cannot wedge on it (review
         # r11)
-        if fs.exists(txn_jp):
-            fs.delete(txn_jp, True)
+        state.delete(spark, txn)
         return
     committed = (
         _ivfpq_commit_exists(spark, path, pending)
@@ -1749,7 +1675,7 @@ def _resolve_ivfpq_txn(spark, path: str, id_col: str = "vec_id") -> None:
         else read_record(spark, f"{path}/append_txn/committed") is not None
     )
     if committed:
-        fs.delete(txn_jp, True)
+        state.delete(spark, txn)
         return
     ids = spark.read.schema(f"{id_col} long").parquet(
         f"{path}/append_txn/ids"
@@ -1757,12 +1683,8 @@ def _resolve_ivfpq_txn(spark, path: str, id_col: str = "vec_id") -> None:
     _delete_ids_from_tier(spark, f"{path}/cells", ids, id_col=id_col)
     _delete_ids_from_tier(spark, f"{path}/codes", ids, id_col=id_col)
     if pending >= 0:
-        drift_jp = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/drift/batches/batch={int(pending)}"
-        )
-        if fs.exists(drift_jp):
-            fs.delete(drift_jp, True)
-    fs.delete(txn_jp, True)
+        state.delete(spark, f"{path}/drift/batches/batch={int(pending)}")
+    state.delete(spark, txn)
 
 
 def append_to_ivfpq_index(
@@ -1796,7 +1718,7 @@ def append_to_ivfpq_index(
     ``batch_id`` is given; else the txn-scoped ``append_txn/committed``)
     and THEN the marker is dropped. The marker, the commit record and
     the per-batch drift record (``drift/batches/batch=K``) are JSON
-    records (``compaction.write_record``: a Hadoop-FS temp write +
+    records (``state.write_record``: a Hadoop-FS temp write +
     rename, no Spark job); the commit record says what the append did —
     ``{"rows", "cells", "wall_s"}``: rows landed, the cells they landed
     in, and the append's wall seconds. Every entry first resolves a
@@ -1919,11 +1841,7 @@ def append_to_ivfpq_index(
         else f"{path}/append_commits/batch={int(batch_id)}",
         commit,
     )
-    jvm = spark.sparkContext._jvm
-    txn_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/append_txn")
-    fs = txn_jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(txn_jp):
-        fs.delete(txn_jp, True)
+    state.delete(spark, f"{path}/append_txn")
 
 
 def load_pq_codebooks(spark, path: str) -> np.ndarray:
@@ -1966,27 +1884,19 @@ def _mark_dirty(
     to the full census, never to a skipped leaf. Driver cost: one
     small-file write per maintenance/append event — the same order as
     the commit records these events already write."""
-    import json as _json
     import uuid
-
-    from .compaction import _write_atomic
 
     leaves = sorted({str(leaf) for leaf in leaves})
     census = sorted({str(c) for c in census})
     if not leaves and not census:
         return
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jdir = jvm.org.apache.hadoop.fs.Path(f"{path}/{_DIRTY_DIR}")
-    fs = jdir.getFileSystem(conf)
-    if not fs.exists(jdir):
-        fs.mkdirs(jdir)
-    _write_atomic(
-        jvm,
-        fs,
-        jdir,
-        f"{uuid.uuid4().hex}.json",
-        _json.dumps({"leaves": leaves, "census": census}).encode("utf-8"),
+    # through state.write_record itself: a dirty record is compaction
+    # bookkeeping, not one of the commit records this module writes
+    state.write_record(
+        spark,
+        f"{path}/{_DIRTY_DIR}",
+        {"leaves": leaves, "census": census},
+        name=f"{uuid.uuid4().hex}.json",
     )
 
 
@@ -2072,12 +1982,7 @@ def compact_ivf_index(
             "(retry the batch via append_to_ivfpq_index) before "
             "compacting"
         )
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    split_jp = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/codes/{_SPLIT_MANIFEST}"
-    )
-    if split_jp.getFileSystem(conf).exists(split_jp):
+    if state.exists(spark, f"{path}/codes/{_SPLIT_MANIFEST}"):
         raise ValueError(
             f"{path} has a pending split manifest: run split_cells to "
             "repair the codes tier before compacting"
@@ -2088,36 +1993,28 @@ def compact_ivf_index(
         for sub, pat in _TIER_PATTERNS:
             if sub not in tiers:
                 continue
-            root = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-            fs = root.getFileSystem(conf)
-            if not fs.exists(root):
+            root = f"{path}/{sub}"
+            if not state.exists(spark, root):
                 continue
             dirs = [
-                st.getPath().toString()
-                for st in fs.listStatus(root)
-                if st.isDirectory()
-                and st.getPath().getName().startswith(pat)
+                e.path
+                for e in state.ls(spark, root)
+                if e.is_dir and e.name.startswith(pat)
             ]
             out += dirs or ([f"{path}/{sub}"] if sub == "quarantine" else [])
         return out
 
-    import json as _json
-
-    from .compaction import _read_fully
-
     all_tiers = {sub for sub, _ in _TIER_PATTERNS}
-    dirty_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{_DIRTY_DIR}")
-    dfs = dirty_jp.getFileSystem(conf)
-    tracked = dfs.exists(dirty_jp)
+    dirty = f"{path}/{_DIRTY_DIR}"
+    tracked = state.exists(spark, dirty)
     consumed = []
     if tracked:
         # snapshot the record files now: records arriving later belong
         # to writes this pass does not cover and must survive it
         consumed = [
-            st.getPath()
-            for st in dfs.listStatus(dirty_jp)
-            if not st.isDirectory()
-            and not st.getPath().getName().startswith(".")
+            e.name
+            for e in state.ls(spark, dirty)
+            if not e.is_dir and not e.name.startswith(".")
         ]
     mode = "census"
     target_leaves: list[str] | None = None
@@ -2125,9 +2022,9 @@ def compact_ivf_index(
         rel_leaves: set[str] = set()
         census_tiers: set[str] = set()
         ok = True
-        for jp in consumed:
+        for name in consumed:
             try:
-                rec = _json.loads(_read_fully(spark, dfs, jp).decode("utf-8"))
+                rec = state.read_record(spark, dirty, name=name)
                 rel_leaves.update(str(x) for x in rec["leaves"])
                 census_tiers.update(str(x) for x in rec["census"])
             except Exception:
@@ -2139,10 +2036,9 @@ def compact_ivf_index(
             mode = "dirty"
             target_leaves = census(census_tiers & all_tiers)
             for rel in sorted(rel_leaves):
-                jp = jvm.org.apache.hadoop.fs.Path(f"{path}/{rel}")
                 # a recorded leaf a later fold/split/delete removed is
                 # simply no longer a candidate
-                if jp.getFileSystem(conf).exists(jp):
+                if state.exists(spark, f"{path}/{rel}"):
                     target_leaves.append(f"{path}/{rel}")
     if target_leaves is None:
         target_leaves = census(all_tiers)
@@ -2169,20 +2065,17 @@ def compact_ivf_index(
         ("drift/batches", keep_drift_batches),
         ("append_commits", keep_commit_records),
     ):
-        dirs = _batch_dirs(spark, f"{path}/{sub}")
+        dirs = list_batches(spark, f"{path}/{sub}")
         for _b, leaf in dirs[: -int(keep)]:
-            p = jvm.org.apache.hadoop.fs.Path(leaf)
-            p.getFileSystem(conf).delete(p, True)
+            state.delete(spark, leaf)
             out["pruned"] += 1
     # consume the covered dirty records LAST (a crash above re-examines,
     # never skips), and ensure the dirty dir exists so the next pass is
     # bounded — a census pass covered everything the missing dir could
     # not account for
-    for jp in consumed:
-        if dfs.exists(jp):
-            dfs.delete(jp, False)
-    if not dfs.exists(dirty_jp):
-        dfs.mkdirs(dirty_jp)
+    for name in consumed:
+        state.delete(spark, f"{dirty}/{name}")
+    state.mkdirs(spark, dirty)
     return out
 
 
@@ -2220,8 +2113,6 @@ def needs_refit(
     Returns {"baseline_qerr", "recent_qerr", "ratio", "needs_refit",
     "n_batches"} — ratio/recent are None (and needs_refit False) before
     the first keyed append."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     # READ API: no resolution of any kind (review r12 pass 2 — a
     # polling monitor must never mutate index state; its earlier
     # forward-roll raced the writer's own commit-time swap and could
@@ -2232,8 +2123,7 @@ def needs_refit(
     # new baseline with old records for ONE poll, repaired at the next
     # maintenance entry — a monitor tolerates one stale read, never a
     # destroyed index.
-    base_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/drift/baseline")
-    if not base_jp.getFileSystem(conf).exists(base_jp):
+    if not state.exists(spark, f"{path}/drift/baseline"):
         raise ValueError(
             f"{path} has no drift baseline (drift/baseline): the index "
             "predates the drift monitor — rebuild with save_ivfpq_index "
@@ -2255,7 +2145,7 @@ def needs_refit(
     # the selected batch dirs — a long-lived stream leaves one dir per
     # epoch and a full read-collect-sort would grow with its lifetime
     # (review r11); compact_ivf_index bounds the dir count itself
-    dirs = _batch_dirs(spark, f"{path}/drift/batches")
+    dirs = list_batches(spark, f"{path}/drift/batches")
     if recent_batches is not None:
         dirs = dirs[-int(recent_batches):]
     # a torn record (crash mid-write) reads as absent and pools nothing
@@ -2292,25 +2182,20 @@ def _resolve_refit(
     spark, path: str, mode: str = "writer", id_col: str = "vec_id"
 ) -> bool:
     """Finish (or refuse over) a torn codes-only PQ refit so the index
-    is consistent before anything else runs — the txn-resolution shape
-    of ``_resolve_ivfpq_txn`` applied to ``refit_pq_codebooks``'s
-    staged swap. Returns True iff a COMMITTED refit was rolled forward
-    here (the flag a cached-books caller can use to refresh; the
-    durable signal is the ``pq_gen.json`` generation stamp this
-    roll-forward writes). A COMMITTED refit (``_refit_commit.json``
-    present) rolls FORWARD in every mode: each staged artifact still
-    present replaces its final counterpart (delete + checked rename —
-    per-pair idempotent: a pair whose staging dir is gone was already
-    swapped), any code id the cells tier no longer holds is purged
-    (see below), the generation stamp is bumped, the old books'
-    per-batch drift records are dropped (they were measured against the
-    retired codebooks and would poison needs_refit against the new
-    baseline), and the manifest is removed last. A FAILED rename raises
-    with the manifest still in place (review r12 pass 2): ignoring it
-    would delete the manifest over an orphaned staging dir, which the
-    next resolve would classify as uncommitted and silently destroy —
-    an unrecoverable tier loss; raising keeps the state repairable by
-    the next entry.
+    is consistent before anything else runs. Returns True iff a
+    COMMITTED refit was rolled forward here (the flag a cached-books
+    caller can use to refresh; the durable signal is the ``pq_gen.json``
+    generation stamp the roll-forward writes). The commit is the
+    package's write-ahead intent: ``refit_pq_codebooks`` commits
+    ``_refit_commit.json`` through ``state.intent`` and rolls forward
+    inside it; a record still present is a committed refit that crashed
+    mid-swap, and ``state.resume`` finishes it through the same
+    ``_apply_refit`` (see there) in every mode, deleting the record
+    only after the roll-forward returns. A FAILED rename raises with
+    the record still in place (review r12 pass 2): dropping it would
+    leave an orphaned staging dir the next resolve would classify as
+    uncommitted and silently destroy — an unrecoverable tier loss;
+    raising keeps the state repairable by the next entry.
 
     SINGLE-WRITER DISCIPLINE (ADVICE r12): the writer-mode fence below
     is check-at-entry, not a lock — index mutators (refit, append,
@@ -2350,29 +2235,19 @@ def _resolve_refit(
     state; see its docstring for the transient-window semantics)."""
     if mode not in ("owner", "writer"):
         raise ValueError(f"unknown _resolve_refit mode {mode!r}")
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    manifest = jvm.org.apache.hadoop.fs.Path(f"{path}/{_REFIT_COMMIT}")
-    committed = fs.exists(manifest)
-    for staging, final in _REFIT_PAIRS:
-        sp = jvm.org.apache.hadoop.fs.Path(f"{path}/{staging}")
-        if not fs.exists(sp):
+    finished = state.resume(
+        spark,
+        path,
+        _REFIT_COMMIT,
+        lambda rec: _apply_refit(spark, path, rec, id_col=id_col),
+    )
+    if finished is not None:
+        return True
+    for staging, _final in _REFIT_PAIRS:
+        if not state.exists(spark, f"{path}/{staging}"):
             continue
-        if committed:
-            fp = jvm.org.apache.hadoop.fs.Path(f"{path}/{final}")
-            if fs.exists(fp):
-                fs.delete(fp, True)
-            if not fs.rename(sp, fp):
-                raise IOError(
-                    f"refit roll-forward could not rename {path}/"
-                    f"{staging} -> {path}/{final}; the commit manifest "
-                    "is left in place so the next maintenance entry "
-                    "can retry the swap"
-                )
-        elif mode == "owner":
-            fs.delete(sp, True)
+        if mode == "owner":
+            state.delete(spark, f"{path}/{staging}")
         else:
             raise ValueError(
                 f"{path} has uncommitted refit staging ({staging}): a "
@@ -2381,41 +2256,58 @@ def _resolve_refit(
                 "its own staging back and restages), or remove the "
                 "*_refit dirs to abandon it"
             )
-    if committed:
-        # RTBF orphan purge (ADVICE r12, see docstring): drop any code
-        # id the cells tier no longer holds — a delete that raced the
-        # refit's staging window erased it from cells, and the staged
-        # codes were encoded from the pre-delete snapshot
-        orphans = (
-            spark.read.parquet(f"{path}/codes")
-            .select(id_col)
-            .join(
-                spark.read.parquet(f"{path}/cells").select(id_col),
-                id_col,
-                "anti",
+    return False
+
+
+def _apply_refit(spark, path: str, rec: dict, id_col: str = "vec_id") -> None:
+    """Roll a committed codes-only refit FORWARD (idempotent, so a crash
+    anywhere inside re-runs it whole): each staged artifact still
+    present replaces its final counterpart (delete + checked rename —
+    per-pair idempotent: a pair whose staging dir is gone was already
+    swapped), any code id the cells tier no longer holds is purged, the
+    generation stamp is bumped to the record's ``gen``, and the old
+    books' per-batch drift records are dropped (they were measured
+    against the retired codebooks and would poison needs_refit against
+    the new baseline)."""
+    for staging, final in _REFIT_PAIRS:
+        sp, fp = f"{path}/{staging}", f"{path}/{final}"
+        if not state.exists(spark, sp):
+            continue
+        state.delete(spark, fp)
+        if not state.rename(spark, sp, fp):
+            raise IOError(
+                f"refit roll-forward could not rename {sp} -> {fp}; the "
+                "commit record is left in place so the next maintenance "
+                "entry can retry the swap"
             )
-            .localCheckpoint(eager=True)
+    # RTBF orphan purge (ADVICE r12, see _resolve_refit): drop any code
+    # id the cells tier no longer holds — a delete that raced the
+    # refit's staging window erased it from cells, and the staged codes
+    # were encoded from the pre-delete snapshot
+    orphans = (
+        spark.read.parquet(f"{path}/codes")
+        .select(id_col)
+        .join(
+            spark.read.parquet(f"{path}/cells").select(id_col),
+            id_col,
+            "anti",
         )
-        if orphans.count():
-            _delete_ids_from_tier(
-                spark, f"{path}/codes", orphans, id_col=id_col
-            )
-        # generation stamp BEFORE the manifest drop: a crash between
-        # them re-runs this block (idempotent — the gen rides the
-        # manifest, so the rewrite lands the same value)
-        try:
-            gen = int(read_record(spark, path, name=_REFIT_COMMIT)["gen"])
-        except (KeyError, ValueError):  # pre-generation-stamp manifest
-            gen = _pq_generation(spark, path) + 1
-        write_record(spark, path, {"gen": gen}, name=_PQ_GEN)
-        # the swapped-in codes tier is a fresh partitionBy write — its
-        # cell dirs join the compaction dirty set via a census record
-        _mark_dirty(spark, path, census=("codes",))
-        batches = jvm.org.apache.hadoop.fs.Path(f"{path}/drift/batches")
-        if fs.exists(batches):
-            fs.delete(batches, True)
-        fs.delete(manifest, False)
-    return committed
+        .localCheckpoint(eager=True)
+    )
+    if orphans.count():
+        _delete_ids_from_tier(spark, f"{path}/codes", orphans, id_col=id_col)
+    # the generation stamp lands before the record drop: a crash between
+    # them re-runs this function (idempotent — the gen rides the record,
+    # so the rewrite lands the same value)
+    try:
+        gen = int(rec["gen"])
+    except (KeyError, ValueError):  # pre-generation-stamp record
+        gen = _pq_generation(spark, path) + 1
+    write_record(spark, path, {"gen": gen}, name=_PQ_GEN)
+    # the swapped-in codes tier is a fresh partitionBy write — its cell
+    # dirs join the compaction dirty set via a census record
+    _mark_dirty(spark, path, census=("codes",))
+    state.delete(spark, f"{path}/drift/batches")
 
 
 def _qerr_frame(
@@ -2605,23 +2497,18 @@ def refit_pq_codebooks(
 
     from .compaction import recover_pending_under
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     # owner mode: the refit reclaims its OWN crashed staging (the refit
     # role is single-occupancy); every other entry refuses over it
     _resolve_refit(spark, path, mode="owner")
     _resolve_ivfpq_txn(spark, path, id_col=id_col)
     recover_pending_under(spark, f"{path}/cells")
     recover_pending_under(spark, f"{path}/codes")
-    split_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/codes/{_SPLIT_MANIFEST}")
-    if split_jp.getFileSystem(conf).exists(split_jp):
+    if state.exists(spark, f"{path}/codes/{_SPLIT_MANIFEST}"):
         raise ValueError(
             f"{path} has a pending split manifest: run split_cells to "
             "repair the codes tier before refitting its codebooks"
         )
-    app_jp = jvm.org.apache.hadoop.fs.Path(f"{path}/appends")
-    app_fs = app_jp.getFileSystem(conf)
-    if app_fs.exists(app_jp) and list(app_fs.listStatus(app_jp)):
+    if state.ls(spark, f"{path}/appends"):
         raise ValueError(
             f"{path} has a flat append tier: those rows never reached "
             "the codes tier — this index should ingest via "
@@ -2708,9 +2595,10 @@ def refit_pq_codebooks(
     )
 
     # commit point: from here the refit rolls FORWARD
-    write_record(
+    with state.intent(
         spark,
         path,
+        _REFIT_COMMIT,
         {
             "m": int(m),
             "pq_k": int(pq_k),
@@ -2720,9 +2608,8 @@ def refit_pq_codebooks(
             # cached the subcodebooks (ADVICE r12)
             "gen": _pq_generation(spark, path) + 1,
         },
-        name=_REFIT_COMMIT,
-    )
-    _resolve_refit(spark, path)
+    ) as rec:
+        _apply_refit(spark, path, rec, id_col=id_col)
     return {
         "m": int(m),
         "pq_k": int(pq_k),

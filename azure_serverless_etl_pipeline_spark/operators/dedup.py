@@ -37,7 +37,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions import dot, tokens, word_shingles
-from .compaction import read_record, write_record
+from ..state import read_record, write_record
 
 # Fixed seed for all signature hashing: deterministic across runs/engines.
 _SEED = 42
@@ -182,7 +182,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    method: str = "inverted",
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """All pairs with word-n-gram Jaccard >= threshold.
@@ -200,22 +199,13 @@ def ngram_jaccard_pairs(
     pipeline should not link. Unset (None) keeps the exact all-pairs
     semantics for the oracle.
 
-    method="inverted": inverted-index self-join + pair-count — the shingle
-    table is computed once and checkpointed (it feeds both join sides and
-    the size table; recomputing the regex/array pipeline 3x dominates
-    runtime otherwise). Intersection sizes come from the pair group-by,
-    so no per-pair array ops. With ``max_shingle_freq`` set, the pair-count
+    Plan: inverted-index self-join + pair-count — the shingle table is
+    computed once and checkpointed (it feeds both join sides and the size
+    table; recomputing the regex/array pipeline 3x dominates runtime
+    otherwise). Intersection sizes come from the pair group-by, so no
+    per-pair array ops. With ``max_shingle_freq`` set, the pair-count
     shortcut is invalid (dropped shingles would undercount n_common), so
     candidates switch to the exact-verify path instead.
-
-    method="prefix": PPJoin-style prefix filter — join only on each doc's
-    ``|S| - ceil(t*|S|) + 1`` globally-rarest shingles (zero false
-    negatives when uncapped), then verify candidates by array
-    intersection. Strictly better when shingle frequencies are skewed
-    (real corpora: stop-phrase shingles with million-row posting lists);
-    on uniform-frequency data the prune rate is ~0 and "inverted" wins.
-    The cap composes: prefix shingles above it are dropped before the
-    self-join.
 
     The multiply-read stage (the shingle table; capped, the
     frequency-tagged table) is staged with an eager localCheckpoint, so
@@ -223,33 +213,6 @@ def ngram_jaccard_pairs(
     """
     base = _shingle_base(df, text_col, id_col, n)
     sh = _explode_shingles(base, id_col)
-
-    if method == "prefix":
-        sh = sh.localCheckpoint(eager=True)
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        ranked = sh.join(freq, "shingle").withColumn(
-            "pos", F.row_number().over(W.partitionBy(id_col).orderBy("df", "shingle"))
-        )
-        join_input = ranked.join(sizes, id_col).filter(
-            F.col("pos") <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-        )
-        if max_shingle_freq is not None:
-            join_input = join_input.filter(F.col("df") <= max_shingle_freq)
-        join_input = join_input.select(id_col, "shingle")
-        a, b = join_input.alias("a"), join_input.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        return _verify_jaccard(cand, base, id_col, threshold)
 
     if max_shingle_freq is not None:
         # capped inverted index: bound every posting list, pair-count the

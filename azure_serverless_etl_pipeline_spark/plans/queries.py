@@ -31,6 +31,7 @@ from ..functions import weekday_mon0
 from ..operators import dedup, similarity, text
 from ..operators.timeseries import densify_daily, rolling_features
 from ..sources.catalog import load_table
+from ..state import read_record, write_record
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -2428,10 +2429,23 @@ def x97(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The on-disk format of every cached query state under spark-warehouse/
-# (layouts, and the JSON records of operators.compaction.write_record).
-# Change it whenever that format changes: every kind is then rebuilt once
-# instead of being read (or refused) by newer code.
-_STATE_FORMAT = "json-records"
+# (layouts, the JSON records of state.write_record, and the done record
+# of _build_once). Change it whenever that format changes: every kind is
+# then rebuilt once in a fresh directory instead of being read (or
+# refused) by newer code.
+_STATE_FORMAT = "built-records"
+_BUILT = "_built.json"
+
+
+def _build_once(
+    spark: SparkSession, state_dir: str, build: Callable[[], None]
+) -> None:
+    """Run ``build`` unless ``state_dir`` already holds its done record.
+    The record is written through ``state.write_record`` only after
+    ``build`` returns, so a build that failed runs again in full."""
+    if read_record(spark, state_dir, name=_BUILT) is None:
+        build()
+        write_record(spark, state_dir, {"format": _STATE_FORMAT}, name=_BUILT)
 
 
 def _state_dir(sf_dir: str, src_table: str, kind: str) -> str:
@@ -3776,21 +3790,20 @@ def x142(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves build-90 + append-10 == index-over-100 == truth. Cell
     assignment parity with the quantizer rule (euclidean argmin) and
     the append-touches-only-its-cells write are pytest-gated."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivf_append")
-    marker = os.path.join(idx, "_appended")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         ann_index.save_ivf_index(
             emb.filter(F.col("vec_id") % 10 != 7), idx, k=16
         )
         ann_index.append_to_ivf_index(
             emb.filter(F.col("vec_id") % 10 == 7), idx
         )
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     indexed, centroids = ann_index.load_ivf_index(spark, idx)
     out = ann_index.probe_ivf(
         indexed, emb.filter(F.col("vec_id") < 10), centroids, k=5, nprobe=16
@@ -3811,19 +3824,18 @@ def x143(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe == k is exact, so the oracle is brute-force cosine SQL over
     the surviving corpus — the driver hash proves the sliver rewrite
     left exactly the right vectors behind."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivf_rtbf")
-    marker = os.path.join(idx, "_deleted")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         ann_index.save_ivf_index(emb, idx, k=16)
         ann_index.delete_from_ivf_index(
             spark, idx, emb.filter(F.col("vec_id") % 17 == 5).select("vec_id")
         )
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     indexed, centroids = ann_index.load_ivf_index(spark, idx)
     queries_df = emb.filter(
         (F.col("vec_id") < 10) & (F.col("vec_id") % 17 != 5)
@@ -3850,15 +3862,13 @@ def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate surviving either re-delivery would occupy a top-k rank
     slot and break the hash. x142/x143 hash the batch append/delete
     paths; this hashes the exactly-once READER those folds feed."""
-    import os
-
     from ..operators import ann_index
     from ..streaming.vector_stream import append_batch, load_live_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivf_live")
-    marker = os.path.join(idx, "_streamed")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         ann_index.save_ivf_index(
             emb.filter(F.col("vec_id") % 10 < 7), idx, k=16
         )
@@ -3866,7 +3876,8 @@ def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_batch(spark, emb.filter(mod.isin(6, 7)), 0, idx)
         append_batch(spark, emb.filter(mod.isin(7, 8)), 1, idx)
         append_batch(spark, emb.filter(mod == 9), 2, idx)
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     live = load_live_index(spark, idx)
     out = ann_index.probe_ivf(
         live,
@@ -3926,14 +3937,12 @@ def x147(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy-maintenance escape for the append path's frozen-k drift
     (SCALE.md round-10 fold A/B measures the cost side); x125/x142/
     x145 hash build/append/live-read, this hashes the SPLIT."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivf_split")
-    marker = os.path.join(idx, "_split_done")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         ann_index.save_ivf_index(emb, idx, k=8)
         target = max(2, emb.count() // 16)
         for _ in range(8):
@@ -3944,7 +3953,8 @@ def x147(spark: SparkSession, sf_dir: str) -> DataFrame:
                 == 0
             ):
                 break
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     indexed, centroids = ann_index.load_ivf_index(spark, idx)
     out = ann_index.probe_ivf(
         indexed,
@@ -3974,14 +3984,12 @@ def x149(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash. The narrower-probe regime is pytest-pinned
     (test_split_cells_relocates_pq_codes: tiers agree per id,
     codes bit-identical through the split)."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivfpq_split")
-    marker = os.path.join(idx, "_split_done")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         ann_index.save_ivfpq_index(emb, idx, k=8, m=8, pq_k=16)
         target = max(2, emb.count() // 16)
         for _ in range(8):
@@ -3992,7 +4000,8 @@ def x149(spark: SparkSession, sf_dir: str) -> DataFrame:
                 == 0
             ):
                 break
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     out = ann_index.search_ivfpq(
         spark,
         idx,
@@ -4021,20 +4030,19 @@ def x150(spark: SparkSession, sf_dir: str) -> DataFrame:
     The recall-at-budget effect of refitting is RECALL.md's axis; the
     drift trigger/remedy loop is pytest-pinned
     (test_refit_pq_codebooks_is_codes_only_and_recovers_drift)."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivfpq_refit")
-    marker = os.path.join(idx, "_refit_done")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         base = emb.filter(F.col("vec_id") % 5 != 0)
         arriving = emb.filter(F.col("vec_id") % 5 == 0)
         ann_index.save_ivfpq_index(base, idx, k=16, m=8, pq_k=16)
         ann_index.append_to_ivfpq_index(arriving, idx, batch_id=0)
         ann_index.refit_pq_codebooks(spark, idx)
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     out = ann_index.search_ivfpq(
         spark,
         idx,
@@ -4065,21 +4073,20 @@ def x151(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean-qerr baseline is the free decision rule); the residual split
     re-encode is pytest-pinned
     (test_residual_split_reencodes_and_crash_repairs)."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivfpq_residual")
-    marker = os.path.join(idx, "_built_done")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         base = emb.filter(F.col("vec_id") % 5 != 0)
         arriving = emb.filter(F.col("vec_id") % 5 == 0)
         ann_index.save_ivfpq_index(
             base, idx, k=16, m=8, pq_k=16, residual=True
         )
         ann_index.append_to_ivfpq_index(arriving, idx, batch_id=0)
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     out = ann_index.search_ivfpq(
         spark,
         idx,
@@ -4113,14 +4120,12 @@ def x152(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dirty-mode report, torn-record census degrade) and the weighted
     fit's drift recovery are pytest-pinned; the 9%-mixture remedy is
     measured in SCALE.md round 13."""
-    import os
-
     from ..operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _state_dir(sf_dir, "embeddings", "ivfpq_compact_refit")
-    marker = os.path.join(idx, "_maint_done")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         base = emb.filter(F.col("vec_id") % 5 != 0)
         arriving = emb.filter(F.col("vec_id") % 5 == 0)
         ann_index.save_ivfpq_index(base, idx, k=16, m=8, pq_k=16)
@@ -4128,7 +4133,8 @@ def x152(spark: SparkSession, sf_dir: str) -> DataFrame:
         rep = ann_index.compact_ivf_index(spark, idx)
         assert rep["mode"] == "dirty", rep  # bounded discovery engaged
         ann_index.refit_pq_codebooks(spark, idx, weight_by_error=True)
-        open(marker, "w").close()
+
+    _build_once(spark, idx, build)
     out = ann_index.search_ivfpq(
         spark,
         idx,
@@ -4177,8 +4183,6 @@ def x148(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster map over corpus-prime — (old \\ updated) UNION updated —
     so the driver hash proves retraction, merge, and the untouched
     components' passthrough are all exact."""
-    import os
-
     from ..streaming.dedup_stream import (
         current_map,
         fold_batch,
@@ -4187,8 +4191,8 @@ def x148(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     state = _state_dir(sf_dir, "documents", "dedup_stream_upd")
-    marker = os.path.join(state, "_rebuilt")
-    if not os.path.exists(marker):
+
+    def build() -> None:
         fold_batch(spark, docs.filter(F.col("doc_id") % 2 == 0), 0, state)
         fold_batch(spark, docs.filter(F.col("doc_id") % 2 == 1), 1, state)
         merge_src = docs.select(
@@ -4214,7 +4218,8 @@ def x148(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         fold_batch(spark, updates, 2, state)
         rebuild_updated(spark, state)
-        open(marker, "w").close()
+
+    _build_once(spark, state, build)
     return current_map(spark, state)
 
 

@@ -72,42 +72,6 @@ def write_json_records(df: DataFrame, path: str, single_file: bool = False) -> N
     out.write.mode("overwrite").json(path)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """Small-file compaction for streaming sink outputs.
-
-    Per-micro-batch appends accumulate many small files (each batch of
-    each partition writes at least one), which at scale degrades scan
-    planning and NameNode/listing pressure. Rewrites the dataset into
-    ceil(total_bytes / target) files. Returns the new file count.
-    On Delta this is OPTIMIZE; for plain parquet it is a staged rewrite.
-    """
-    import os
-
-    df = spark.read.parquet(path)
-    local = path.removeprefix("file:")
-    if os.path.isdir(local):
-        total = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(local)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-    else:  # remote FS: estimate from rows (cloud deployments use the FS API)
-        total = df.count() * 64
-    n_files = max(1, -(-total // target_file_bytes))
-    staged = df.localCheckpoint(eager=True)
-    writer = staged.coalesce(n_files).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return n_files
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

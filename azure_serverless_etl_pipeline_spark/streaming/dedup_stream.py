@@ -15,7 +15,7 @@ subdirectories, so every write is an IDEMPOTENT overwrite keyed by the
 checkpointed batch id — a crash-rerun of batch k rewrites exactly
 batch k's artifacts. The small records (``meta/``, ``bloom/``,
 ``rebuild_txn/``, ``alloc_hw/``, ``epoch_map/epoch=E/``) are one JSON
-file per directory, committed by ``compaction.write_record`` (a
+file per directory, committed by ``state.write_record`` (a
 Hadoop-FS temp write + rename, no Spark job); a torn record reads as
 absent:
 
@@ -78,7 +78,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.compaction import read_record, write_record
+from .. import state
 from ..operators.dedup import (
     _pinned_buckets,
     _shingle_base,
@@ -90,6 +90,7 @@ from ..operators.dedup import (
     write_bucketed_df,
     write_bucketed_layer,
 )
+from ..state import list_batches, read_record, write_record
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -103,34 +104,9 @@ _POST_SCHEMA = (
 _DF_SCHEMA = "shingle string, df long, shingle_h long, batch int, bucket int"
 
 
-def _list_batches(spark: SparkSession, root: str) -> list[tuple[int, str]]:
-    """(batch_id, path) for every ``batch=K`` subdir of ``root``, sorted
-    NUMERICALLY — a lexicographic order would rank batch=10 before
-    batch=2 and hand ``prior_maps[-1]`` the wrong 'latest' map past 9
-    batches. Uses the Hadoop FileSystem API (as operators/compaction
-    does) so ``state_dir`` works on abfss/s3a/hdfs, not just local
-    paths — the docstring's 100 TB deployment story needs the listing
-    to run where the state lives."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    found = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            try:
-                b = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            found.append((b, st.getPath().toString()))
-    return sorted(found)
-
-
 def _batches_below(spark: SparkSession, root: str, k: int) -> list[str]:
     """Batch subdir paths with id < k, in batch order."""
-    return [p for b, p in _list_batches(spark, root) if b < k]
+    return [p for b, p in list_batches(spark, root) if b < k]
 
 
 _LAYER_ROOTS = (
@@ -155,17 +131,15 @@ def _max_allocated(spark: SparkSession, state_dir: str) -> int:
         (
             b
             for r in _LAYER_ROOTS
-            for b, _ in _list_batches(spark, f"{state_dir}/{r}")
+            for b, _ in list_batches(spark, f"{state_dir}/{r}")
         ),
         default=-1,
     )
-    efs, ejp = _fs_path(spark, f"{state_dir}/epoch_map")
-    if efs.exists(ejp):
-        for st in efs.listStatus(ejp):
-            if st.getPath().getName().startswith("epoch="):
-                pin = read_record(spark, st.getPath().toString())
-                if pin is not None:
-                    top = max(top, int(pin["batch"]))
+    for e in state.ls(spark, f"{state_dir}/epoch_map"):
+        if e.name.startswith("epoch="):
+            pin = read_record(spark, e.path)
+            if pin is not None:
+                top = max(top, int(pin["batch"]))
     return top
 
 
@@ -205,10 +179,9 @@ def _fold_id_for(
     pin = read_record(spark, f"{state_dir}/epoch_map/epoch={int(epoch_id)}")
     if pin is not None:
         return int(pin["batch"]), True
-    root_fs, root_jp = _fs_path(spark, f"{state_dir}/epoch_map")
-    no_entries = not root_fs.exists(root_jp) or not any(
-        st.getPath().getName().startswith("epoch=")
-        for st in root_fs.listStatus(root_jp)
+    no_entries = not any(
+        e.name.startswith("epoch=")
+        for e in state.ls(spark, f"{state_dir}/epoch_map")
     )
     if no_entries:
         # legacy replay: pre-allocator folds wrote their dirs AT the
@@ -219,8 +192,7 @@ def _fold_id_for(
         # epoch's own and re-open the overwrite collision for exactly
         # the states the allocator cannot protect yet (review r10,
         # second pass).
-        lf, lj = _fs_path(spark, f"{state_dir}/ids/batch={int(epoch_id)}")
-        if lf.exists(lj):
+        if state.exists(spark, f"{state_dir}/ids/batch={int(epoch_id)}"):
             return int(epoch_id), False
     return _max_allocated(spark, state_dir) + 1, False
 
@@ -249,7 +221,7 @@ def _read_tombstones(spark: SparkSession, state_dir: str) -> DataFrame | None:
     text for the id was appended at layer ``replaced_below`` by a
     rebuild. History is never rewritten (append-only layers, the 100 TB
     contract); readers mask instead."""
-    layers = _list_batches(spark, f"{state_dir}/tombstones")
+    layers = list_batches(spark, f"{state_dir}/tombstones")
     if not layers:
         return None
     return spark.read.schema(_TOMB_SCHEMA).parquet(*[p for _, p in layers])
@@ -306,7 +278,7 @@ def build_membership_bloom(
     dict, or None when no ids are registered yet."""
     from ..operators.dedup import _bloom_build_bitmap, _bloom_params
 
-    layers = _list_batches(spark, f"{state_dir}/ids")
+    layers = list_batches(spark, f"{state_dir}/ids")
     if not layers:
         return None
     covered_max = max(b for b, _ in layers)
@@ -421,10 +393,6 @@ def fold_batch(
     # whatever modulus the state ends up pinning, and a half-written
     # meta would make that agreement a guess.
     meta_path = f"{state_dir}/meta"
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(state_dir).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
     # the bucket modulus is a property of the STATE, not the call: the
     # first fold pins it in meta; later folds (and any caller passing a
     # different posting_buckets) follow the pinned value — mixed moduli
@@ -440,9 +408,7 @@ def fold_batch(
     # refuse loudly instead of corrupting the state. The message names
     # the modulus the backfill MUST use: the pinned one if meta exists,
     # else the value this fold would pin.
-    if prior_base and not fs.exists(
-        jvm.org.apache.hadoop.fs.Path(post_root)
-    ):
+    if prior_base and not state.exists(spark, post_root):
         raise ValueError(
             f"{state_dir} predates the bucketed layout (base/ layers "
             "without postings/): re-fold the state from the landing "
@@ -468,24 +434,14 @@ def fold_batch(
         # ingest path — thousands of calls per fold on object stores
         # after a day of per-minute batches)
         for root in (post_root, df_root):
-            jroot = jvm.org.apache.hadoop.fs.Path(root)
-            rfs = jroot.getFileSystem(spark._jsc.hadoopConfiguration())
-            if not rfs.exists(jroot):
-                continue
-            # the ROOT portion is a literal path, not a pattern: a
-            # state_dir containing glob metachars ({}, [], *) would
-            # otherwise rewrite the match and silently BYPASS this
-            # loud gate (review r10, second pass)
-            esc = "".join(
-                "\\" + c if c in "*?[]{}\\" else c for c in root
-            )
-            hits = rfs.globStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{esc}/batch=*/bucket=*")
-            )
-            for st in hits or []:
-                bucket = int(st.getPath().getName().split("=", 1)[1])
+            # the ROOT portion is a literal path, not a pattern
+            # (state.glob escapes it): a state_dir containing glob
+            # metachars ({}, [], *) would otherwise rewrite the match and
+            # silently BYPASS this loud gate (review r10, second pass)
+            for e in state.glob(spark, root, "batch=*/bucket=*"):
+                bucket = int(e.name.split("=", 1)[1])
                 if bucket >= posting_buckets:
-                    bpath = st.getPath().getParent().toString()
+                    bpath = e.path.rsplit("/", 1)[0]
                     raise ValueError(
                         f"{bpath} holds bucket={bucket} but the state "
                         f"pins posting_buckets={int(posting_buckets)} "
@@ -541,7 +497,7 @@ def fold_batch(
 
                 id_layers = [
                     (b, p)
-                    for b, p in _list_batches(spark, ids_root)
+                    for b, p in list_batches(spark, ids_root)
                     if b < batch_id
                 ]
                 covered = [
@@ -728,20 +684,16 @@ def compact_state(
         # one level deeper (batch=K/bucket=J)
         out: list[str] = []
         for sub in ("base", "ids", "map", "redelivered", "tombstones"):
-            out += [p for _b, p in _list_batches(spark, f"{state_dir}/{sub}")]
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
+            out += [p for _b, p in list_batches(spark, f"{state_dir}/{sub}")]
         for sub in ("df", "postings"):
-            for _b, path in _list_batches(spark, f"{state_dir}/{sub}"):
-                jp = jvm.org.apache.hadoop.fs.Path(path)
-                fs = jp.getFileSystem(conf)
-                buckets = [
-                    st.getPath().toString()
-                    for st in fs.listStatus(jp)
-                    if st.isDirectory()
-                    and st.getPath().getName().startswith("bucket=")
-                ]
-                out += buckets or [path]
+            # one glob per root finds every bucket leaf; a batch dir
+            # without bucket subdirs is its own leaf
+            root = f"{state_dir}/{sub}"
+            buckets = [e.path for e in state.glob(spark, root, "batch=*/bucket=*")]
+            bucketed = {p.rsplit("/", 1)[0] for p in buckets}
+            out += buckets + [
+                p for _b, p in list_batches(spark, root) if p not in bucketed
+            ]
         return out
 
     out = {"dirs": 0, "compacted": 0, "rewritten": 0}
@@ -759,12 +711,6 @@ def compact_state(
     bloom = build_membership_bloom(spark, state_dir, fpp=bloom_fpp)
     out["bloom_covered_max"] = -1 if bloom is None else bloom["covered_max"]
     return out
-
-
-def _fs_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    return jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
 def _rebuild_marker(spark: SparkSession, state_dir: str) -> int | None:
@@ -844,19 +790,14 @@ def rebuild_updated(
     stale_txn = _rebuild_marker(spark, state_dir)
     if stale_txn is not None:
         for root in ("base", "postings", "df", "map", "tombstones"):
-            fs, jp = _fs_path(
-                spark, f"{state_dir}/{root}/batch={stale_txn}"
-            )
-            if fs.exists(jp):
-                fs.delete(jp, True)
+            state.delete(spark, f"{state_dir}/{root}/batch={stale_txn}")
 
-    red_layers = _list_batches(spark, f"{state_dir}/redelivered")
+    red_layers = list_batches(spark, f"{state_dir}/redelivered")
     if not red_layers:
         # nothing to consume; clear a leftover marker (its txn is now
         # rolled back) and report the no-op
         if stale_txn is not None:
-            fs, jp = _fs_path(spark, f"{state_dir}/rebuild_txn")
-            fs.delete(jp, True)
+            state.delete(spark, f"{state_dir}/rebuild_txn")
         return {
             "updated": 0,
             "affected_clusters": 0,
@@ -1029,7 +970,7 @@ def rebuild_updated(
     affected = affected.distinct().localCheckpoint(eager=True)
 
     # ---- 5. close over old components; recompute member pairs ----
-    old_map_layers = _list_batches(spark, f"{state_dir}/map")
+    old_map_layers = list_batches(spark, f"{state_dir}/map")
     old_map = (
         spark.read.parquet(old_map_layers[-1][1]).localCheckpoint(eager=True)
         if old_map_layers
@@ -1155,11 +1096,9 @@ def rebuild_updated(
 
     # txn complete: clear the undo record FIRST (the committed layers
     # must never be rolled back), then consume the work list
-    fs, jp = _fs_path(spark, f"{state_dir}/rebuild_txn")
-    fs.delete(jp, True)
+    state.delete(spark, f"{state_dir}/rebuild_txn")
     for _b, p in red_layers:
-        fs2, jp2 = _fs_path(spark, p)
-        fs2.delete(jp2, True)
+        state.delete(spark, p)
     return {
         "updated": int(n_updated),
         "affected_clusters": int(n_aff),
@@ -1211,7 +1150,7 @@ def apply_tombstones(spark: SparkSession, state_dir: str) -> dict:
     n_ids = latest.count()
     rewritten = 0
     for root in ("base", "postings"):
-        for b, path in _list_batches(spark, f"{state_dir}/{root}"):
+        for b, path in list_batches(spark, f"{state_dir}/{root}"):
             dead_ids = latest.filter(F.col("__rb") > int(b)).select(
                 "doc_id"
             )
@@ -1247,8 +1186,7 @@ def apply_tombstones(spark: SparkSession, state_dir: str) -> dict:
                     .parquet(path)
                 )
             rewritten += 1
-    fs, jp = _fs_path(spark, f"{state_dir}/tombstones")
-    fs.delete(jp, True)
+    state.delete(spark, f"{state_dir}/tombstones")
     return {"tombstoned_ids": int(n_ids), "layers_rewritten": rewritten}
 
 
@@ -1304,7 +1242,7 @@ def start_dedup_stream(
 
 def current_map(spark: SparkSession, state_dir: str) -> DataFrame:
     """The latest folded cluster map."""
-    batches = _list_batches(spark, f"{state_dir}/map")
+    batches = list_batches(spark, f"{state_dir}/map")
     return spark.read.parquet(batches[-1][1])
 
 

@@ -27,10 +27,11 @@ Design (LSM-ish, two tiers):
 - ``fold_appends``: maintenance pass that merges the append tier into
   the cell-partitioned standing tier (dynamic partition overwrite of
   ONLY the affected cells, survivors staged first), then removes the
-  folded append dirs. Crash-safe via a write-ahead delete manifest
-  (the ``operators/compaction`` pattern): the manifest naming the
-  folded dirs is committed atomically BEFORE any deletion; a fold that
-  finds a pending manifest finishes those deletes first and replays
+  folded append dirs. Crash-safe through the package's write-ahead
+  intent (``state.intent``/``state.resume``): the
+  ``appends/_fold_pending.json`` record naming the folded dirs is
+  committed atomically BEFORE any deletion; a fold that finds a
+  pending record finishes those deletes first and replays
   idempotently.
 
 Scale shape: the recurring per-batch cost is one map-side projection
@@ -42,29 +43,16 @@ cadence) append tier.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators.compaction import (
-    _read_fully,
-    _write_atomic,
-    read_record,
-    write_record,
-)
-from .dedup_stream import _list_batches
+from .. import state
+from ..state import list_batches, read_record, write_record
 
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
 _FOLD_MANIFEST = "_fold_pending.json"
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
 _EPOCH_BASE = "__ivfpq_epoch_base__.json"
@@ -80,12 +68,10 @@ def _epoch_base(spark: SparkSession, index_dir: str, checkpoint_dir: str) -> int
     the SAME key and the commit-record no-op stays exact. Spark's
     checkpoint machinery only reads its own known subpaths (metadata/
     offsets/commits/sources/state), so the extra file is inert."""
-    from .dedup_stream import _list_batches
-
     pin = read_record(spark, checkpoint_dir, name=_EPOCH_BASE)
     if pin is not None:
         return int(pin["base"])
-    committed = _list_batches(spark, f"{index_dir}/append_commits")
+    committed = list_batches(spark, f"{index_dir}/append_commits")
     base = 1 + max((b for b, _ in committed), default=-1)
     write_record(spark, checkpoint_dir, {"base": int(base)}, name=_EPOCH_BASE)
     return int(base)
@@ -375,19 +361,16 @@ def start_vector_ingest_stream(
             spark, index_dir, threshold=float(drift_threshold),
             recent_batches=int(refit_check_every),
         )
-        jvm, drift_jp, fs = _fs(spark, f"{index_dir}/drift")
         payload = dict(verdict, epoch=int(epoch_id))
         write_record(
             spark, f"{index_dir}/drift", payload, name="last_check.json"
         )
-        alert_jp = jvm.org.apache.hadoop.fs.Path(drift_jp, _ALERT)
         if not verdict["needs_refit"]:
             # a PASSING check retires any standing alert (review r12):
             # the operator's out-of-band refit brought the ratio back
             # under threshold, and a stale alert.json would keep an
             # external controller re-triggering refits forever
-            if fs.exists(alert_jp):
-                fs.delete(alert_jp, False)
+            state.delete(spark, f"{index_dir}/drift/{_ALERT}")
             return
         if auto_refit:
             out = refit_pq_codebooks(
@@ -397,8 +380,7 @@ def start_vector_ingest_stream(
             # batch must encode against the NEW generation (the refit's
             # roll-forward bumped pq_gen, so the stamp compare refreshes)
             _refresh_books_if_stale(spark, index_dir, cache)
-            if fs.exists(alert_jp):
-                fs.delete(alert_jp, False)
+            state.delete(spark, f"{index_dir}/drift/{_ALERT}")
             logging.getLogger(__name__).info(
                 "drift ratio %.3f tripped threshold %.3f at epoch %d; "
                 "codes-only refit applied (baseline %.4g -> %.4g)",
@@ -516,7 +498,7 @@ def load_live_index(spark: SparkSession, index_dir: str) -> DataFrame:
     cells = spark.read.parquet(f"{index_dir}/cells").withColumn(
         "cell", F.col("cell").cast("int")
     )
-    batches = _list_batches(spark, f"{index_dir}/appends")
+    batches = list_batches(spark, f"{index_dir}/appends")
     if not batches:
         return cells
     appends = _appends_deduped(spark, index_dir, batches, cells.columns)
@@ -534,13 +516,14 @@ def fold_appends(spark: SparkSession, index_dir: str) -> dict:
     """Merge the append tier into the cell-partitioned standing tier.
 
     Order of operations (each step idempotent under replay):
-    1. finish any PENDING delete manifest from a prior crashed fold;
+    1. finish any PENDING delete record from a prior crashed fold;
     2. stage (affected standing cells ∪ appends), deduped by id, via
        an eager localCheckpoint (the rewrite overwrites directories
        this plan reads);
     3. dynamic-partition-overwrite ONLY the affected cells;
-    4. atomically commit a manifest naming the folded append dirs;
-    5. delete them; remove the manifest.
+    4. atomically commit a write-ahead record naming the folded append
+       dirs (``state.intent``);
+    5. delete them; remove the record.
     A crash before 4 leaves the appends in place — the committed cell
     rewrite already contains them, and ``load_live_index``'s id-dedup
     keeps reads exactly-once until the next fold's step 1/5 cleans up.
@@ -553,16 +536,15 @@ def fold_appends(spark: SparkSession, index_dir: str) -> dict:
     recover_pending_under(spark, f"{index_dir}/cells")
     recover_pending_under(spark, f"{index_dir}/appends")
 
-    jvm, approot, fs = _fs(spark, f"{index_dir}/appends")
-    manifest_path = jvm.org.apache.hadoop.fs.Path(approot, _FOLD_MANIFEST)
-    if fs.exists(manifest_path):
-        raw = _read_fully(spark, fs, manifest_path)
-        pending = json.loads(raw.decode("utf-8"))
-        for d in pending["folded_dirs"]:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-        fs.delete(manifest_path, False)
+    approot = f"{index_dir}/appends"
 
-    batches = _list_batches(spark, f"{index_dir}/appends")
+    def delete_folded(manifest: dict) -> None:
+        for d in manifest["folded_dirs"]:
+            state.delete(spark, d)
+
+    state.resume(spark, approot, _FOLD_MANIFEST, delete_folded)
+
+    batches = list_batches(spark, approot)
     if not batches:
         return {"folded_batches": 0, "affected_cells": 0}
     # an IVFADC index has no flat append tier: folding one INTO it would
@@ -570,8 +552,7 @@ def fold_appends(spark: SparkSession, index_dir: str) -> dict:
     # invisible to every ADC shortlist. Refuse while there is something
     # to fold (the empty no-op above keeps delete_from_live_index's
     # fold-first composition working on two-tier indexes).
-    _, codes_jp, codes_fs = _fs(spark, f"{index_dir}/codes")
-    if codes_fs.exists(codes_jp) and list(codes_fs.listStatus(codes_jp)):
+    if state.ls(spark, f"{index_dir}/codes"):
         raise ValueError(
             f"{index_dir} carries a PQ codes tier: the flat append tier "
             "does not feed it — ingest with append_to_ivfpq_index (or "
@@ -631,12 +612,7 @@ def fold_appends(spark: SparkSession, index_dir: str) -> dict:
     present = {r.cell for r in merged.select("cell").distinct().collect()}
     for c in affected:
         if c not in present:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{index_dir}/cells/cell={int(c)}"
-                ),
-                True,
-            )
+            state.delete(spark, f"{index_dir}/cells/cell={int(c)}")
     from ..operators.ann_index import _mark_dirty
 
     # the affected cell dirs were just rewritten (multi-file dynamic
@@ -648,13 +624,9 @@ def fold_appends(spark: SparkSession, index_dir: str) -> dict:
         index_dir,
         leaves=[f"cells/cell={int(c)}" for c in affected if c in present],
     )
-    payload = json.dumps(
-        {"folded_dirs": [p for _, p in batches]}
-    ).encode("utf-8")
-    _write_atomic(jvm, fs, approot, _FOLD_MANIFEST, payload)
-    for _, p in batches:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
-    fs.delete(manifest_path, False)
+    manifest = {"folded_dirs": [p for _, p in batches]}
+    with state.intent(spark, approot, _FOLD_MANIFEST, manifest):
+        delete_folded(manifest)
     return {"folded_batches": len(batches), "affected_cells": len(affected)}
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from azure_serverless_etl_pipeline_spark.operators.compaction import write_record
+from azure_serverless_etl_pipeline_spark.state import write_record
 from tests.conftest import SF_ORACLE
 
 
@@ -997,9 +997,7 @@ def test_warm_ivfpq_append_records_launch_no_jobs(
     commit record says what the append did: its rows, the cells they
     landed in and its wall seconds."""
     from azure_serverless_etl_pipeline_spark.operators import ann_index as A
-    from azure_serverless_etl_pipeline_spark.operators.compaction import (
-        read_record,
-    )
+    from azure_serverless_etl_pipeline_spark.state import read_record
     from tests.conftest import record_jobs, run_in_job_group
 
     idx = str(tmp_path_factory.mktemp("ivfpq_records") / "index")
@@ -1778,6 +1776,7 @@ def test_split_recovers_torn_compaction_before_rewriting(
     finish that recovery BEFORE rewriting, or the 2-means would bake
     the duplicates in and the dynamic overwrite would wipe the
     manifest."""
+    from azure_serverless_etl_pipeline_spark import state
     from azure_serverless_etl_pipeline_spark.operators import compaction
     from azure_serverless_etl_pipeline_spark.operators.ann_index import (
         compact_ivf_index,
@@ -1797,18 +1796,16 @@ def test_split_recovers_torn_compaction_before_rewriting(
     real_apply = compaction._apply_manifest
     calls = {"n": 0}
 
-    def boom(jvm, fs, jdir, manifest):
+    def boom(spark_, manifest):
         calls["n"] += 1
         if calls["n"] == 1:
             # crash MID-commit: staged compacted files moved in, the
             # original files' deletes never run — both copies visible
             for src, dest in manifest["moves"]:
-                sp = compaction._jp(jvm, src)
-                dp = compaction._jp(jvm, dest)
-                if not fs.exists(dp) and fs.exists(sp):
-                    fs.rename(sp, dp)
+                if not state.exists(spark_, dest) and state.exists(spark_, src):
+                    state.rename(spark_, src, dest)
             raise RuntimeError("injected crash mid-compaction commit")
-        return real_apply(jvm, fs, jdir, manifest)
+        return real_apply(spark_, manifest)
 
     monkeypatch.setattr(compaction, "_apply_manifest", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
@@ -2445,8 +2442,8 @@ def test_refit_crash_rolls_back_then_forward(
     import glob as _g
     import os
 
+    from azure_serverless_etl_pipeline_spark import state
     from azure_serverless_etl_pipeline_spark.operators import ann_index
-    from azure_serverless_etl_pipeline_spark.operators import compaction
     from azure_serverless_etl_pipeline_spark.operators.similarity import (
         cosine_topk,
     )
@@ -2476,18 +2473,18 @@ def test_refit_crash_rolls_back_then_forward(
         )
 
     # --- crash 1: before the commit manifest (uncommitted -> rollback)
-    real_atomic = compaction._write_atomic
+    real_atomic = state._write_atomic
 
-    def boom_atomic(jvm, fs, jdir, name, payload):
+    def boom_atomic(spark_, path_, name, payload):
         if name == "_refit_commit.json":
             raise RuntimeError("injected crash before refit commit")
-        return real_atomic(jvm, fs, jdir, name, payload)
+        return real_atomic(spark_, path_, name, payload)
 
-    monkeypatch.setattr(compaction, "_write_atomic", boom_atomic)
+    monkeypatch.setattr(state, "_write_atomic", boom_atomic)
     old_books = ann_index.load_pq_codebooks(spark, idx)
     with pytest.raises(RuntimeError, match="before refit commit"):
         ann_index.refit_pq_codebooks(spark, idx)
-    monkeypatch.setattr(compaction, "_write_atomic", real_atomic)
+    monkeypatch.setattr(state, "_write_atomic", real_atomic)
     assert os.path.exists(f"{idx}/codes_refit")
     assert not os.path.exists(f"{idx}/_refit_commit.json")
     assert probe().equals(want[["query_id", "neighbor_id", "rank", "cos_sim"]])
@@ -2506,19 +2503,17 @@ def test_refit_crash_rolls_back_then_forward(
     assert (ann_index.load_pq_codebooks(spark, idx) == old_books).all()
 
     # --- crash 2: after the manifest, before the swap (-> roll forward)
-    calls = {"n": 0}
-    real_resolve = ann_index._resolve_refit
+    real_apply = ann_index._apply_refit
 
-    def boom_resolve(spark_, path_, mode="writer"):
-        calls["n"] += 1
-        if calls["n"] >= 2 and os.path.exists(f"{path_}/_refit_commit.json"):
+    def boom_apply(spark_, path_, rec, id_col="vec_id"):
+        if os.path.exists(f"{path_}/_refit_commit.json"):
             raise RuntimeError("injected crash before refit swap")
-        return real_resolve(spark_, path_, mode=mode)
+        return real_apply(spark_, path_, rec, id_col=id_col)
 
-    monkeypatch.setattr(ann_index, "_resolve_refit", boom_resolve)
+    monkeypatch.setattr(ann_index, "_apply_refit", boom_apply)
     with pytest.raises(RuntimeError, match="before refit swap"):
         ann_index.refit_pq_codebooks(spark, idx)
-    monkeypatch.setattr(ann_index, "_resolve_refit", real_resolve)
+    monkeypatch.setattr(ann_index, "_apply_refit", real_apply)
     assert os.path.exists(f"{idx}/_refit_commit.json")
     assert os.path.exists(f"{idx}/codes_refit")
     # committed-but-unswapped: reads still exact at the full probe

@@ -103,26 +103,6 @@ def test_pretrained_model_scoring_matches_online(spark):
     assert (a["anomaly"] == b["anomaly"]).all()
 
 
-def test_compact_parquet(spark, tmp_path):
-    from azure_serverless_etl_pipeline_spark.sources import load_table
-    from azure_serverless_etl_pipeline_spark.sources.writers import compact_parquet
-
-    out = str(tmp_path / "frag")
-    ev = load_table(spark, SF_ORACLE, "events")
-    # simulate streaming fragmentation: 20 tiny appends
-    for i in range(20):
-        ev.filter(f"event_id % 20 = {i}").write.mode("append").parquet(out)
-    import glob
-
-    before = len(glob.glob(out + "/*.parquet"))
-    n_rows = spark.read.parquet(out).count()
-    compact_parquet(spark, out, target_file_bytes=1 << 30)
-    after = len(glob.glob(out + "/*.parquet"))
-    assert before >= 20
-    assert after < before
-    assert spark.read.parquet(out).count() == n_rows  # lossless
-
-
 def test_m01_scoring_through_serialized_artifact(spark, tmp_path):
     """The full S-11/M-3 lifecycle against the m01 registry output: fit ->
     save to disk -> reload through the loader (dict-unwrap convention) ->

@@ -137,7 +137,7 @@ def test_compact_sweeps_uncommitted_staging(spark, fragmented):
 def test_record_round_trip(spark, tmp_path):
     """A record reads back as written; a rewrite replaces it; a named
     record sits beside the default one; the directory holds no temp."""
-    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+    from azure_serverless_etl_pipeline_spark.state import (
         read_record,
         write_record,
     )
@@ -158,7 +158,7 @@ def test_record_crash_windows_read_as_absent(spark, tmp_path):
     written": a temp file with no record yet, and a rewrite that deleted
     the old record but did not rename the new one into place. The next
     write commits over the debris."""
-    from azure_serverless_etl_pipeline_spark.operators.compaction import (
+    from azure_serverless_etl_pipeline_spark.state import (
         _RECORD,
         read_record,
         write_record,
@@ -186,9 +186,7 @@ def test_record_crash_windows_read_as_absent(spark, tmp_path):
 def test_record_in_old_parquet_format_raises(spark, tmp_path):
     """A one-row parquet record (the format records had before) is not
     read as "no record": that would silently drop a pending txn."""
-    from azure_serverless_etl_pipeline_spark.operators.compaction import (
-        read_record,
-    )
+    from azure_serverless_etl_pipeline_spark.state import read_record
 
     rec_dir = str(tmp_path / "append_txn" / "meta")
     spark.createDataFrame([(7,)], "batch long").coalesce(1).write.parquet(rec_dir)
@@ -196,22 +194,18 @@ def test_record_in_old_parquet_format_raises(spark, tmp_path):
         read_record(spark, rec_dir)
 
 
-def test_write_atomic_failed_rename_raises(spark, tmp_path):
+def test_write_atomic_failed_rename_raises(spark, tmp_path, monkeypatch):
     """A rename that fails must not drop the file silently: on the local
     file system a destination whose parent is a file raises, and a file
     system that reports the failure by returning False (the HDFS
     contract) raises IOError naming both paths."""
-    from azure_serverless_etl_pipeline_spark.operators.compaction import (
-        _fs_for,
-        _write_atomic,
-    )
+    from azure_serverless_etl_pipeline_spark import state
 
     root = tmp_path / "root"
     root.mkdir()
     (root / "afile").write_text("x")
-    jvm, jdir, fs = _fs_for(spark, str(root))
     with pytest.raises(Exception):
-        _write_atomic(jvm, fs, jdir, "afile/rec.json", b"{}")
+        state._write_atomic(spark, str(root), "afile/rec.json", b"{}")
     assert (root / "afile").read_text() == "x"
 
     class RenameReturnsFalse:
@@ -224,6 +218,13 @@ def test_write_atomic_failed_rename_raises(spark, tmp_path):
         def rename(self, src, dst):
             return False
 
+    real_jpath = state._jpath
+
+    def refusing_fs(*args):
+        jp, fs = real_jpath(*args)
+        return jp, RenameReturnsFalse(fs)
+
+    monkeypatch.setattr(state, "_jpath", refusing_fs)
     with pytest.raises(IOError, match=r"\.rec\.json\.tmp -> .*/rec\.json"):
-        _write_atomic(jvm, RenameReturnsFalse(fs), jdir, "rec.json", b"{}")
+        state._write_atomic(spark, str(root), "rec.json", b"{}")
     assert not (root / "rec.json").exists()

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from azure_serverless_etl_pipeline_spark.operators.compaction import write_record
+from azure_serverless_etl_pipeline_spark.state import write_record
 
 
 def _truth(docs):

@@ -50,34 +50,22 @@ def test_jaccard_pairs_ground_truth(spark, docs):
     assert exact == 1.0
 
 
-def test_prefix_method_equals_inverted(spark, docs):
-    from azure_serverless_etl_pipeline_spark.operators.dedup import ngram_jaccard_pairs
-
-    inv = ngram_jaccard_pairs(docs, threshold=0.5, method="inverted").toPandas()
-    pre = ngram_jaccard_pairs(docs, threshold=0.5, method="prefix").toPandas()
-    key = ["id_a", "id_b"]
-    assert inv.sort_values(key, ignore_index=True).equals(
-        pre.sort_values(key, ignore_index=True)
-    )
-
-
 def test_max_shingle_freq_noop_when_above_max_df(spark, docs):
-    """A cap above every shingle's document frequency must be a no-op for
-    both methods (this is the invariant that keeps x22/x31 oracle-exact
-    at test scales)."""
+    """A cap above every shingle's document frequency must be a no-op
+    (this is the invariant that keeps x22/x31 oracle-exact at test
+    scales)."""
     from azure_serverless_etl_pipeline_spark.operators.dedup import ngram_jaccard_pairs
 
     key = ["id_a", "id_b"]
     base = ngram_jaccard_pairs(docs, threshold=0.5).toPandas().sort_values(
         key, ignore_index=True
     )
-    for method in ("inverted", "prefix"):
-        capped = (
-            ngram_jaccard_pairs(docs, threshold=0.5, method=method, max_shingle_freq=50)
-            .toPandas()
-            .sort_values(key, ignore_index=True)
-        )
-        assert base.equals(capped), method
+    capped = (
+        ngram_jaccard_pairs(docs, threshold=0.5, max_shingle_freq=50)
+        .toPandas()
+        .sort_values(key, ignore_index=True)
+    )
+    assert base.equals(capped)
 
 
 def test_max_shingle_freq_prunes_boilerplate(spark):
